@@ -158,9 +158,14 @@ object Ann {
           val c = centroids(l)
           var acc = 0.0; var i = 0
           while (i < dim) { acc += v(i).doubleValue * c(i); i += 1 }
-          val r = java.math.BigDecimal.valueOf(acc)
-            .setScale(6, java.math.RoundingMode.HALF_UP).doubleValue()
-          if (r > bestVal) { bestVal = r; bestIdx = l }
+          // Round passes NaN/Inf through; array_max ranks NaN above
+          // every other value and takes the first of equal maxima
+          val r = if (acc.isNaN || acc.isInfinite) acc
+            else java.math.BigDecimal.valueOf(acc)
+              .setScale(6, java.math.RoundingMode.HALF_UP).doubleValue()
+          if (r > bestVal || (r.isNaN && !bestVal.isNaN)) {
+            bestVal = r; bestIdx = l
+          }
           l += 1
         }
         (bestIdx, bestVal)

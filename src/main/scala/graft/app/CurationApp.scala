@@ -86,24 +86,22 @@ object CurationApp {
       evalDocs: Option[DataFrame], cfg: Config = Config()): DataFrame = {
     import spark.implicits._
     // Stats describe the run that PRODUCED each snapshot: when a stage is
-    // computed, its rows in/out are counted and sealed into the stage
-    // manifest; when a stage is RESUMED, they are read back from that
-    // manifest — never recomputed against the current (possibly
-    // different) input, which would fabricate audit numbers describing
-    // no run that ever happened.
+    // computed, its rows in/out are sealed into the stage manifest; when a
+    // stage is RESUMED, they are read back from that manifest — never
+    // recomputed against the current (possibly different) input, which
+    // would fabricate audit numbers describing no run that ever happened.
+    // A stage's rows_in is the previous stage's sealed rows; only the
+    // app's external input is counted.
     val counts = scala.collection.mutable.ArrayBuffer.empty[(String, Long, Long)]
-    def staged(name: String, in: => DataFrame)(f: DataFrame => DataFrame)
+    def sealedRows(stage: String, key: String): Long =
+      Snapshots.manifestField(workRoot, stage, key).map(_.toLong).getOrElse(0L)
+    def staged(name: String, in: DataFrame)(f: DataFrame => DataFrame)
         : DataFrame = {
-      val resumed = Snapshots.isComplete(workRoot, name)
-      lazy val inDf = in
+      val prev = counts.lastOption.map(_._1)
       val out = Snapshots.getOrCompute(spark, workRoot, name,
-        extra = Map("rows_in" -> inDf.count().toString))(f(inDf))
-      if (!resumed) Snapshots.writeLineage(spark, out, workRoot, name)
-      val rowsIn = Snapshots.manifestField(workRoot, name, "rows_in")
-        .map(_.toLong).getOrElse(0L)
-      val rowsOut = Snapshots.manifestField(workRoot, name, "rows")
-        .map(_.toLong).getOrElse(0L)
-      counts += ((name, rowsIn, rowsOut))
+        extra = Map("rows_in" -> prev.fold(in.count())(
+          sealedRows(_, "rows")).toString))(f(in))
+      counts += ((name, sealedRows(name, "rows_in"), sealedRows(name, "rows")))
       out
     }
 

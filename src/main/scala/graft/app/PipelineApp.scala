@@ -52,7 +52,6 @@ object PipelineApp {
       inputPath.map(spark.read.parquet(_))
         .getOrElse(PageGen.pages(spark, nEntities, seed))
     }
-    Snapshots.writeLineage(spark, pages, workRoot, "pages")
 
     // extracted is the stage every downstream id-join re-reads (payload
     // attachment in scorePairs, url re-attachment at clusters): commit it
@@ -64,7 +63,6 @@ object PipelineApp {
       "extracted", Seq("id"), nBuckets) {
       ERPipeline.extract(pages)
     }
-    Snapshots.writeLineage(spark, extracted, workRoot, "extracted")
 
     val blocked = Snapshots.getOrCompute(spark, workRoot, "blocked") {
       ERPipeline.block(extracted, cfg)
@@ -75,7 +73,6 @@ object PipelineApp {
       Snapshots.commit(spark, drops, workRoot, "cap_drops")
       sc
     }
-    Snapshots.writeLineage(spark, scored, workRoot, "scored")
 
     val clusters = Snapshots.getOrCompute(spark, workRoot, "clusters") {
       // reliable checkpoint() (not localCheckpoint) for CC round state:

@@ -185,7 +185,12 @@ object Blocking {
     * shuffled-hash chosen by Catalyst/AQE; AQE skew-join splits oversized
     * partitions). `dropDuplicates` over (left_id, right_id) is the standard
     * LSH pair-dedup and shuffles once on the pair id — unavoidable for
-    * exact dedup and linear in candidate count, not corpus size. */
+    * exact dedup and linear in candidate count, not corpus size. That
+    * shuffle is an explicit repartition to the session's shuffle-partition
+    * count: pair rows are slim, so AQE would coalesce an ordinary exchange
+    * to one partition and run the dedup and everything fused after it
+    * (payload joins, scoring) as a single task. The dedup aggregate reuses
+    * the repartitioning, so no second exchange appears (plan-asserted). */
   def candidatePairs(blocked: DataFrame, keyCol: String, idCol: String,
       payloadCols: Seq[String]): DataFrame = {
     val cols = (Seq(idCol) ++ payloadCols)
@@ -195,6 +200,8 @@ object Blocking {
       .toDF((keyCol +: cols.map("r_" + _)): _*)
     l.join(r, Seq(keyCol))
       .where(col("l_" + idCol) < col("r_" + idCol))
+      .repartition(blocked.sparkSession.sessionState.conf.numShufflePartitions,
+        col("l_" + idCol), col("r_" + idCol))
       .dropDuplicates("l_" + idCol, "r_" + idCol)
   }
 }

@@ -1,7 +1,10 @@
 package graft.io
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Observation, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.ColumnBridge
+import org.apache.parquet.hadoop.ParquetFileReader
+import org.apache.parquet.hadoop.util.HadoopInputFile
 import java.nio.file.{Files, Paths, Path}
 import scala.jdk.CollectionConverters._
 
@@ -16,11 +19,18 @@ import scala.jdk.CollectionConverters._
  *
  * Layout:  <root>/<stage>/           parquet data
  *          <root>/_snapshots/<stage>.json   manifest (written last = commit)
+ *
+ * A manifest is one flat JSON object: `stage`, `rows` (rows written),
+ * `wall_ms`, `schema` (simpleString of the written frame), `lineage`
+ * (`pid:rows` per Spark write partition, comma-separated; partitions that
+ * wrote no rows are absent) and the caller's `extra` fields.
+ *
+ * One commit is one Spark job: the write itself. `rows` is a
+ * `Dataset.observe` count riding the write plan, `lineage` is summed from
+ * the committed files' parquet footers on the driver, and the returned
+ * frame reads the files back under the known schema (no inference job).
  */
 object Snapshots {
-
-  case class Manifest(stage: String, rows: Long, schemaJson: String,
-      wallMs: Long, extra: Map[String, String])
 
   private def manifestPath(root: String, stage: String): Path =
     Paths.get(root, "_snapshots", s"$stage.json")
@@ -41,16 +51,70 @@ object Snapshots {
   def commit(spark: SparkSession, df: DataFrame, root: String, stage: String,
       partitionBy: Seq[String] = Nil, extra: Map[String, String] = Map.empty)
       : DataFrame = {
-    val t0 = System.nanoTime()
     val dataPath = s"$root/$stage"
-    val w = df.write.mode("overwrite")
-    (if (partitionBy.nonEmpty) w.partitionBy(partitionBy: _*) else w)
-      .parquet(dataPath)
-    val out = spark.read.parquet(dataPath)
-    writeManifest(root, stage, out.count(),
-      (System.nanoTime() - t0) / 1000000, df.schema.simpleString, extra)
+    seal(spark, df, root, stage, extra) { observed =>
+      val w = observed.write.mode("overwrite")
+      (if (partitionBy.nonEmpty) w.partitionBy(partitionBy: _*) else w)
+        .parquet(dataPath)
+      // file sources read every column back as nullable, as an inferred
+      // read of these files would
+      spark.read.schema(df.schema).parquet(dataPath)
+    }
+  }
+
+  /** Runs `write` over `df` with a row-count observation attached, then
+    * writes the manifest (the commit point). `write` must run exactly
+    * one action over the frame it is given and return the read-back. */
+  private def seal(spark: SparkSession, df: DataFrame, root: String,
+      stage: String, extra: Map[String, String])
+      (write: DataFrame => DataFrame): DataFrame = {
+    val t0 = System.nanoTime()
+    val obs = Observation()
+    val out = write(df.observe(obs, count(lit(1)).as("rows")))
+    val rows = ColumnBridge.metricsOrEmpty(obs).get("rows") match {
+      case Some(n: Long) => n
+      case other => throw new IllegalStateException(
+        s"snapshot '$stage': the write surfaced no observed row count ($other)")
+    }
+    val lineage = footerLineage(spark, s"$root/$stage")
+    require(lineage.map(_._2).sum == rows,
+      s"snapshot '$stage': parquet footers hold ${lineage.map(_._2).sum} " +
+        s"rows, the write observed $rows")
+    writeManifest(root, stage, rows, (System.nanoTime() - t0) / 1000000,
+      df.schema.simpleString, extra +
+        ("lineage" -> lineage.map { case (p, n) => s"$p:$n" }.mkString(",")))
     out
   }
+
+  /** Rows per Spark write partition, from the footers of the parquet files
+    * under `dataPath`. The partition id rides every data file name
+    * (`part-<pid>-<uuid>...`); a partition that wrote no rows is absent. */
+  private def footerLineage(spark: SparkSession, dataPath: String)
+      : Seq[(Int, Long)] = {
+    val conf = spark.sessionState.newHadoopConf()
+    val PartFile = """part-(\d+)-.*\.parquet""".r
+    val walk = Files.walk(Paths.get(dataPath))
+    val files = try walk.iterator().asScala.toList finally walk.close()
+    files.flatMap { f =>
+      f.getFileName.toString match {
+        case PartFile(pid) =>
+          val reader = ParquetFileReader.open(HadoopInputFile.fromPath(
+            new org.apache.hadoop.fs.Path(f.toUri), conf))
+          try Some(pid.toInt -> reader.getRecordCount) finally reader.close()
+        case _ => None
+      }
+    }.groupMapReduce(_._1)(_._2)(_ + _).toSeq.filter(_._2 > 0).sorted
+  }
+
+  /** Per-partition lineage sealed into a stage's manifest: (partition id,
+    * rows written), ascending by partition id. Empty if the stage is not
+    * committed. */
+  def lineage(root: String, stage: String): Seq[(Int, Long)] =
+    manifestField(root, stage, "lineage").toSeq
+      .flatMap(_.split(",")).filter(_.nonEmpty).map { e =>
+        val Array(p, n) = e.split(":")
+        (p.toInt, n.toLong)
+      }
 
   /** Manifest-last = commit point (shared by commit / commitBucketed). */
   private def writeManifest(root: String, stage: String, rows: Long,
@@ -93,21 +157,19 @@ object Snapshots {
       stage: String, bucketCols: Seq[String], nBuckets: Int,
       extra: Map[String, String] = Map.empty): DataFrame = {
     require(bucketCols.nonEmpty && nBuckets > 0)
-    val t0 = System.nanoTime()
     val table = tableName(stage)
     spark.sql(s"DROP TABLE IF EXISTS $table")
-    df.write.mode("overwrite")
-      .format("parquet")
-      .option("path", s"$root/$stage")
-      .bucketBy(nBuckets, bucketCols.head, bucketCols.tail: _*)
-      .sortBy(bucketCols.head, bucketCols.tail: _*)
-      .saveAsTable(table)
-    val out = spark.table(table)
-    writeManifest(root, stage, out.count(),
-      (System.nanoTime() - t0) / 1000000, df.schema.simpleString,
-      extra ++ Map("buckets" -> nBuckets.toString,
-        "bucket_cols" -> bucketCols.mkString(","), "table" -> table))
-    out
+    seal(spark, df, root, stage, extra ++ Map("buckets" -> nBuckets.toString,
+        "bucket_cols" -> bucketCols.mkString(","), "table" -> table)) {
+      observed =>
+        observed.write.mode("overwrite")
+          .format("parquet")
+          .option("path", s"$root/$stage")
+          .bucketBy(nBuckets, bucketCols.head, bucketCols.tail: _*)
+          .sortBy(bucketCols.head, bucketCols.tail: _*)
+          .saveAsTable(table)
+        spark.table(table)
+    }
   }
 
   /** Re-attach a bucketed snapshot written by `commitBucketed` in a
@@ -181,17 +243,6 @@ object Snapshots {
         case None => spark.read.parquet(s"$root/$stage")
       }
     } else commitBucketed(spark, compute, root, stage, bucketCols, nBuckets)
-
-  /** Per-partition lineage rows for a stage output: one row per Spark
-    * partition with row counts — appended to <root>/_lineage. */
-  def writeLineage(spark: SparkSession, df: DataFrame, root: String,
-      stage: String): Unit = {
-    import spark.implicits._
-    val lin = df.withColumn("_pid", spark_partition_id())
-      .groupBy($"_pid").agg(count(lit(1)).as("rows"))
-      .withColumn("stage", lit(stage))
-    lin.write.mode("append").parquet(s"$root/_lineage")
-  }
 
   def listSnapshots(root: String): Seq[String] = {
     val dir = Paths.get(root, "_snapshots")

@@ -165,6 +165,33 @@ class AnnSpec extends SparkSuite {
     assert(!plan.contains("Exchange"), plan)
   }
 
+  test("kmeansAssign: non-finite dots pass through as in the declarative twin") {
+    val cents = Array(Array(1.0, 0.5), Array(0.5, 1.0), Array(-1.0, -1.0))
+    val emb = Seq(
+      (1L, Array(Float.NaN, 1f)),                            // all dots NaN
+      (2L, Array(Float.PositiveInfinity, 1f)),               // Inf, Inf, -Inf
+      (3L, Array(Float.NegativeInfinity, 1f)),               // -Inf, -Inf, Inf
+      (4L, Array(Float.PositiveInfinity, Float.NegativeInfinity)), // NaN
+      (5L, Array(1f, 2f)))                                   // finite control
+      .toDF("vec_id", "embedding")
+    // the formulation kmeansAssign replaced: per-centroid left-fold dot,
+    // Spark round, first maximum under Spark's NaN-largest ordering
+    val dots = cents.map { c =>
+      s"round(aggregate(zip_with(embedding, array(${c.mkString("D, ")}D), " +
+        "(a, b) -> a * b), 0D, (acc, x) -> acc + x), 6)"
+    }.mkString("array(", ", ", ")")
+    val twin = emb.selectExpr("vec_id", s"$dots as d").selectExpr("vec_id",
+      "cast(array_position(d, array_max(d)) - 1 as long) as topic",
+      "array_max(d) as dot")
+    def rows(df: org.apache.spark.sql.DataFrame) = df.orderBy("vec_id")
+      .as[(Long, Long, Double)].collect().toSeq
+      .map { case (id, t, d) => (id, t, d.toString) }
+    val got = rows(Ann.kmeansAssign(emb, cents))
+    assert(got === rows(twin))
+    assert(got.map(_._3) ===
+      Seq("NaN", "Infinity", "Infinity", "NaN", "2.5"))
+  }
+
   test("signature is deterministic across partitionings") {
     val emb = fixture(20, 16)
     def sigs(parts: Int) = Ann.rhpSignature($"embedding", 10, 16)

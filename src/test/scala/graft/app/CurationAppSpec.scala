@@ -8,6 +8,8 @@ import org.apache.spark.sql.functions._
 class CurationAppSpec extends SparkSuite {
   import spark.implicits._
 
+  private val JobCeiling = 35
+
   // planted corpus: 200 clean docs, 1 short doc, 1 degenerate-repetition
   // doc, 3 exact copies of doc 0, a near-dup of doc 1, a doc carrying an
   // eval 8-gram, and PII on doc 2
@@ -34,9 +36,27 @@ class CurationAppSpec extends SparkSuite {
 
   test("end-to-end: every stage filters what it should; stats account for it") {
     val root = Files.createTempDirectory("graft-curation").toString
-    val stats = CurationApp.run(spark, root, corpus(), Some(evalSet()))
-      .as[(String, Long, Long, Long)].collect()
+    val input = corpus()
+    val (statsDf, jobs) = withJobCount(
+      CurationApp.run(spark, root, input, Some(evalSet())))
+    // job budget: one job counts the input, each stage commit is one write
+    // job, the rest is the stages' own work (33 jobs on this corpus)
+    assert(jobs <= JobCeiling, s"CurationApp.run ran $jobs Spark jobs")
+    val stats = statsDf.as[(String, Long, Long, Long)].collect()
       .map(r => r._1 -> r).toMap
+
+    // every stage's sealed numbers describe its committed files: rows is
+    // a re-read count, rows_in the previous stage's rows (the first
+    // stage's is the input's count), lineage partitions sum to rows
+    val stages = Seq("pii_clean", "quality", "exact_kept", "neardup_kept",
+      "decon_kept", "sample", "packed")
+    stages.zip(input.count() +: stages.map(stats(_)._3)).foreach {
+      case (s, rowsIn) =>
+        val rows = Snapshots.manifestField(root, s, "rows").map(_.toLong)
+        assert(rows === Some(spark.read.parquet(s"$root/$s").count()), s)
+        assert(stats(s)._2 === rowsIn, s)
+        assert(Snapshots.lineage(root, s).map(_._2).sum === stats(s)._3, s)
+    }
 
     assert(stats("pii_clean")._4 === 0L)           // row-preserving
     assert(stats("quality")._4 === 2L)             // short + repetitive

@@ -24,6 +24,14 @@ class PipelineAppSpec extends SparkSuite {
       Set("pages", "extracted", "blocked", "scored", "cap_drops",
         "clusters", "metrics"))
 
+    val resumedStages = Seq("pages", "extracted", "blocked", "scored",
+      "cap_drops")
+    val lineage1 = resumedStages.map(Snapshots.lineage(root, _))
+    resumedStages.zip(lineage1).foreach { case (s, lin) =>
+      assert(lin.map(_._2).sum.toString ===
+        Snapshots.manifestField(root, s, "rows").get, s)
+    }
+
     // crash: the two tail stages never committed
     Files.delete(Paths.get(root, "_snapshots", "clusters.json"))
     Files.delete(Paths.get(root, "_snapshots", "metrics.json"))
@@ -38,5 +46,7 @@ class PipelineAppSpec extends SparkSuite {
       .as[(String, Long)].collect().toMap
     assert(clusters2 === clusters1)
     assert(!clusters2.keySet.contains("https://poison/x"))
+    // lineage is sealed once, at commit: resuming never appends to it
+    assert(resumedStages.map(Snapshots.lineage(root, _)) === lineage1)
   }
 }

@@ -120,6 +120,39 @@ class PlanSpec extends SparkSuite {
     } finally spark.conf.set("spark.sql.adaptive.enabled", "true")
   }
 
+  test("ER pair dedup keeps every shuffle partition, with one exchange") {
+    // slim pair rows are small enough that AQE would coalesce an ordinary
+    // exchange to ONE partition, leaving payload joins and scoring to a
+    // single task; the explicit repartition is exempt from coalescing and
+    // the dedup aggregate reuses it
+    import org.apache.spark.sql.catalyst.plans.physical.HashPartitioning
+    import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+    import org.apache.spark.sql.execution.exchange.{REPARTITION_BY_NUM, ShuffleExchangeLike}
+    val cfg = graft.pipeline.ERPipeline.Config()
+    val ex = graft.pipeline.ERPipeline.extract(
+      graft.gen.PageGen.pages(spark, 80, seed = 2L)).localCheckpoint()
+    val blocked = graft.pipeline.ERPipeline.block(ex, cfg, Some(ex.count()))
+    val (scored, _) = graft.pipeline.ERPipeline.scorePairs(ex, blocked, cfg)
+    scored.collect() // finalize the adaptive plan
+    def exchanges(p: SparkPlan): Seq[ShuffleExchangeLike] = p match {
+      case a: AdaptiveSparkPlanExec => exchanges(a.executedPlan)
+      case q: QueryStageExec => exchanges(q.plan)
+      case e: ShuffleExchangeLike => e +: e.children.flatMap(exchanges)
+      case other => other.children.flatMap(exchanges)
+    }
+    val parts = spark.sessionState.conf.numShufflePartitions
+    val pairExchanges = exchanges(scored.queryExecution.executedPlan)
+      .filter(_.outputPartitioning match {
+        case h: HashPartitioning =>
+          h.expressions.flatMap(_.references.map(_.name)) == Seq("l_id", "r_id")
+        case _ => false
+      })
+    assert(pairExchanges.map(e => (e.shuffleOrigin, e.numPartitions)) ===
+      Seq((REPARTITION_BY_NUM, parts)), planString(scored))
+    assert(scored.queryExecution.executedPlan.execute().getNumPartitions ===
+      parts, planString(scored))
+  }
+
   test("anti-join stays a broadcast on a small build side") {
     val plan = planString(SparkEntry.queries("q5_anti_join")(spark, dir))
     assert(plan.contains("BroadcastHashJoin") &&
