@@ -30,8 +30,9 @@ import graft.io.Snapshots
  *
  * Scale shape: corpus prep runs ONCE (snapshot-resumed on rerun); the
  * per-batch work is the stream-static block-key join against the
- * block-capped slim corpus (persisted, so the static side is not
- * re-derived every micro-batch) plus watermark-bounded pair dedup.
+ * block-capped slim corpus (the slim rows are persisted, so the static
+ * side is not re-derived every micro-batch) plus watermark-bounded pair
+ * dedup.
  */
 object StreamingIngestApp {
 
@@ -72,17 +73,15 @@ object StreamingIngestApp {
     val blocked = Snapshots.getOrCompute(spark, workRoot, "blocked") {
       ERPipeline.block(extracted, cfg)
     }
-    // static side of the join: slim + hot-block-capped + PERSISTED (the
-    // static plan is re-evaluated per micro-batch otherwise); drops are
-    // committed next to the batch pipeline's cap_drops, never silent
-    val (capped, drops) = Streaming.capCorpusBlocks(blocked, cfg.pairCapPerBlock)
-    Snapshots.commit(spark, drops, workRoot, "cap_drops")
-    val cappedP = capped.persist()
-
+    // static side of the join: slim + PERSISTED (the static plan is
+    // re-evaluated per micro-batch otherwise); streamingMatches caps its
+    // hot blocks and the drops are committed next to the batch
+    // pipeline's cap_drops, never silent
+    val slim = blocked.select(col("block_key"), col("id")).persist()
     val stream = spark.readStream.schema(pageSchema).parquet(incomingDir)
-    val matches = Streaming.streamingMatches(stream, extracted,
-      cappedP, stopTokens = stop, cfg = cfg, lateness = lateness,
-      assumeCapped = true)
+    val (matches, drops) = Streaming.streamingMatches(stream, extracted,
+      slim, stopTokens = stop, cfg = cfg, lateness = lateness)
+    Snapshots.commit(spark, drops, workRoot, "cap_drops")
     matches.writeStream
       .format("parquet")
       .option("path", s"$workRoot/matches")

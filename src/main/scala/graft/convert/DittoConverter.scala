@@ -111,9 +111,6 @@ object DittoConverter {
     withId.select((col("id") +: col("label") +: sideCols): _*)
   }
 
-  def convertFile(spark: SparkSession, path: String, cfg: Config): DataFrame =
-    convertLines(spark, spark.read.text(path), cfg)
-
   /** computer.py:6-40 variant: title-only projection with the reference's
     * exact output header (id, label, title_left, title_right — note the
     * suffix order differs from the dcm-style left_/right_ prefixes) and

@@ -156,28 +156,22 @@ object Dedup {
     * by an id-equi-join that attaches shingles to verified candidates
     * only. A degenerate hot band (boilerplate) fans the whole corpus to
     * one increment row: `blockCap` bounds index rows per block with the
-    * drop count SURFACED via the returned stats table, mirroring the
-    * stream-static discipline (Streaming.capCorpusBlocks).
-    *
-    * Set `broadcastIncrement = false` when the "increment" is a backfill
-    * comparable in size to the corpus — the join then degrades to the
-    * ordinary shuffled band join of the batch path. */
+    * drop count SURFACED via the returned stats table (TopK's per-key
+    * cap, lowest corpus ids win), mirroring the stream-static discipline
+    * (Streaming.streamingMatches). */
   def incrementalMinhashPairsWithStats(
       increment: DataFrame, incId: Column, incText: Column,
       corpusIndex: DataFrame, corpus: DataFrame, corpusId: Column,
       corpusText: Column, bands: Int, rowsPerBand: Int,
-      jaccardFloor: Double, blockCap: Int = 10000,
-      broadcastIncrement: Boolean = true): (DataFrame, DataFrame) = {
+      jaccardFloor: Double, blockCap: Int = 10000): (DataFrame, DataFrame) = {
     val incBase = increment
       .select(incId.as("inc_id"), wordShingles(incText).as("inc_sh"))
-    val incBlocks0 = Blocking.minhashBlocks(
+    val incBlocks = broadcast(Blocking.minhashBlocks(
       incBase.select(col("inc_id"), col("inc_sh").as("tokens")),
-      col("tokens"), bands, rowsPerBand).select("block_key", "inc_id")
-    val incBlocks =
-      if (broadcastIncrement) broadcast(incBlocks0) else incBlocks0
-    val (cappedIndex, drops) = Blocking.capBlocks(
+      col("tokens"), bands, rowsPerBand).select("block_key", "inc_id"))
+    val (cappedIndex, drops) = graft.ops.TopK.perKeyWithDrops(
       corpusIndex.select(col("block_key"), col("id").as("corpus_id")),
-      "block_key", "corpus_id", blockCap)
+      col("block_key"), "block_key", Seq(col("corpus_id")), blockCap)
     val candidates = cappedIndex.join(incBlocks, Seq("block_key"))
       .select(col("inc_id"), col("corpus_id"))
       .dropDuplicates("inc_id", "corpus_id")
@@ -241,12 +235,6 @@ object Dedup {
       .where(col("hamming") <= maxHamming)
       .select(col("l_id"), col("r_id"), col("hamming"))
   }
-
-  /** n-gram Jaccard all-pairs above floor within LSH blocks (convenience
-    * wrapper with tighter LSH so recall targets high-sim pairs only). */
-  def ngramJaccardPairs(docs: DataFrame, idCol: Column, textCol: Column,
-      floor: Double = 0.8): DataFrame =
-    minhashPairs(docs, idCol, textCol, bands = 8, rowsPerBand = 4, floor)
 
   /** Near-dup CANONICALIZATION: transitive closure over similarity pairs
     * → one keeper (min id) per near-dup cluster, one row per document.

@@ -97,21 +97,4 @@ object Metrics {
   def readEvalLog(spark: org.apache.spark.sql.SparkSession, path: String): DataFrame =
     spark.read.option("header", true).option("sep", "\t")
       .schema(evalLogSchema).csv(path)
-
-  /** Pairwise metrics of a clustering against labeled pairs: pred = 1 iff
-    * both sides landed in the same cluster.
-    * @param labels   (left_id, right_id, label)
-    * @param clusters (id, component) */
-  def clusteringPrf1(labels: DataFrame, clusters: DataFrame): DataFrame = {
-    val cl = clusters.select(col("id"), col("component"))
-    val joined = labels
-      .join(cl.withColumnRenamed("id", "left_id")
-        .withColumnRenamed("component", "l_comp"), Seq("left_id"), "left")
-      .join(cl.withColumnRenamed("id", "right_id")
-        .withColumnRenamed("component", "r_comp"), Seq("right_id"), "left")
-      .withColumn("pred",
-        when(col("l_comp").isNotNull && col("l_comp") === col("r_comp"), 1)
-          .otherwise(0))
-    prf1(joined.withColumnRenamed("label", "gold"))
-  }
 }

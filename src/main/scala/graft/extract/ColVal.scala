@@ -2,7 +2,6 @@ package graft.extract
 
 import java.util.regex.Pattern
 import scala.collection.mutable
-import scala.jdk.CollectionConverters._
 
 /**
  * Ditto `COL <key> VAL <value>` parsing, per-row byte-identical to the
@@ -91,8 +90,4 @@ object ColVal {
   /** Render a key->value map back to a COL/VAL line (canonical form). */
   def render(fields: Seq[(String, String)]): String =
     fields.map { case (k, v) => s"COL $k VAL $v" }.mkString(" ")
-
-  // Java-friendly views (used by UDF registration sites).
-  def parseStrictJava(text: String): java.util.Map[String, String] =
-    parseStrict(text).asJava
 }

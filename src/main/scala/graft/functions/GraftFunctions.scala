@@ -150,12 +150,6 @@ object GraftFunctions {
         substring(digits, 7, 4))).otherwise(lit(null))
   }
 
-  /** Beer/process.py:99-101 rendering: +1-XXX-XXX-XXXX. */
-  def phoneUsIntl(c: Column): Column = {
-    val p = phoneUs(c)
-    when(p.isNull, lit(null)).otherwise(concat(lit("+1-"), p))
-  }
-
   // ---------- R12: price rendering "USD X.XX" (iTunes/process.py:100-104) -
   def priceUsd(c: Column): Column = {
     val p = priceParse(c)

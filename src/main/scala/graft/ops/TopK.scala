@@ -5,27 +5,20 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 /**
- * Skew-aware per-key top-k — the crawl-budget operator: keep at most `k`
- * rows per key (host), preferring rows by an explicit deterministic
- * ordering (quality score, recency, ...).
+ * Skew-aware per-key top-k — the crawl-budget operator and the block cap:
+ * keep at most `k` rows per key (host, block), preferring rows by an
+ * explicit deterministic ordering (quality score, recency, lowest id).
  *
  * A naive `row_number().over(partitionBy(key))` sorts EVERY key's rows,
  * and a single mega-host (every web crawl has one) serializes into one
- * task's sort. [[perKeyWithDrops]] is the ONE audited implementation of
- * the hot/cold split (`Blocking.capBlocks` delegates here): a slim
- * aggregation finds the over-budget keys and counts them eagerly, then
+ * task's sort. [[perKeyWithDrops]] takes the over-budget keys from
+ * [[HotKeys]] (one bounded collect), then
  *
  *  - 0 hot keys (the common case): input passes through untouched;
  *  - ≤ `maxHotKeysBroadcast`: cold rows stream through a broadcast
  *    anti-join untouched; only hot-key rows pay the window sort;
- *  - more (over-budget keys are data-dependent, not few): broadcasting
- *    would collect an unbounded key set to the driver, so fall back to
- *    the window-over-everything plan — slower but bounded.
- *
- * Joins are null-SAFE (`<=>`): groupBy counts null keys as one group, so
- * a hot null key (crawl rows with no parsed host are common) must route
- * to the window branch too — a plain equi-join would silently pass every
- * null-key row through uncapped.
+ *  - more: fall back to the window-over-everything plan — slower but
+ *    bounded.
  *
  * Ordering must be total and deterministic (break ties on a unique key)
  * or the kept set is nondeterministic under retries.
@@ -34,7 +27,8 @@ object TopK {
 
   /** Core: returns (kept, drops) where drops is the small metrics table
     * (keyName, n_total, n_dropped), one row per truncated key — capping
-    * must never be silent.
+    * must never be silent. On the broadcast path drops is the collected
+    * local relation (no further job).
     * @param keyName  output name for the key column; `df` may already
     *                 contain it holding the same values (pass-through)
     *                 but must not hold a DIFFERENT column under that name
@@ -44,27 +38,25 @@ object TopK {
       : (DataFrame, DataFrame) = {
     require(k > 0, "k must be positive")
     val keyed = df.withColumn(keyName, key)
-    val sizes = keyed.groupBy(col(keyName)).agg(count(lit(1)).as("n_total"))
-      .where(col("n_total") > k)
-    val drops = sizes.withColumn("n_dropped", col("n_total") - k)
     val w = Window.partitionBy(col(keyName)).orderBy(orderBy: _*)
-    // limit(max+1).count(): decides the branch without counting past the
-    // threshold; re-running the slim agg in the kept branch is cheaper
-    // than persisting it from library code
-    val nHot = sizes.limit(maxHotKeysBroadcast + 1).count()
-    val kept =
-      if (nHot == 0L) keyed
-      else if (nHot <= maxHotKeysBroadcast) {
-        val hotKeys = broadcast(sizes.select(col(keyName).as("_hk")))
-        val cold = keyed.join(hotKeys, col(keyName) <=> col("_hk"), "left_anti")
-        val hotCapped =
-          keyed.join(hotKeys, col(keyName) <=> col("_hk"), "left_semi")
-            .withColumn("_rn", row_number().over(w))
-            .where(col("_rn") <= k).drop("_rn")
-        cold.unionByName(hotCapped)
-      } else keyed.withColumn("_rn", row_number().over(w))
-        .where(col("_rn") <= k).drop("_rn")
-    (kept, drops)
+    def windowCap(in: DataFrame) = in.withColumn("_rn", row_number().over(w))
+      .where(col("_rn") <= k).drop("_rn")
+    def withDropped(sizes: DataFrame) =
+      sizes.withColumn("n_dropped", col("n_total") - k)
+    HotKeys.collect(keyed, keyName, k, maxHotKeysBroadcast) match {
+      case Some(hot) =>
+        val kept =
+          if (hot.n == 0) keyed
+          else {
+            val hotKeys = broadcast(hot.table.select(col(keyName).as("_hk")))
+            val isHot = col(keyName) <=> col("_hk")
+            keyed.join(hotKeys, isHot, "left_anti")
+              .unionByName(windowCap(keyed.join(hotKeys, isHot, "left_semi")))
+          }
+        (kept, withDropped(hot.table))
+      case None =>
+        (windowCap(keyed), withDropped(HotKeys.overCap(keyed, keyName, k)))
+    }
   }
 
   /** Convenience wrapper deriving the key from an expression. */

@@ -69,36 +69,31 @@ object Streaming {
     *    dedup is stateful on a stream, so it is watermark-bounded
     *    (`dropDuplicatesWithinWatermark`) — state holds only pairs seen
     *    within the lateness horizon, per the 10^12-event design rule.
+    *  - Hot-block discipline for the static side: the batch path splits
+    *    oversized blocks by re-keying sub-blocks
+    *    (Blocking.splitOversizedBlocks) — that is NOT available here: the
+    *    stream side computes its block keys independently, so a re-keyed
+    *    corpus sub-block would never collide with a streamed page's key
+    *    again. Instead the corpus keeps its keys and is capped at
+    *    `cfg.pairCapPerBlock` rows per block (TopK, lowest ids win),
+    *    bounding the fan-out of a degenerate hot key (e.g. an empty
+    *    post-stoplist token set) per streamed page. The cap runs once, at
+    *    plan build; capping an already-capped corpus finds no hot key and
+    *    passes it through untouched.
     *
-    * Returns append-mode matches (ts, l_id = stream page, r_id = corpus
-    * page, urls, score) at or above `cfg.scoreThreshold`. */
-  /** Hot-block discipline for the STATIC side of the stream-static join.
-    * The batch path splits oversized blocks by re-keying sub-blocks
-    * (Blocking.splitOversizedBlocks) — that is NOT available here: the
-    * stream side computes its block keys independently, so a re-keyed
-    * corpus sub-block would never collide with a streamed page's key
-    * again. Instead the corpus keeps its keys and caps rows per block
-    * deterministically (lowest ids win), bounding the fan-out of a
-    * degenerate hot key (e.g. an empty post-stoplist token set) to `cap`
-    * corpus rows per streamed page. Returns (capped slim corpus rows,
-    * drop-stats table (block_key, n_total, n_dropped)) — drops are
-    * surfaced, never silent. Production callers should persist the capped
-    * side (it is re-evaluated per micro-batch otherwise) and sink the
-    * stats next to the batch pipeline's cap_drops. */
-  def capCorpusBlocks(corpusBlocked: DataFrame, cap: Int)
-      : (DataFrame, DataFrame) =
-    graft.block.Blocking.capBlocks(
-      corpusBlocked.select(col("block_key"), col("id")),
-      "block_key", "id", cap)
-
-  /** @param assumeCapped the caller already ran [[capCorpusBlocks]] (and
-    *   ideally persisted the result — StreamingIngestApp does): skip the
-    *   per-micro-batch re-cap, which is idempotent but re-runs the sizing
-    *   window on every batch. */
+    * Pass `corpusBlocked` materialized (persisted / snapshot-read): the
+    * static side is re-evaluated every micro-batch otherwise, and the
+    * cap rejects a non-deterministic plan.
+    *
+    * Returns (append-mode matches (ts, l_id = stream page, r_id = corpus
+    * page, urls, score) at or above `cfg.scoreThreshold`, static-side
+    * drop stats (block_key, n_total, n_dropped) — one row per capped
+    * corpus block; callers sink it next to the batch pipeline's
+    * cap_drops, so no drop is silent). */
   def streamingMatches(newPages: DataFrame, corpusExtracted: DataFrame,
       corpusBlocked: DataFrame, stopTokens: Seq[String],
       cfg: graft.pipeline.ERPipeline.Config = graft.pipeline.ERPipeline.Config(),
-      lateness: String = "1 hour", assumeCapped: Boolean = false): DataFrame = {
+      lateness: String = "1 hour"): (DataFrame, DataFrame) = {
     import graft.block.Blocking
     import graft.pipeline.ERPipeline
 
@@ -121,28 +116,13 @@ object Streaming {
         col("url").as("l_url"), col("norm_title").as("l_norm_title"),
         col("tokens").as("l_tokens"), col("model_tokens").as("l_model_tokens"))
 
-    // Static side joins slim AND block-capped (see capCorpusBlocks): a
-    // degenerate hot block key must not fan every streamed page out to an
-    // unbounded corpus slice at ingest latency. The cap drops corpus rows
-    // — and with them potential matches — so the drop count is surfaced
-    // eagerly (one static-side job at plan build, not per micro-batch);
-    // callers who need the per-block stats table should capCorpusBlocks
-    // themselves and pass assumeCapped=true (StreamingIngestApp does,
-    // sinking the stats next to the batch pipeline's cap_drops).
-    val corpusSlim = (
-      if (assumeCapped) corpusBlocked.select(col("block_key"), col("id"))
-      else {
-        val (capped, drops) = capCorpusBlocks(corpusBlocked, cfg.pairCapPerBlock)
-        val nDropped = drops.agg(coalesce(sum(col("n_dropped")), lit(0L)))
-          .collect()(0).getLong(0)
-        if (nDropped > 0L) System.err.println(
-          s"[graft.streaming] streamingMatches: corpus block cap " +
-            s"(${cfg.pairCapPerBlock}) dropped $nDropped corpus rows from " +
-            s"hot blocks; matches against dropped rows will not surface. " +
-            s"Use capCorpusBlocks + assumeCapped=true to audit per-block.")
-        capped
-      })
-      .withColumnRenamed("id", "r_id")
+    // Static side joins slim AND block-capped: a degenerate hot block key
+    // must not fan every streamed page out to an unbounded corpus slice
+    // at ingest latency.
+    val (capped, drops) = graft.ops.TopK.perKeyWithDrops(
+      corpusBlocked.select(col("block_key"), col("id")), col("block_key"),
+      "block_key", Seq(col("id")), cfg.pairCapPerBlock)
+    val corpusSlim = capped.withColumnRenamed("id", "r_id")
     val pairs = streamBlocked.join(corpusSlim, Seq("block_key"))
       .where(col("l_id") =!= col("r_id"))
       .withWatermark("ts", lateness)
@@ -153,12 +133,13 @@ object Streaming {
     // SAME weights, R6 model-token guard and pruning as the batch scorer —
     // one formula, one source (ERPipeline.pairSims)
     val sims = ERPipeline.pairSims(cfg)
-    pairs
+    val matches = pairs
       .join(rPay, Seq("r_id"))
       .withColumn("score", sims.score)
       .where(col("score") >= cfg.scoreThreshold)
       .select(col("ts"), col("l_id"), col("r_id"), col("l_url"), col("r_url"),
         round(col("score"), 6).as("score"))
+    (matches, drops)
   }
 
   /** Incremental per-entity ingestion profile (ER streaming state). */

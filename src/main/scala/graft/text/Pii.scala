@@ -33,13 +33,6 @@ object Pii {
   val ipv4Re =
     "\\b[0-9]{1,3}\\.[0-9]{1,3}\\.[0-9]{1,3}\\.[0-9]{1,3}\\b"
 
-  def redactText(c: Column): Column =
-    regexp_replace(
-      regexp_replace(
-        regexp_replace(c, emailRe, "<EMAIL>"),
-        phoneRe, "<PHONE>"),
-      ipv4Re, "<IP>")
-
   /** (doc_id, clean_text, n_email, n_phone, n_ip) for every input row —
     * untouched docs pass through with zero counts, so the output is a
     * drop-in replacement for the input corpus. */

@@ -1,6 +1,7 @@
 package graft.block
 
 import graft.SparkSuite
+import graft.ops.TopK
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -13,9 +14,12 @@ class BlockingSpec extends SparkSuite {
     (0 until 500).flatMap(k => (0 to k % 3).map(j => (s"cold$k", (10000 + k * 10 + j).toLong)))
   ).toDF("block_key", "id")
 
+  // The block cap is TopK keyed on block_key, lowest ids win (the static
+  // side of streaming ER and the incremental-dedup corpus index).
   test("capBlocks == naive per-block window cap, with exact drop stats") {
     val df = blocked()
-    val (kept, drops) = Blocking.capBlocks(df, "block_key", "id", cap = 100)
+    val (kept, drops) = TopK.perKeyWithDrops(df, $"block_key", "block_key",
+      Seq($"id"), 100)
     val naive = df.withColumn("_rn", row_number().over(
         Window.partitionBy($"block_key").orderBy($"id")))
       .where($"_rn" <= 100).drop("_rn")
@@ -28,7 +32,8 @@ class BlockingSpec extends SparkSuite {
 
   test("capBlocks plan: hot keys broadcast; cold majority skips the window") {
     val df = blocked()
-    val (kept, _) = Blocking.capBlocks(df, "block_key", "id", cap = 100)
+    val (kept, _) = TopK.perKeyWithDrops(df, $"block_key", "block_key",
+      Seq($"id"), 100)
     val plan = kept.queryExecution.executedPlan.toString
     assert(plan.contains("BroadcastHashJoin"), plan)
     // the window sort must sit under the hot-side branch only: exactly
@@ -39,7 +44,8 @@ class BlockingSpec extends SparkSuite {
   test("capBlocks caps a hot NULL key like the window twin (null-safe join)") {
     val df = ((0 until 300).map(i => (null: String, i.toLong)) ++
       (0 until 10).map(i => ("k", (1000 + i).toLong))).toDF("block_key", "id")
-    val (kept, drops) = Blocking.capBlocks(df, "block_key", "id", cap = 50)
+    val (kept, drops) = TopK.perKeyWithDrops(df, $"block_key", "block_key",
+      Seq($"id"), 50)
     assert(kept.count() === 60L) // 50 capped nulls + 10 cold rows
     val d = drops.as[(Option[String], Long, Long)].collect()
     assert(d.toSeq === Seq((None, 300L, 250L)))
@@ -48,11 +54,12 @@ class BlockingSpec extends SparkSuite {
   test("capBlocks over the broadcast bound falls back to the window plan, same rows") {
     val df = blocked()
     val (kept, drops) =
-      Blocking.capBlocks(df, "block_key", "id", cap = 100,
+      TopK.perKeyWithDrops(df, $"block_key", "block_key", Seq($"id"), 100,
         maxHotKeysBroadcast = 0) // force: 1 hot key > bound
     val plan = kept.queryExecution.executedPlan.toString
     assert(!plan.contains("BroadcastHashJoin"), plan)
-    val (keptB, dropsB) = Blocking.capBlocks(df, "block_key", "id", cap = 100)
+    val (keptB, dropsB) = TopK.perKeyWithDrops(df, $"block_key", "block_key",
+      Seq($"id"), 100)
     assert(kept.exceptAll(keptB).count() === 0L)
     assert(keptB.exceptAll(kept).count() === 0L)
     assert(drops.as[(String, Long, Long)].collect().toSeq ===
@@ -61,7 +68,8 @@ class BlockingSpec extends SparkSuite {
 
   test("capBlocks with no oversized block is a row-preserving no-op") {
     val df = (0 until 100).map(i => (s"k${i % 20}", i.toLong)).toDF("block_key", "id")
-    val (kept, drops) = Blocking.capBlocks(df, "block_key", "id", cap = 50)
+    val (kept, drops) = TopK.perKeyWithDrops(df, $"block_key", "block_key",
+      Seq($"id"), 50)
     assert(kept.count() === 100L)
     assert(drops.count() === 0L)
   }
@@ -124,5 +132,39 @@ class BlockingSpec extends SparkSuite {
     assert(split.exceptAll(df).count() === 0L)
     assert(df.exceptAll(split).count() === 0L)
     assert(stats.count() === 0L)
+  }
+
+  test("block cap job count: one hot-key collect; drops come from it") {
+    val df = blocked()
+    val ((kept, drops), buildJobs) = withJobCount(
+      TopK.perKeyWithDrops(df, $"block_key", "block_key", Seq($"id"), 100))
+    val (_, keptJobs) = withJobCount(kept.collect())
+    val (d, dropsJobs) = withJobCount(drops.as[(String, Long, Long)].collect())
+    assert(d.toSeq === Seq(("hot", 1000L, 900L)))
+    assert(dropsJobs === 0, "drops must be the collected local relation")
+    assert(buildJobs + keptJobs + dropsJobs <= 5,
+      s"build $buildJobs + kept $keptJobs + drops $dropsJobs jobs")
+  }
+
+  test("splitOversizedBlocks job count: 2 to build, stats free") {
+    val df = splitFixture()
+    val ((_, stats), buildJobs) = withJobCount(
+      Blocking.splitOversizedBlocks(df, "block_key", "fp", cap = 64))
+    val (st, statsJobs) = withJobCount(stats.collect())
+    assert(st.length === 3)
+    assert(buildJobs === 2)
+    assert(statsJobs === 0)
+  }
+
+  test("hot-key caps reject a non-deterministic input by name") {
+    val df = blocked()
+    val e1 = intercept[IllegalArgumentException](
+      TopK.perKeyWithDrops(df, (rand(7) * 10).cast("int"), "k", Seq($"id"), 5))
+    assert(e1.getMessage.contains("non-deterministic"), e1.getMessage)
+    val e2 = intercept[IllegalArgumentException](
+      Blocking.splitOversizedBlocks(
+        splitFixture().withColumn("block_key", (rand(7) * 10).cast("long")),
+        "block_key", "fp", cap = 64))
+    assert(e2.getMessage.contains("non-deterministic"), e2.getMessage)
   }
 }

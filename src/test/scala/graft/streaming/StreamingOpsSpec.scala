@@ -56,7 +56,7 @@ class StreamingOpsSpec extends SparkSuite {
       .map(r => (ts("2026-01-01 10:00:00"), r.getString(0), r.getString(1)))
     val in = MemoryStream[(java.sql.Timestamp, String, String)]
     val stream = in.toDF().toDF("ts", "url", "text")
-    val matches = Streaming.streamingMatches(stream, cex, cblocked,
+    val (matches, _) = Streaming.streamingMatches(stream, cex, cblocked,
       stopTokens = stop, cfg = cfg)
     val q = matches.writeStream.format("memory").queryName("er_stream_out")
       .outputMode("append").start()
@@ -85,13 +85,18 @@ class StreamingOpsSpec extends SparkSuite {
   }
 
   test("capCorpusBlocks bounds hot static blocks deterministically, drops surfaced") {
+    // streamingMatches caps the static corpus it is given (lowest ids win
+    // per block, as BlockingSpec pins) and returns the drops; the stream
+    // is never started, the cap runs at plan build
+    implicit val sq = spark.sqlContext
+    import graft.pipeline.ERPipeline
     val corpus = Seq((10L, 7L), (11L, 7L), (12L, 7L), (13L, 8L))
       .toDF("id", "block_key")
-    val (capped, drops) = Streaming.capCorpusBlocks(corpus, cap = 2)
-    val kept = capped.select("block_key", "id").as[(Long, Long)]
-      .collect().toSet
-    // lowest ids win within the hot block; the cold block is untouched
-    assert(kept === Set((7L, 10L), (7L, 11L), (8L, 13L)))
+    val cex = ERPipeline.extract(graft.gen.PageGen.pages(spark, 4, seed = 31L))
+    val stream = MemoryStream[(java.sql.Timestamp, String, String)].toDF()
+      .toDF("ts", "url", "text")
+    val (_, drops) = Streaming.streamingMatches(stream, cex, corpus,
+      stopTokens = Nil, cfg = ERPipeline.Config(pairCapPerBlock = 2))
     val d = drops.collect().map(r => (r.getAs[Long]("block_key"),
       r.getAs[Long]("n_total"), r.getAs[Long]("n_dropped")))
     assert(d.toSeq === Seq((7L, 3L, 1L)))
@@ -133,7 +138,7 @@ class StreamingOpsSpec extends SparkSuite {
         .option("maxFilesPerTrigger", 1)
         .parquet(s"$srcDir/*")
       Streaming.streamingMatches(stream, cex, cblocked,
-          stopTokens = stop, cfg = cfg)
+          stopTokens = stop, cfg = cfg)._1
         .writeStream.format("parquet")
         .option("path", sinkDir)
         .option("checkpointLocation", ckptDir)
