@@ -135,13 +135,8 @@ object CurationApp {
 
     // 4. near-dup dedup — pairs → connected components → keeper rows only
     val nearKept = staged("neardup_kept", exactKept) { d =>
-      // reliable checkpoint() (not the localCheckpoint default) for the
-      // shingled/banded intermediates: a lost executor replays from
-      // checkpoint storage instead of failing on unrecoverable local
-      // blocks — same choice PipelineApp makes for CC round state
       val pairs = Dedup.minhashPairs(d, col("doc_id"), col("text"),
-        cfg.bands, cfg.rowsPerBand, cfg.jaccardFloor,
-        persist = _.checkpoint())
+        cfg.bands, cfg.rowsPerBand, cfg.jaccardFloor)
       val keepers = Dedup.nearDupKeepers(d, col("doc_id"), pairs)
         .where(col("doc_id") === col("keeper")).select("doc_id")
       d.join(keepers, Seq("doc_id"))

@@ -75,9 +75,7 @@ object PipelineApp {
     }
 
     val clusters = Snapshots.getOrCompute(spark, workRoot, "clusters") {
-      // reliable checkpoint() (not localCheckpoint) for CC round state:
-      // survives executor loss, resumes from storage (north_rule)
-      val comps = ERPipeline.cluster(spark, scored, cfg, _.checkpoint())
+      val comps = ERPipeline.cluster(spark, scored, cfg)
       extracted.select(col("url"), col("id"))
         .join(comps, Seq("id"), "left")
         .select(col("url"), col("id"),

@@ -6,7 +6,7 @@ import org.apache.spark.sql.streaming.Trigger
 import org.apache.spark.sql.types._
 import graft.pipeline.ERPipeline
 import graft.streaming.Streaming
-import graft.io.Snapshots
+import graft.io.{Materialize, Snapshots}
 
 /**
  * spark-submit entry point for CONTINUOUS ER ingest — the streaming twin
@@ -23,6 +23,8 @@ import graft.io.Snapshots
  *   matches/                         append-only match output (file sink)
  *   _stream_ckpt/                    streaming checkpoint (exactly-once
  *                                    across restarts; kill + rerun resumes)
+ *   _spark_ckpt/                     default Spark checkpoint dir (cluster
+ *                                    mode materializes the static side here)
  *
  * Default trigger is AvailableNow: drain everything currently in
  * <incomingDir>, then exit — cron-able and deterministic to test.
@@ -30,7 +32,7 @@ import graft.io.Snapshots
  *
  * Scale shape: corpus prep runs ONCE (snapshot-resumed on rerun); the
  * per-batch work is the stream-static block-key join against the
- * block-capped slim corpus (the slim rows are persisted, so the static
+ * block-capped slim corpus (the slim rows are materialized, so the static
  * side is not re-derived every micro-batch) plus watermark-bounded pair
  * dedup.
  */
@@ -52,6 +54,8 @@ object StreamingIngestApp {
       .config("spark.sql.session.timeZone", "UTC")
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
+    if (spark.sparkContext.getCheckpointDir.isEmpty)
+      spark.sparkContext.setCheckpointDir(s"$workRoot/_spark_ckpt")
 
     val q = start(spark, workRoot, spark.read.parquet(corpusPath),
       incomingDir, follow = follow)
@@ -73,11 +77,11 @@ object StreamingIngestApp {
     val blocked = Snapshots.getOrCompute(spark, workRoot, "blocked") {
       ERPipeline.block(extracted, cfg)
     }
-    // static side of the join: slim + PERSISTED (the static plan is
+    // static side of the join: slim + MATERIALIZED (the static plan is
     // re-evaluated per micro-batch otherwise); streamingMatches caps its
     // hot blocks and the drops are committed next to the batch
     // pipeline's cap_drops, never silent
-    val slim = blocked.select(col("block_key"), col("id")).persist()
+    val slim = Materialize(blocked.select(col("block_key"), col("id")))
     val stream = spark.readStream.schema(pageSchema).parquet(incomingDir)
     val (matches, drops) = Streaming.streamingMatches(stream, extracted,
       slim, stopTokens = stop, cfg = cfg, lateness = lateness)

@@ -2,7 +2,9 @@ package graft.cluster
 
 import org.apache.spark.sql.{DataFrame, Observation, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.ColumnBridge
 import org.apache.spark.sql.types.DecimalType
+import graft.io.Materialize
 
 /**
  * Transitive closure via alternating large-star / small-star iterations
@@ -16,8 +18,8 @@ import org.apache.spark.sql.types.DecimalType
  * deterministic labeling, identical at any parallelism level.
  *
  * Scale design: each round is two shuffles (groupBy min + join), O(log n)
- * rounds to converge; `localCheckpoint` after every round truncates
- * lineage so plan size stays constant. Convergence is detected by an
+ * rounds to converge; materializing every round ([[graft.io.Materialize]])
+ * truncates lineage so plan size stays constant. Convergence is detected by an
  * order-independent checksum (count + exact decimal sum of pair hashes)
  * of the deduped edge set, collected via `observe` DURING the round's own
  * materialization job — zero extra jobs / driver round-trips per round
@@ -27,13 +29,6 @@ import org.apache.spark.sql.types.DecimalType
 object ConnectedComponents {
 
   /** @param edges DataFrame with two numeric columns (src, dst).
-    * @param persist per-round state materializer. MUST be eager (run a job
-    *   materializing its input — `localCheckpoint()`/`checkpoint()` both
-    *   are): the convergence checksum is an `observe` metric harvested from
-    *   that job. Default `localCheckpoint` is fast but memory-pinned and
-    *   NOT fault-tolerant — production runs (PipelineApp) pass
-    *   `_.checkpoint()` so round state lands on reliable storage and a lost
-    *   executor replays from the checkpoint, not from the whole lineage.
     * @param driverUnionFindMaxEdges adaptive small-graph cutoff: when the
     *   DEDUPED edge set (counted for free by the first round's observe
     *   checksum) fits under this bound, the closure is computed by a
@@ -52,7 +47,6 @@ object ConnectedComponents {
     *   distributed path). Set to 0 to force the distributed path.
     * @return DataFrame(id LONG, component LONG), one row per distinct node. */
   def run(spark: SparkSession, edges: DataFrame, maxIter: Int = 50,
-      persist: DataFrame => DataFrame = _.localCheckpoint(),
       driverUnionFindMaxEdges: Long = 500000L): DataFrame = {
     import spark.implicits._
     val base = edges.toDF("src", "dst")
@@ -60,35 +54,24 @@ object ConnectedComponents {
       .where($"src" =!= $"dst")
       .select(least($"src", $"dst").as("lo"), greatest($"src", $"dst").as("hi"))
       .distinct()
-    // (node set is derived from the PERSISTED first-round edge set below,
+    // (node set is derived from the MATERIALIZED first-round edge set below,
     // not from `base`: deriving it here would re-run the caller's whole
     // upstream lineage — e.g. a minhash pair generation — a second time
     // at the final assignment join.)
 
     // Materialize + checksum in ONE job: the order-independent exact
     // checksum (count + decimal sum of pair hashes; decimal keeps ANSI
-    // mode overflow-free) rides the persist job as an observed metric.
-    def persistWithChecksum(df: DataFrame): (DataFrame, (Long, java.math.BigDecimal)) = {
+    // mode overflow-free) rides the materialization job as an observed
+    // metric; both Materialize branches are eager, so it is ready here.
+    def materializeWithChecksum(df: DataFrame)
+        : (DataFrame, (Long, java.math.BigDecimal)) = {
       val obs = Observation()
-      val p = persist(df.observe(obs,
+      val p = Materialize(df.observe(obs,
         count(lit(1)).as("cnt"),
         sum(xxhash64($"u", $"v").cast(DecimalType(38, 0))).as("cs")))
-      // An eager persist (localCheckpoint()/checkpoint(), the documented
-      // contract) has already run the job, so the metrics are ready and
-      // this is free. A LAZY persist (cache(), identity) would make a
-      // blind obs.get hang forever — detect the empty-metrics case and
-      // force one materializing action instead, so every historical
-      // persist signature still terminates (it just pays the extra job
-      // the eager path avoids).
-      var m = org.apache.spark.sql.graft.ColumnBridge.metricsOrEmpty(obs)
-      if (m.isEmpty) {
-        p.count()
-        m = org.apache.spark.sql.graft.ColumnBridge.metricsOrEmpty(obs)
-      }
+      val m = ColumnBridge.metricsOrEmpty(obs)
       require(m.nonEmpty,
-        "persist did not materialize its input and a forced count() did " +
-          "not surface observe metrics; pass an eager persist such as " +
-          "_.localCheckpoint() or _.checkpoint()")
+        "materialization did not surface the convergence checksum")
       val cs = m("cs") match {
         case null => java.math.BigDecimal.ZERO
         case d: java.math.BigDecimal => d
@@ -98,7 +81,7 @@ object ConnectedComponents {
     }
 
     // edge set invariant between rounds: canonical (hi > lo) pairs
-    var (cur, curSum) = persistWithChecksum(base.select($"hi".as("u"), $"lo".as("v")))
+    var (cur, curSum) = materializeWithChecksum(base.select($"hi".as("u"), $"lo".as("v")))
 
     // Small-graph fast path: the deduped edge count came for free with the
     // first checksum; under the cutoff, collect the (already materialized)
@@ -138,9 +121,9 @@ object ConnectedComponents {
         .distinct()
       // convergence test: checksum of the new edge set vs the previous
       // round's (a collision would need equal count AND equal exact sum
-      // of 64-bit pair hashes). Collected inside the persist job itself —
-      // no separate aggregate job.
-      val (smallP, smallSum) = persistWithChecksum(small)
+      // of 64-bit pair hashes). Collected inside the materialization job
+      // itself — no separate aggregate job.
+      val (smallP, smallSum) = materializeWithChecksum(small)
       converged = smallSum == curSum
       curSum = smallSum
       cur = smallP

@@ -32,18 +32,9 @@ object DittoConverter {
   /** @param ordCol when the caller already carries an explicit input-order
     *   column (e.g. staged fixtures), ids are assigned in ITS order via a
     *   range-repartitioned rank; otherwise input (byte) order via
-    *   `monotonically_increasing_id`. Either way: no global window.
-    * @param persist materializer for the parsed frame that feeds the two
-    *   downstream jobs (field-union collect + final projection). Default
-    *   `localCheckpoint()` pins the parsed corpus into executor storage —
-    *   right at fixture/benchmark scale, an OOM/eviction hazard on a
-    *   TB-scale Ditto file (localCheckpoint blocks are non-replayable).
-    *   Production runs over large inputs should pass a reliable
-    *   materializer, e.g. `df => Snapshots.commit(spark, df, root, "parsed")`
-    *   or `_.checkpoint()` — same contract as ERPipeline.run(persist). */
+    *   `monotonically_increasing_id`. Either way: no global window. */
   def convertLines(spark: SparkSession, lines: DataFrame, cfg: Config,
-      ordCol: Option[String] = None,
-      persist: DataFrame => DataFrame = _.localCheckpoint()): DataFrame = {
+      ordCol: Option[String] = None): DataFrame = {
     import spark.implicits._
     val parseUdf =
       if (cfg.robust) GraftFunctions.parseColValRobust
@@ -53,7 +44,7 @@ object DittoConverter {
     val src =
       if (ordCol.isDefined) lines
       else lines.withColumn("_ord", monotonically_increasing_id())
-    val split0 = persist(src
+    val split0 = graft.io.Materialize(src
       .withColumn("line", GraftFunctions.pyTrim($"value"))
       .where(length($"line") > 0)
       .withColumn("parts",
@@ -62,11 +53,8 @@ object DittoConverter {
       .withColumn("left_map", parseUdf(element_at($"parts", 1)))
       .withColumn("right_map", parseUdf(element_at($"parts", 2))))
       // materialized once for the two downstream jobs (field-union collect
-      // + final projection); the default localCheckpoint (vs cache()) lets
-      // ContextCleaner release the storage blocks when the result is
-      // dropped — no CacheManager entry leaks across the repeated convert
-      // runs of a long-lived session. See the persist param for why large
-      // production inputs should use reliable storage instead.
+      // + final projection); Materialize leaves no CacheManager entry to
+      // leak across the repeated convert runs of a long-lived session.
 
     // C1/A1: two-pass schema inference — union of keys from both sides.
     // Computed BEFORE the label filter: the reference's first pass unions
@@ -91,9 +79,9 @@ object DittoConverter {
     // O1: dense sequential id in input order (per-partition offsets — no
     // global window; see graft.ops.Ids)
     val withId = ordCol match {
-      // labeled = narrow filters over the persisted parse — skip the
+      // labeled = narrow filters over the materialized parse — skip the
       // second materialization inside denseIdByOrder (its 3 consumers
-      // re-run only those cheap filters against the persisted frame)
+      // re-run only those cheap filters against the materialized frame)
       case Some(oc) => graft.ops.Ids.denseIdByOrder(labeled, Seq(col(oc)), "id",
         materialize = false)
       case None     => graft.ops.Ids.denseIdByMono(labeled, "_ord", "id")

@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import graft.block.Blocking
 import graft.functions.GraftFunctions
+import graft.io.Materialize
 import graft.score.Similarity
 
 /**
@@ -92,23 +93,18 @@ object Dedup {
     * exact-duplicate recall is preserved), never row-capped — no silent
     * drops; the split stats table is returned alongside the pairs.
     *
-    * @param persist materializer for the two frames more than one
-    *   downstream arm consumes: the shingled base (verify joins on both
-    *   pair sides) and the slim banded table (size aggregation + both
-    *   candidate-join sides). Without it, the tokenize/shingle chain and
-    *   the band-key UDF are re-evaluated once per consumer (measured 3×
-    *   on the bench corpus). Default `localCheckpoint` is the fast
-    *   memory-pinned variant for tests/benchmarks; production corpora
-    *   pass a reliable materializer (`_.checkpoint()` / Snapshots) —
-    *   same contract as ERPipeline.run(persist). */
+    * The two frames more than one downstream arm consumes are
+    * materialized: the shingled base (verify joins on both pair sides)
+    * and the slim banded table (size aggregation + both candidate-join
+    * sides). Otherwise the tokenize/shingle chain and the band-key UDF
+    * are re-evaluated once per consumer (measured 3× on the bench
+    * corpus). */
   def minhashPairsWithStats(docs: DataFrame, idCol: Column, textCol: Column,
       bands: Int, rowsPerBand: Int, jaccardFloor: Double,
-      blockCap: Int = 500,
-      persist: DataFrame => DataFrame = _.localCheckpoint())
-      : (DataFrame, DataFrame) = {
-    val base = persist(docs.select(idCol.as("id"), wordShingles(textCol).as("sh"))
+      blockCap: Int = 500): (DataFrame, DataFrame) = {
+    val base = Materialize(docs.select(idCol.as("id"), wordShingles(textCol).as("sh"))
       .withColumn("fp", Blocking.tokenFingerprint(col("sh"))))
-    val blocked = persist(Blocking.minhashBlocks(
+    val blocked = Materialize(Blocking.minhashBlocks(
       base.select(col("id"), col("fp"), col("sh").as("tokens")), col("tokens"),
       bands, rowsPerBand).select("block_key", "id", "fp"))
     val (split, stats) =
@@ -129,10 +125,9 @@ object Dedup {
     * so discarding the stats table loses information, not data). */
   def minhashPairs(docs: DataFrame, idCol: Column, textCol: Column,
       bands: Int, rowsPerBand: Int, jaccardFloor: Double,
-      blockCap: Int = 500,
-      persist: DataFrame => DataFrame = _.localCheckpoint()): DataFrame =
+      blockCap: Int = 500): DataFrame =
     minhashPairsWithStats(docs, idCol, textCol, bands, rowsPerBand,
-      jaccardFloor, blockCap, persist)._1
+      jaccardFloor, blockCap)._1
 
   /** Corpus-side MinHash band index: one slim (block_key, id) row per
     * band per document. This is the artifact an INCREMENTAL pipeline

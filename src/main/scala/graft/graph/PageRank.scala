@@ -3,6 +3,7 @@ package graft.graph
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.LongType
+import graft.io.Materialize
 
 /**
  * Host-graph PageRank for crawl prioritization — power iteration as
@@ -22,9 +23,9 @@ import org.apache.spark.sql.types.LongType
  * deterministic.
  *
  * Scale shape per round: join ranks→edges on src (both sides
- * hash-partitioned on the join key; edges are repartitioned+persisted
- * ONCE so only the small rank table moves) + one partial-aggregated
- * `groupBy(dst)`. Ranks are one row per node — always the slim side.
+ * hash-partitioned on the join key; edges are repartitioned and
+ * materialized ONCE so only the small rank table moves) + one
+ * partial-aggregated `groupBy(dst)`. Ranks are one row per node — always the slim side.
  * Dangling nodes (outdeg 0) keep receiving the teleport share but their
  * retained mass is dropped, the common "remove dangling mass" PageRank
  * variant; callers that need mass conservation add sink self-loops.
@@ -33,27 +34,23 @@ object PageRank {
 
   val UNIT: Long = 1000000000000L // 1e-12 fixed-point
 
+  /** The rank table is materialized every k-th round (plus always the
+    * last). Materializing every round spends a job and a storage round-
+    * trip per iteration only to keep lineage O(1); this cadence keeps
+    * lineage bounded at ~k joins (AQE plans it fine) while cutting the
+    * driver-serial materialization count, which is Amdahl overhead at any
+    * scale. Fault-tolerance granularity drops to k rounds of replay, the
+    * usual iterative-graph checkpoint-interval tradeoff. */
+  private val MaterializeEvery = 5
+
   /** @param edges (src, dst) directed link table, any numeric id type.
     * @param iters fixed power-iteration round count (deterministic output
     *              shape beats a float-epsilon stopping rule for an exact
     *              cross-engine contract; 10 rounds ≈ damping^10 < 0.2 of
     *              the residual, plenty for crawl ordering).
-    * @param persist per-round state materializer — MUST be eager, same
-    *              contract as ConnectedComponents.run.
-    * @param persistEvery materialize the rank table every k-th round
-    *   (plus always the last). A per-round persist spends a
-    *   materialization job and storage round-trip per iteration only to
-    *   keep lineage O(1); a batched cadence keeps lineage bounded at
-    *   ~persistEvery joins (AQE plans it fine) while cutting the
-    *   materialization count — the driver-serial persist bookkeeping is
-    *   Amdahl overhead at any scale. Fault-tolerance granularity drops to
-    *   persistEvery rounds of replay, the usual iterative-graph
-    *   checkpoint-interval tradeoff.
     * @return (id LONG, rank_fp LONG) — rank in 1e-12 units. */
-  def run(spark: SparkSession, edges: DataFrame, iters: Int = 10,
-      persist: DataFrame => DataFrame = _.localCheckpoint(),
-      persistEvery: Int = 5): DataFrame = {
-    require(persistEvery >= 1, "persistEvery must be >= 1")
+  def run(spark: SparkSession, edges: DataFrame, iters: Int = 10)
+      : DataFrame = {
     import spark.implicits._
     val e0 = edges.toDF("src", "dst")
       .select(col("src").cast(LongType), col("dst").cast(LongType))
@@ -65,17 +62,17 @@ object PageRank {
     // previous groupBy+join shape moved the full edge table through two
     // extra exchanges (agg-join key, then the explicit repartition) for
     // a value the src-partitioned layout already holds locally.
-    val e = persist(e0.repartition(col("src")).withColumn("odeg",
+    val e = Materialize(e0.repartition(col("src")).withColumn("odeg",
       count(lit(1)).over(org.apache.spark.sql.expressions.Window
         .partitionBy($"src"))))
-    val nodes = persist(
+    val nodes = Materialize(
       e.select($"src".as("id")).union(e.select($"dst".as("id"))).distinct())
     // n is the one driver-side scalar (same pattern as IVF's Lloyd loop);
     // every derived constant is integer arithmetic on it.
     val n = nodes.count()
     require(n > 0, "PageRank needs at least one edge")
     val teleport = (15L * UNIT / 100L) / n
-    // rank0 is a constant projection of the persisted node table — no
+    // rank0 is a constant projection of the materialized node table — no
     // separate materialization needed
     var rank = nodes.select($"id", lit(UNIT / n).as("r"))
     var i = 0
@@ -90,15 +87,15 @@ object PageRank {
       val next = nodes.join(contrib, Seq("id"), "left")
         .select($"id",
           (lit(teleport) + coalesce($"recv", lit(0L))).as("r"))
-      // No explicit unpersist of the previous round: Dataset.unpersist
-      // only releases CacheManager entries, not localCheckpoint blocks —
-      // those are freed by the ContextCleaner once the superseded round's
-      // RDD becomes unreachable (which reassigning `rank` makes true).
+      // No explicit unpersist of the previous round: Materialize makes no
+      // CacheManager entry, and its local blocks are freed by the
+      // ContextCleaner once the superseded round's RDD becomes
+      // unreachable (which reassigning `rank` makes true).
       // Rank tables are one slim row per node, so the transient overlap
-      // is bounded. Callers needing deterministic release pass a
-      // `persist` that manages its own storage (e.g. Snapshots.commit).
+      // is bounded.
       i += 1
-      rank = if (i % persistEvery == 0 || i == iters) persist(next) else next
+      rank = if (i % MaterializeEvery == 0 || i == iters) Materialize(next)
+        else next
     }
     rank.select($"id", $"r".as("rank_fp"))
   }

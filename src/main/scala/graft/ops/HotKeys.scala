@@ -42,7 +42,7 @@ private[graft] object HotKeys {
     require(df.queryExecution.analyzed.deterministic,
       "HotKeys: input plan is non-deterministic; the hot-key collect and " +
         "the rescan would see different rows — materialize it first " +
-        "(persist/localCheckpoint/snapshot)")
+        "(graft.io.Materialize or a snapshot)")
     val plan = overCap(df, keyName, cap)
     val rows = plan.limit(maxHotKeysBroadcast + 1).collect()
     if (rows.length > maxHotKeysBroadcast) None

@@ -55,18 +55,16 @@ object Ids {
     * boundaries from a sample, so partitions are balanced even on skewed
     * keys), then per-partition ranks + prefix-sum offsets. Two shuffles
     * (range exchange + pid-hash for the window), both full-width parallel. */
-  /** @param materialize localCheckpoint the input first (default). The
-    *   range partitioner's sample pass, the counts job and the final job
-    *   re-run the upstream plan 3× otherwise. Callers whose input is
-    *   ALREADY materialized (or trivially recomputable narrow maps over a
-    *   materialized frame — DittoConverter's label filter) pass false and
-    *   skip the extra materialization job. localCheckpoint (not cache) so
-    *   the blocks are released by the ContextCleaner when the result is
-    *   dropped — a df.cache() here is a CacheManager entry nothing ever
-    *   unpersists, a storage-memory leak in a long-lived session. */
+  /** @param materialize materialize the input first (default; see
+    *   [[graft.io.Materialize]]). The range partitioner's sample pass, the
+    *   counts job and the final job re-run the upstream plan 3× otherwise.
+    *   Callers whose input is ALREADY materialized (or trivially
+    *   recomputable narrow maps over a materialized frame —
+    *   DittoConverter's label filter) pass false and skip the extra
+    *   materialization job. */
   def denseIdByOrder(df: DataFrame, sortCols: Seq[Column], idCol: String,
       materialize: Boolean = true): DataFrame = {
-    val src = if (materialize) df.localCheckpoint() else df
+    val src = if (materialize) graft.io.Materialize(df) else df
     val ranged = src.repartitionByRange(sortCols: _*)
       .withColumn("_pid", spark_partition_id().cast("long"))
     val counts = ranged.groupBy("_pid").agg(count(lit(1)).as("n"))

@@ -6,6 +6,7 @@ import graft.block.Blocking
 import graft.cluster.ConnectedComponents
 import graft.eval.Metrics
 import graft.functions.GraftFunctions
+import graft.io.Materialize
 import graft.norm.Normalize
 import graft.score.Similarity
 
@@ -190,14 +191,12 @@ object ERPipeline {
     * Carrying payloads through the join+dedup would shuffle ~30× more
     * bytes (measured the difference at 180k pages). */
   def scorePairs(extracted: DataFrame, blocked: DataFrame, cfg: Config,
-      nRows: Option[Long] = None,
-      persist: DataFrame => DataFrame = _.localCheckpoint())
-      : (DataFrame, DataFrame) = {
+      nRows: Option[Long] = None): (DataFrame, DataFrame) = {
     // Materialize the slim banded table once: three arms consume it (the
     // oversized-block size aggregation + both candidate-join sides), and
     // each would otherwise re-run the band-key UDF over the corpus. 24-
-    // byte rows — cheap to pin, same persist contract as run().
-    val slim = persist(
+    // byte rows — cheap to pin.
+    val slim = Materialize(
       blocked.select(col("block_key"), col("id"), col("token_fp")))
     val (capped, drops) = Blocking.splitOversizedBlocks(slim, "block_key",
       "token_fp", cfg.pairCapPerBlock)
@@ -228,27 +227,23 @@ object ERPipeline {
   }
 
   /** Stage 5: threshold → edges → connected components → (id, component). */
-  def cluster(spark: SparkSession, scored: DataFrame, cfg: Config,
-      persist: DataFrame => DataFrame = _.localCheckpoint()): DataFrame = {
+  def cluster(spark: SparkSession, scored: DataFrame, cfg: Config)
+      : DataFrame = {
     val edges = scored.where(col("score") >= cfg.scoreThreshold)
       .select(col("l_id").as("src"), col("r_id").as("dst"))
-    ConnectedComponents.run(spark, edges, cfg.maxCcIterations, persist)
+    ConnectedComponents.run(spark, edges, cfg.maxCcIterations)
   }
 
   /** Full run: returns (clusters(url, id, component), capDrops). Pages with
     * no edge above threshold form singleton clusters (component = own id).
-    *
-    * @param persist stage materializer. Default `localCheckpoint` (fast,
-    *   memory-pinned) suits tests/benchmarks; production (PipelineApp)
-    *   passes reliable `checkpoint()` — and additionally snapshots whole
-    *   stages through graft.io.Snapshots for cross-JVM resume. */
+    * Intermediates read more than once go through [[graft.io.Materialize]];
+    * PipelineApp additionally snapshots whole stages through
+    * graft.io.Snapshots for cross-JVM resume. */
   def run(spark: SparkSession, pages: DataFrame,
-      cfg: Config = Config(),
-      persist: DataFrame => DataFrame = _.localCheckpoint())
-      : (DataFrame, DataFrame) = {
+      cfg: Config = Config()): (DataFrame, DataFrame) = {
     // extract feeds blocking, payload attachment and the final assignment
     // join — materialize once
-    val ex = persist(extract(pages))
+    val ex = Materialize(extract(pages))
     // one aggregate job yields the row count AND the collision check
     // (separate count() + countDistinct jobs doubled the driver round-
     // trips for scalars over the same materialized frame)
@@ -261,12 +256,12 @@ object ERPipeline {
       r.getLong(0)
     } else ex.count())
     val blocked = block(ex, cfg, n)
-    val (scored, drops) = scorePairs(ex, blocked, cfg, n, persist)
-    val comps = cluster(spark, scored, cfg, persist)
+    val (scored, drops) = scorePairs(ex, blocked, cfg, n)
+    val comps = cluster(spark, scored, cfg)
     // Materialize the assignment (one narrow row per url): downstream
     // consumers (evaluation joins, metrics) would otherwise re-execute the
     // whole pipeline per action.
-    val assign = persist(ex.select(col("url"), col("id"))
+    val assign = Materialize(ex.select(col("url"), col("id"))
       .join(comps, Seq("id"), "left")
       .select(col("url"), col("id"),
         coalesce(col("component"), col("id")).as("component")))

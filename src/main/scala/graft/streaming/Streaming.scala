@@ -81,9 +81,9 @@ object Streaming {
     *    plan build; capping an already-capped corpus finds no hot key and
     *    passes it through untouched.
     *
-    * Pass `corpusBlocked` materialized (persisted / snapshot-read): the
-    * static side is re-evaluated every micro-batch otherwise, and the
-    * cap rejects a non-deterministic plan.
+    * Pass `corpusBlocked` materialized (graft.io.Materialize or
+    * snapshot-read): the static side is re-evaluated every micro-batch
+    * otherwise, and the cap rejects a non-deterministic plan.
     *
     * Returns (append-mode matches (ts, l_id = stream page, r_id = corpus
     * page, urls, score) at or above `cfg.scoreThreshold`, static-side

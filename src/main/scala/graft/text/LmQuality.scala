@@ -34,23 +34,18 @@ import org.apache.spark.sql.types.{DecimalType, DoubleType, LongType}
  */
 object LmQuality {
 
-  /** @param persist materializer for the slim (token, count) unigram
-    *         model table — it is both counted (for V) and joined, so an
-    *         unmaterialized plan would tokenize the corpus once more. Same
-    *         eager contract as ConnectedComponents.run / PageRank.run;
-    *         production corpora pass reliable storage. NOTE the corpus is
-    *         still tokenized three times by design (unigram-count pass,
-    *         bigram-count pass, scoring probe): tokenization is a narrow
-    *         codegen'd map, and re-running it is the 100-TB-cheap choice
-    *         vs materializing the per-OCCURRENCE bigram stream (which is
-    *         larger than the corpus itself). Only the slim MODEL tables
-    *         ever persist or shuffle.
+  /** The corpus is tokenized three times by design (unigram-count pass,
+    * bigram-count pass, scoring probe): tokenization is a narrow codegen'd
+    * map, and re-running it is the 100-TB-cheap choice vs materializing
+    * the per-OCCURRENCE bigram stream (which is larger than the corpus
+    * itself). Only the slim MODEL tables are ever materialized or
+    * shuffled.
+    *
     * @return (id, n_bigrams, avg_ll): docs with < 2 tokens get
     *         n_bigrams = 0 and a null score (no evidence, not bad
     *         evidence — callers gate on n_bigrams). */
   def bigramScores(docs: DataFrame, id: Column, text: Column,
-      addK: Double = 0.5,
-      persist: DataFrame => DataFrame = _.localCheckpoint()): DataFrame = {
+      addK: Double = 0.5): DataFrame = {
     val toks = graft.functions.GraftFunctions.tokens(text)
     val base = docs.select(id.as("lm_id"), toks.as("toks"))
     val nTok = size(col("toks"))
@@ -66,8 +61,8 @@ object LmQuality {
 
     // corpus model: the two word-count aggregations. The unigram table is
     // materialized once — V (the one driver-side scalar) and the scoring
-    // join both read the persisted slim rows, not a re-tokenized corpus.
-    val uni = persist(base.select(explode(col("toks")).as("t"))
+    // join both read the materialized slim rows, not a re-tokenized corpus.
+    val uni = graft.io.Materialize(base.select(explode(col("toks")).as("t"))
       .groupBy(col("t")).agg(count(lit(1)).as("cu")))
     val big = bigrams.groupBy(col("bg")).agg(count(lit(1)).as("cb"))
     val v = uni.count() // vocab size

@@ -11,6 +11,9 @@ class StreamingIngestAppSpec extends SparkSuite {
   import spark.implicits._
 
   test("AvailableNow drain + rerun: snapshot-resumed corpus, no re-emission") {
+    // the static side must not outlive its queries as a CacheManager
+    // entry: start from an empty cache, check it after both cycles
+    spark.catalog.clearCache()
     val root = java.nio.file.Files.createTempDirectory("ingest-app").toString
     val corpusDir = s"$root/corpus"; val inDir = s"$root/in"
     new java.io.File(inDir).mkdirs()
@@ -46,6 +49,8 @@ class StreamingIngestAppSpec extends SparkSuite {
     val q2 = StreamingIngestApp.start(spark, root,
       spark.read.parquet(corpusDir), s"$inDir/*")
     try q2.awaitTermination() finally q2.stop()
+    assert(spark.sharedState.cacheManager.isEmpty,
+      "start must not leave cached plans in the CacheManager")
 
     val out = spark.read.parquet(s"$root/matches")
       .select("l_url", "l_id", "r_id").collect()

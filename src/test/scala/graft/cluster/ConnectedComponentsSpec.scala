@@ -20,23 +20,6 @@ class ConnectedComponentsSpec extends SparkSuite {
     assert(cc.values.toSet === Set(0L))
   }
 
-  test("a lazy persist (cache) terminates and matches the eager path") {
-    // the eager-persist contract says localCheckpoint/checkpoint, but a
-    // caller passing _.cache() (or identity) must get a correct answer
-    // plus one extra job per round — never a deadlocked obs.get
-    import spark.implicits._
-    val edges = Seq((1L, 2L), (2L, 3L), (10L, 11L), (5L, 5L))
-    val lazyCc =
-      try ConnectedComponents.run(spark, edges.toDF("src", "dst"),
-          persist = _.cache())
-        .as[(Long, Long)].collect().toMap
-      // the cached per-round frames live in the SHARED session's
-      // CacheManager, which DittoConverterSpec asserts is empty — release
-      // them here or the suite fails order-dependently
-      finally spark.catalog.clearCache()
-    assert(lazyCc === runCc(edges))
-  }
-
   test("two components + isolated pair") {
     val edges = Seq((1L, 2L), (2L, 3L), (10L, 11L), (11L, 12L), (20L, 21L))
     val cc = runCc(edges)
