@@ -3,7 +3,7 @@
 # 1 (N) or 4 (4N) worker JVMs, each worker pinned to its own disjoint
 # 4-core set and spawning ONE executor JVM with its own fixed-size heap.
 #
-# Why this beats the local[n] emulation (scale_pinned/scale_interleaved):
+# Why this beats a local[N]-vs-local[4N] emulation in one JVM:
 #   - Real clusters scale OUT: 4N executors bring 4x heaps along with 4x
 #     cores. One taskset-pinned local[16] JVM with the same 16g heap as
 #     the local[4] run under-provisions memory 4x at the wide level, so
@@ -21,7 +21,7 @@
 #   driver:   cores 28-29, 4g     master: core 30, 1g (idle at runtime)
 #   N=1:      worker/executor on cores 0-3,   4g heap
 #   4N=4:     workers/executors on 0-3, 4-7, 8-11, 12-15, 4g heap EACH
-# Interleaved lo,hi,lo,hi like scale_interleaved.sh so both levels
+# Interleaved lo,hi,lo,hi so both levels
 # sample the same host-noise phases; best (min total_sec) per level.
 #
 # Executor JVMs run -Xms=-Xmx -XX:+AlwaysPreTouch -XX:+UseTransparentHugePages.

@@ -302,7 +302,7 @@ object Ann {
     * exact cosine >= cosFloor. Multi-probe: also joins buckets at hamming
     * distance 1 (flip each bit) to recover near-boundary pairs.
     *
-    * Shuffle discipline (same as Dedup.minhashPairsWithStats and the ER
+    * Shuffle discipline (same as Dedup.minhashPairs and the ER
     * candidate join): the bucket join and the pair dedup run on SLIM
     * (bucket, vec_id) rows — the multi-probe side replicates each row
     * bits+1 times, so carrying the embedding array there would amplify

@@ -40,18 +40,6 @@ import graft.text.{Decontaminate, Pii, Repetition}
  */
 object CurationApp {
 
-  final case class Config(
-      jaccardFloor: Double = 0.8,
-      bands: Int = 8,
-      rowsPerBand: Int = 4,
-      deconNgram: Int = 8,
-      maxRepScore: Double = 0.5,
-      minChars: Long = 20L,
-      sampleRates: Seq[(String, Double)] = Seq("en" -> 0.5),
-      sampleDefaultRate: Double = 0.25,
-      packSeqLen: Int = 2048,
-      packShards: Int = 64)
-
   def main(args: Array[String]): Unit = {
     val workRoot = args.headOption.getOrElse("/tmp/graft-curation")
     require(!workRoot.startsWith("--"),
@@ -65,15 +53,7 @@ object CurationApp {
       s"--input is followed by another flag ('$input'), not a path")
     val eval = opt("--eval")
 
-    val spark = SparkSession.builder()
-      .appName("graft-curation-pipeline")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    if (spark.sparkContext.getCheckpointDir.isEmpty)
-      spark.sparkContext.setCheckpointDir(s"$workRoot/_spark_ckpt")
-
+    val spark = AppSession("graft-curation-pipeline", workRoot)
     val stats = run(spark, workRoot, spark.read.parquet(input),
       eval.map(spark.read.parquet(_)))
     stats.show(truncate = false)
@@ -83,7 +63,7 @@ object CurationApp {
   /** Returns the per-stage stats table: (stage, rows_in, rows_out,
     * rows_dropped) in pipeline order. */
   def run(spark: SparkSession, workRoot: String, docs: DataFrame,
-      evalDocs: Option[DataFrame], cfg: Config = Config()): DataFrame = {
+      evalDocs: Option[DataFrame]): DataFrame = {
     import spark.implicits._
     // Stats describe the run that PRODUCED each snapshot: when a stage is
     // computed, its rows in/out are sealed into the stage manifest; when a
@@ -123,8 +103,8 @@ object CurationApp {
         Repetition.signals(d, col("doc_id"), col("text")))
         .select(col("doc_id"), col("rep_score"))
       d.join(sig, Seq("doc_id"), "left")
-        .where(length(col("text")) >= cfg.minChars &&
-          coalesce(col("rep_score"), lit(0.0)) <= cfg.maxRepScore)
+        .where(length(col("text")) >= 20L &&
+          coalesce(col("rep_score"), lit(0.0)) <= 0.5)
         .drop("rep_score")
     }
 
@@ -136,7 +116,7 @@ object CurationApp {
     // 4. near-dup dedup — pairs → connected components → keeper rows only
     val nearKept = staged("neardup_kept", exactKept) { d =>
       val pairs = Dedup.minhashPairs(d, col("doc_id"), col("text"),
-        cfg.bands, cfg.rowsPerBand, cfg.jaccardFloor)
+        bands = 8, rowsPerBand = 4, jaccardFloor = 0.8)
       val keepers = Dedup.nearDupKeepers(d, col("doc_id"), pairs)
         .where(col("doc_id") === col("keeper")).select("doc_id")
       d.join(keepers, Seq("doc_id"))
@@ -147,7 +127,7 @@ object CurationApp {
       evalDocs match {
         case Some(e) =>
           val flagged = Decontaminate.flagged(d, col("doc_id"), col("text"),
-            e, col("text"), cfg.deconNgram)
+            e, col("text"), n = 8)
           d.join(flagged.select("doc_id"), Seq("doc_id"), "left_anti")
         case None => d
       }
@@ -157,7 +137,7 @@ object CurationApp {
     // under retries and across runs; re-sampling a re-run is a no-op)
     val sampled = staged("sample", deconKept) { d =>
       graft.ops.Sampling.stratifiedSampleByKey(d, col("lang"),
-        col("doc_id"), cfg.sampleRates, cfg.sampleDefaultRate)
+        col("doc_id"), rates = Seq("en" -> 0.5), defaultRate = 0.25)
     }
 
     // 7. training layout — the sequence-packing assembly plan (which doc
@@ -168,7 +148,7 @@ object CurationApp {
     // chars (script-neutral, like the quality floor).
     staged("packed", sampled) { d =>
       graft.ops.Packing.packSequences(d, col("doc_id"), length(col("text")),
-          cfg.packSeqLen, cfg.packShards)
+          seqLen = 2048, nShards = 64)
         .withColumnRenamed("k", "doc_id")
     }
 

@@ -27,27 +27,14 @@ object PipelineApp {
     val inputPath = args.sliding(2).collectFirst {
       case Array("--input", p) => p }
 
-    val spark = SparkSession.builder()
-      .appName("graft-er-pipeline")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    // On a real multi-node cluster the checkpoint dir must be shared
-    // storage (HDFS/S3) — pre-set it via spark.checkpoint.dir or
-    // setCheckpointDir upstream; this workRoot default serves single-host
-    // deployments (incl. the bench/cluster_submit.sh standalone demo,
-    // where all executor JVMs share the local filesystem).
-    if (spark.sparkContext.getCheckpointDir.isEmpty)
-      spark.sparkContext.setCheckpointDir(s"$workRoot/_spark_ckpt")
-
+    val spark = AppSession("graft-er-pipeline", workRoot)
     run(spark, workRoot, nEntities, seed, inputPath)
     spark.stop()
   }
 
   def run(spark: SparkSession, workRoot: String, nEntities: Long, seed: Long,
-      inputPath: Option[String], cfg: ERPipeline.Config = ERPipeline.Config())
-      : DataFrame = {
+      inputPath: Option[String]): DataFrame = {
+    val cfg = ERPipeline.Config()
     val pages = Snapshots.getOrCompute(spark, workRoot, "pages") {
       inputPath.map(spark.read.parquet(_))
         .getOrElse(PageGen.pages(spark, nEntities, seed))

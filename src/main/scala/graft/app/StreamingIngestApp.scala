@@ -48,15 +48,7 @@ object StreamingIngestApp {
     val Array(workRoot, corpusPath, incomingDir) = args.take(3)
     val follow = args.contains("--follow")
 
-    val spark = SparkSession.builder()
-      .appName("graft-er-streaming-ingest")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    if (spark.sparkContext.getCheckpointDir.isEmpty)
-      spark.sparkContext.setCheckpointDir(s"$workRoot/_spark_ckpt")
-
+    val spark = AppSession("graft-er-streaming-ingest", workRoot)
     val q = start(spark, workRoot, spark.read.parquet(corpusPath),
       incomingDir, follow = follow)
     q.awaitTermination()
@@ -67,15 +59,15 @@ object StreamingIngestApp {
     * starts the sink query. Exposed for tests (MemoryStream-free — tests
     * drive a real file source with AvailableNow). */
   def start(spark: SparkSession, workRoot: String, corpusPages: DataFrame,
-      incomingDir: String, cfg: ERPipeline.Config = ERPipeline.Config(),
-      follow: Boolean = false, lateness: String = "1 hour") = {
+      incomingDir: String, follow: Boolean = false) = {
     // one-time corpus prep, resumable: extract + block land as snapshots
     val extracted = Snapshots.getOrCompute(spark, workRoot, "extracted") {
       ERPipeline.extract(corpusPages)
     }
-    val stop = ERPipeline.tokenStoplist(extracted, cfg)
+    // one stoplist keys both the corpus blocks and the stream
+    val stop = ERPipeline.tokenStoplist(extracted)
     val blocked = Snapshots.getOrCompute(spark, workRoot, "blocked") {
-      ERPipeline.block(extracted, cfg)
+      ERPipeline.blockKeys(extracted, stop)
     }
     // static side of the join: slim + MATERIALIZED (the static plan is
     // re-evaluated per micro-batch otherwise); streamingMatches caps its
@@ -84,7 +76,7 @@ object StreamingIngestApp {
     val slim = Materialize(blocked.select(col("block_key"), col("id")))
     val stream = spark.readStream.schema(pageSchema).parquet(incomingDir)
     val (matches, drops) = Streaming.streamingMatches(stream, extracted,
-      slim, stopTokens = stop, cfg = cfg, lateness = lateness)
+      slim, stopTokens = stop)
     Snapshots.commit(spark, drops, workRoot, "cap_drops")
     matches.writeStream
       .format("parquet")

@@ -3,27 +3,19 @@ package graft.block
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
-import org.apache.spark.sql.types._
 
 /**
- * Blocking-key generation: normalized-domain keys + MinHash-LSH token
- * signatures (north_rule; SURVEY.md §7.2 M4). Everything is built-in
- * codegen'd expressions — the MinHash family is `xxhash64` with a
- * per-function seed prefix, so signatures are deterministic across runs
- * and parallelism levels.
+ * Blocking-key generation: exact token-set fingerprints + MinHash-LSH
+ * token signatures (north_rule; SURVEY.md §7.2 M4). The MinHash family is
+ * one JVM function per row over a fixed hash family, so signatures are
+ * deterministic across runs and parallelism levels.
  *
  * Scale design (100 TB): key generation is a narrow map; the only shuffle
- * is the explode+self-join downstream. Skewed blocks (mega-hosts, common
- * shingle bands) are (a) salted via `saltKey`, and (b) hard-capped per
- * block with the cap surfaced in a metrics table — no silent drops.
+ * is the explode+self-join downstream. Oversized blocks (common shingle
+ * bands) are split into sub-blocks with the split surfaced in a stats
+ * table — no silent drops.
  */
 object Blocking {
-
-  /** Normalized host from a URL: lowercase, strip scheme/www/port/path. */
-  def normalizedDomain(url: Column): Column = {
-    val host = regexp_extract(lower(url), "^(?:[a-z][a-z0-9+.-]*://)?(?:[^/@]*@)?([^/:?#]+)", 1)
-    regexp_replace(host, "^www\\.", "")
-  }
 
   /** splitmix64 finalizer — deterministic 64-bit mixing. */
   @inline private def mix64(x0: Long): Long = {
@@ -81,13 +73,6 @@ object Blocking {
   def minhashBlocks(df: DataFrame, tokensCol: Column, bands: Int,
       rowsPerBand: Int, keyName: String = "block_key"): DataFrame =
     df.withColumn(keyName, explode(bandKeysUdf(bands, rowsPerBand)(tokensCol)))
-
-  /** Salt a hot key into `salts` sub-keys, deterministically by row id.
-    * Use for block families where one key dominates (e.g. a mega-host):
-    * pairs are then generated within sub-blocks only — recall loss is
-    * bounded and surfaced by the caller's metrics. */
-  def saltKey(key: Column, id: Column, salts: Int): Column =
-    concat_ws("#", key, pmod(xxhash64(id), lit(salts)).cast(StringType))
 
   /** Exact set fingerprint of a token array (order-insensitive): the
     * cheap key family that guarantees recall for records whose normalized

@@ -28,6 +28,11 @@ import graft.io.Materialize
  */
 object ConnectedComponents {
 
+  /** Round budget of the distributed path: O(log n) rounds converge far
+    * below it; hitting it fails loudly instead of returning a partial
+    * closure. */
+  private val MaxIter = 50
+
   /** @param edges DataFrame with two numeric columns (src, dst).
     * @param driverUnionFindMaxEdges adaptive small-graph cutoff: when the
     *   DEDUPED edge set (counted for free by the first round's observe
@@ -46,7 +51,7 @@ object ConnectedComponents {
     *   union always roots the smaller id, spec-pinned against the
     *   distributed path). Set to 0 to force the distributed path.
     * @return DataFrame(id LONG, component LONG), one row per distinct node. */
-  def run(spark: SparkSession, edges: DataFrame, maxIter: Int = 50,
+  def run(spark: SparkSession, edges: DataFrame,
       driverUnionFindMaxEdges: Long = 500000L): DataFrame = {
     import spark.implicits._
     val base = edges.toDF("src", "dst")
@@ -93,7 +98,7 @@ object ConnectedComponents {
       .union(cur.select($"v".as("id"))).distinct()
     var converged = false
     var iter = 0
-    while (!converged && iter < maxIter) {
+    while (!converged && iter < MaxIter) {
       // --- large-star: connect strictly-larger neighbors to the min ------
       // symmetrized adjacency
       val adj = cur.select($"u", $"v")
@@ -129,7 +134,7 @@ object ConnectedComponents {
       cur = smallP
       iter += 1
     }
-    require(converged, s"connected components did not converge in $maxIter rounds")
+    require(converged, s"connected components did not converge in $MaxIter rounds")
 
     // After convergence the graph is a union of stars rooted at component
     // minima: every edge is (member, root).

@@ -82,16 +82,16 @@ object Dedup {
     f(textCol)
   }
 
-  /** MinHash-LSH near-duplicate pairs + block-split stats, verified by
-    * exact w-shingle Jaccard >= `jaccardFloor`.
+  /** MinHash-LSH near-duplicate pairs, verified by exact w-shingle
+    * Jaccard >= `jaccardFloor`.
     *
     * Shuffle discipline (same as ERPipeline.scorePairs): the band self-
     * join and pair dedup run on SLIM rows (block_key, id — 16 bytes);
     * shingle arrays are re-attached by two id-joins only for the verify
     * step, so document bodies never ride through the block shuffle.
-    * Oversized bands are SPLIT (grouped by exact shingle fingerprint, so
-    * exact-duplicate recall is preserved), never row-capped — no silent
-    * drops; the split stats table is returned alongside the pairs.
+    * Bands over 500 rows are SPLIT (grouped by exact shingle fingerprint,
+    * so exact-duplicate recall is preserved), never row-capped — no rows
+    * are dropped.
     *
     * The two frames more than one downstream arm consumes are
     * materialized: the shingled base (verify joins on both pair sides)
@@ -99,35 +99,25 @@ object Dedup {
     * sides). Otherwise the tokenize/shingle chain and the band-key UDF
     * are re-evaluated once per consumer (measured 3× on the bench
     * corpus). */
-  def minhashPairsWithStats(docs: DataFrame, idCol: Column, textCol: Column,
-      bands: Int, rowsPerBand: Int, jaccardFloor: Double,
-      blockCap: Int = 500): (DataFrame, DataFrame) = {
+  def minhashPairs(docs: DataFrame, idCol: Column, textCol: Column,
+      bands: Int, rowsPerBand: Int, jaccardFloor: Double): DataFrame = {
     val base = Materialize(docs.select(idCol.as("id"), wordShingles(textCol).as("sh"))
       .withColumn("fp", Blocking.tokenFingerprint(col("sh"))))
     val blocked = Materialize(Blocking.minhashBlocks(
       base.select(col("id"), col("fp"), col("sh").as("tokens")), col("tokens"),
       bands, rowsPerBand).select("block_key", "id", "fp"))
-    val (split, stats) =
-      Blocking.splitOversizedBlocks(blocked, "block_key", "fp", blockCap)
+    val (split, _) =
+      Blocking.splitOversizedBlocks(blocked, "block_key", "fp", cap = 500)
     val idPairs = Blocking.candidatePairs(split, "block_key", "id", Nil)
       .select(col("l_id"), col("r_id"))
     val shingleSide = base.select(col("id"), col("sh"))
     val pairs = idPairs
       .join(shingleSide.toDF("l_id", "l_sh"), Seq("l_id"))
       .join(shingleSide.toDF("r_id", "r_sh"), Seq("r_id"))
-    val verified = pairs.select(col("l_id"), col("r_id"),
+    pairs.select(col("l_id"), col("r_id"),
         Similarity.jaccard(col("l_sh"), col("r_sh")).as("jaccard"))
       .where(col("jaccard") >= jaccardFloor)
-    (verified, stats)
   }
-
-  /** Pairs-only view of `minhashPairsWithStats` (splitting drops no rows,
-    * so discarding the stats table loses information, not data). */
-  def minhashPairs(docs: DataFrame, idCol: Column, textCol: Column,
-      bands: Int, rowsPerBand: Int, jaccardFloor: Double,
-      blockCap: Int = 500): DataFrame =
-    minhashPairsWithStats(docs, idCol, textCol, bands, rowsPerBand,
-      jaccardFloor, blockCap)._1
 
   /** Corpus-side MinHash band index: one slim (block_key, id) row per
     * band per document. This is the artifact an INCREMENTAL pipeline

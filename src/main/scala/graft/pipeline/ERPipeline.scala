@@ -15,7 +15,7 @@ import graft.score.Similarity
  *
  *   pages(url, warc_ts, html, text, lang)
  *     → extract canonical text          (reference-parity extractor, §2.4)
- *     → blocking keys                   (normalized domain ∪ MinHash-LSH)
+ *     → blocking keys                   (token fingerprint ∪ MinHash-LSH)
  *     → candidate pairs                 (blocked self-join, capped, deduped)
  *     → pairwise scoring                (Jaro-Winkler + Levenshtein + token
  *                                        cosine/Jaccard; model-token guard)
@@ -43,52 +43,52 @@ object ERPipeline {
   private val wJac = 0.30
 
   // Band geometry: same-entity pages have identical normalized token sets
-  // (sig collision P=1 in every band), so recall stays 1.0 while 6-row
-  // bands suppress near-miss cross-entity collisions (P = j^6 per band —
-  // j=0.75 token overlap → 0.18) that otherwise quadratically inflate
+  // (sig collision P=1 in every band), so recall stays 1.0 while 8-row
+  // bands suppress near-miss cross-entity collisions (P = j^8 per band —
+  // j=0.75 token overlap → 0.10) that otherwise quadratically inflate
   // blocks on low-entropy corpora.
+  private val MinhashBands = 8
+  private val MinhashRows = 8
+
+  /** Tokens present in more than this fraction of pages are excluded from
+    * the LSH token set (never from scoring): ubiquitous tokens ("laptop",
+    * "inch") raise the background Jaccard j_bg of random pairs, and LSH
+    * contamination grows as n²·bands·j_bg^rows — measured 31M candidate
+    * pairs for 180k pages without this. The high-DF set is tiny by
+    * construction (≤ 1/MaxTokenDf tokens), so the driver-side collect is
+    * bounded at any corpus size. */
+  private val MaxTokenDf = 0.25
+
+  /** Rows kept per block key: the batch scorer splits larger blocks into
+    * sub-blocks of about this size, the streaming matcher caps its static
+    * side at it. */
+  private[graft] val PairCapPerBlock = 256
+
+  /** Clustering threshold on the weighted pair score. */
+  private[graft] val ScoreThreshold = 0.90
+
+  /** @param payloadBroadcastMaxRows scorePairs broadcasts the payload side
+    *   of its two id-joins up to this many extracted rows, and shuffle-
+    *   joins beyond it.
+    * @param pruneHeavySims PPJoin-family upper-bound pruning (Xiao et al.,
+    *   WWW '08 prefix filtering, adapted to a weighted score): jw and lev
+    *   are bounded by 1, so a pair with wJw + wLev + wCos·cos + wJac·jac <
+    *   scoreThreshold can NEVER cluster regardless of its string
+    *   similarities — the edit-distance loops (the O(|s|²) per-pair hot
+    *   spot) are skipped for it and its jw/lev are reported as 0.0.
+    *   Cluster output is bit-identical with pruning on or off (spec-pinned
+    *   against the unpruned path); only the sub-threshold diagnostic
+    *   columns differ. On LSH-blocked web corpora the cheap token measures
+    *   disqualify the vast majority of candidates, cutting per-pair compute
+    *   AND allocation traffic (the GC-bound serial fraction that caps
+    *   multi-core scaling). */
   final case class Config(
-      minhashBands: Int = 8,
-      minhashRows: Int = 8,
-      /** Tokens present in more than this fraction of pages are excluded
-        * from the LSH token set (never from scoring): ubiquitous tokens
-        * ("laptop", "inch") raise the background Jaccard j_bg of random
-        * pairs, and LSH contamination grows as n²·bands·j_bg^rows —
-        * measured 31M candidate pairs for 180k pages without this. The
-        * high-DF set is tiny by construction (≤ 1/maxDf tokens), so the
-        * driver-side collect is bounded at any corpus size. */
-      maxTokenDf: Double = 0.25,
-      pairCapPerBlock: Int = 256,
       payloadBroadcastMaxRows: Long = 2_000_000L,
-      scoreThreshold: Double = 0.90,
-      useDomainKeys: Boolean = false, // domain blocks = vendor sites here:
-                                      // same entity spans hosts, so LSH is
-                                      // the recall path; domain keys are an
-                                      // optional extra family
-      /** Salt count for the domain-key family: a mega-host block (one
-        * domain with 10^8 pages) otherwise generates a quadratic pair
-        * blowup in a single task. Salting by id bounds each sub-block;
-        * cross-salt pairs within a domain are intentionally ceded to the
-        * LSH family (which keys on content, not host). */
-      domainSalts: Int = 16,
-      /** Record identity is xxhash64(url); 64-bit birthday collisions are
-        * statistically certain at 10^12 docs (silently merging entities).
-        * This guard costs one distinct-count aggregate — keep it on for
-        * validation runs, budget it consciously at full scale. */
-      checkIdCollisions: Boolean = true,
-      /** PPJoin-family upper-bound pruning (Xiao et al., WWW '08 prefix
-        * filtering, adapted to a weighted score): jw and lev are bounded by
-        * 1, so a pair with wJw + wLev + wCos·cos + wJac·jac < scoreThreshold
-        * can NEVER cluster regardless of its string similarities — the
-        * edit-distance loops (the O(|s|²) per-pair hot spot) are skipped
-        * for it and its jw/lev are reported as 0.0. Cluster output is
-        * bit-identical with pruning on or off (spec-pinned); only the
-        * sub-threshold diagnostic columns differ. On LSH-blocked web
-        * corpora the cheap token measures disqualify the vast majority of
-        * candidates, cutting per-pair compute AND allocation traffic (the
-        * GC-bound serial fraction that caps multi-core scaling). */
-      pruneHeavySims: Boolean = true,
-      maxCcIterations: Int = 50)
+      pruneHeavySims: Boolean = true) {
+    /** The fixed clustering threshold, for callers that count pairs at or
+      * above it. */
+    def scoreThreshold: Double = ScoreThreshold
+  }
 
   /** Stage 1: canonical text per url (per-row invariant vs the reference
     * extractor — GraftFunctions.extractTitleUdf is the parity chain).
@@ -105,19 +105,15 @@ object ERPipeline {
       .withColumn("model_tokens", Normalize.modelTokens(col("norm_title")))
       .withColumn("token_fp", Blocking.tokenFingerprint(col("tokens")))
 
-  /** Stage 2: blocking keys — one row per (block_key, page). Two key
-    * families: the exact token-set fingerprint (recall = 1.0 for records
-    * that normalize identically, immune to LSH geometry) plus MinHash-LSH
-    * bands for fuzzy matches; optional normalized-domain family. */
   /** High-DF token stoplist over an extracted corpus (two scale-free
     * jobs: agg + tiny collect). PUBLIC because every key-generation twin
     * of this pipeline — notably `Streaming.streamingMatches` — must use
     * the SAME stoplist as `block()` or its band keys silently stop
     * colliding with the corpus's. */
-  def tokenStoplist(extracted: DataFrame, cfg: Config,
+  def tokenStoplist(extracted: DataFrame,
       nRows: Option[Long] = None): Seq[String] = {
     val n = nRows.getOrElse(extracted.count())
-    val maxDf = math.max(1L, (n * cfg.maxTokenDf).toLong)
+    val maxDf = math.max(1L, (n * MaxTokenDf).toLong)
     extracted
       .select(explode(array_distinct(col("tokens"))).as("t"))
       .groupBy("t").agg(count(lit(1)).as("df"))
@@ -125,26 +121,31 @@ object ERPipeline {
       .select("t").collect().map(_.getString(0)).sorted.toSeq
   }
 
-  def block(extracted: DataFrame, cfg: Config,
-      nRows: Option[Long] = None): DataFrame = {
-    val stop = tokenStoplist(extracted, cfg, nRows)
+  /** Block keys of extracted rows under a given stoplist — one row per
+    * (block_key, row), extracted columns carried through. Two key
+    * families: the exact token-set fingerprint (recall = 1.0 for records
+    * that normalize identically, immune to LSH geometry) plus MinHash-LSH
+    * bands over the stoplisted tokens for fuzzy matches. The SINGLE key
+    * formula for the batch blocker and the streaming twin
+    * (`Streaming.streamingMatches`): a streamed page and a corpus page
+    * meet only if their keys collide. */
+  private[graft] def blockKeys(extracted: DataFrame, stop: Seq[String])
+      : DataFrame = {
     val lshTokens =
       if (stop.isEmpty) col("tokens")
       else array_except(col("tokens"), array(stop.map(lit): _*))
     val lsh = Blocking.minhashBlocks(
       extracted.withColumn("lsh_tokens", lshTokens), col("lsh_tokens"),
-      cfg.minhashBands, cfg.minhashRows).drop("lsh_tokens")
-    val fp = extracted.withColumn("block_key", col("token_fp"))
-      .select(lsh.columns.map(col): _*)
-    val base = lsh.unionByName(fp)
-    if (!cfg.useDomainKeys) base
-    else base.unionByName(extracted.withColumn("block_key",
-      // north_rule skew handling: salt the host key so one mega-host
-      // cannot form a single quadratic block (Blocking.saltKey)
-      xxhash64(Blocking.saltKey(
-        Blocking.normalizedDomain(col("url")), col("id"), cfg.domainSalts)))
-      .select(lsh.columns.map(col): _*))
+      MinhashBands, MinhashRows).drop("lsh_tokens")
+    lsh.unionByName(extracted.withColumn("block_key", col("token_fp")))
   }
+
+  /** Stage 2: blocking keys over the corpus's own stoplist. No `cfg`
+    * field affects blocking; the parameter keeps the stage signatures
+    * uniform for their callers. */
+  def block(extracted: DataFrame, cfg: Config,
+      nRows: Option[Long] = None): DataFrame =
+    blockKeys(extracted, tokenStoplist(extracted, nRows))
 
   /** Similarity columns + weighted score over `l_`/`r_`-prefixed payload
     * columns (l_norm_title, l_tokens, l_model_tokens / r_…). The SINGLE
@@ -169,7 +170,7 @@ object ERPipeline {
     // short-circuits per row inside codegen.
     val reachable =
       lit(wJw + wLev) + lit(wCos) * cos + lit(wJac) * jac >=
-        lit(cfg.scoreThreshold)
+        lit(ScoreThreshold)
     val jw = if (cfg.pruneHeavySims) when(reachable, jwRaw).otherwise(lit(0.0)) else jwRaw
     val lev = if (cfg.pruneHeavySims) when(reachable, levRaw).otherwise(lit(0.0)) else levRaw
     // R6 preserve-specificity guard: disjoint model-number tokens on both
@@ -199,7 +200,7 @@ object ERPipeline {
     val slim = Materialize(
       blocked.select(col("block_key"), col("id"), col("token_fp")))
     val (capped, drops) = Blocking.splitOversizedBlocks(slim, "block_key",
-      "token_fp", cfg.pairCapPerBlock)
+      "token_fp", PairCapPerBlock)
     val idPairs = Blocking.candidatePairs(capped, "block_key", "id", Nil)
       .select(col("l_id"), col("r_id"))
     val payload = extracted.select(col("id"), col("url"), col("norm_title"),
@@ -229,9 +230,9 @@ object ERPipeline {
   /** Stage 5: threshold → edges → connected components → (id, component). */
   def cluster(spark: SparkSession, scored: DataFrame, cfg: Config)
       : DataFrame = {
-    val edges = scored.where(col("score") >= cfg.scoreThreshold)
+    val edges = scored.where(col("score") >= ScoreThreshold)
       .select(col("l_id").as("src"), col("r_id").as("dst"))
-    ConnectedComponents.run(spark, edges, cfg.maxCcIterations)
+    ConnectedComponents.run(spark, edges)
   }
 
   /** Full run: returns (clusters(url, id, component), capDrops). Pages with
@@ -244,17 +245,17 @@ object ERPipeline {
     // extract feeds blocking, payload attachment and the final assignment
     // join — materialize once
     val ex = Materialize(extract(pages))
-    // one aggregate job yields the row count AND the collision check
+    // Record identity is xxhash64(url); 64-bit birthday collisions are
+    // statistically certain at 10^12 docs (silently merging entities).
+    // One aggregate job yields the row count AND the collision check
     // (separate count() + countDistinct jobs doubled the driver round-
-    // trips for scalars over the same materialized frame)
-    val n = Some(if (cfg.checkIdCollisions) {
-      val r = ex.agg(count(lit(1)),
-        countDistinct(col("url")), countDistinct(col("id"))).collect()(0)
-      require(r.getLong(1) == r.getLong(2),
-        s"xxhash64(url) id collision: ${r.getLong(1)} urls → ${r.getLong(2)} ids; " +
-          "switch to a wider id before trusting cluster output")
-      r.getLong(0)
-    } else ex.count())
+    // trips for scalars over the same materialized frame).
+    val r = ex.agg(count(lit(1)),
+      countDistinct(col("url")), countDistinct(col("id"))).collect()(0)
+    require(r.getLong(1) == r.getLong(2),
+      s"xxhash64(url) id collision: ${r.getLong(1)} urls → ${r.getLong(2)} ids; " +
+        "switch to a wider id before trusting cluster output")
+    val n = Some(r.getLong(0))
     val blocked = block(ex, cfg, n)
     val (scored, drops) = scorePairs(ex, blocked, cfg, n)
     val comps = cluster(spark, scored, cfg)
@@ -271,7 +272,7 @@ object ERPipeline {
   /** Data-driven threshold selection: P/R/F1 of "match iff score >= t" at
     * each t in `thresholds`, over labeled url pairs — evaluates the raw
     * pair SCORE as a classifier (pre-clustering), i.e. the operator that
-    * justifies (or re-tunes) Config.scoreThreshold from labeled data
+    * justifies (or re-tunes) the score threshold from labeled data
     * instead of folklore. A labeled pair that never became a candidate
     * scores 0.0 (blocked-out pairs are non-matches at every threshold —
     * the same semantics the clustering applies).

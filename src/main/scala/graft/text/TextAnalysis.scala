@@ -168,14 +168,14 @@ object TextAnalysis {
     * documents are dropped from candidate generation (stoplist semantics —
     * the quadratic blowup of a mega-posting is the same failure mode as a
     * mega-LSH-block, and the same fix as ERPipeline's fractional
-    * maxTokenDf: an absolute row cap is meaningless across corpus sizes);
+    * MaxTokenDf: an absolute row cap is meaningless across corpus sizes);
     * pairs that share ONLY boilerplate are intentionally not candidates.
     * The drop is doubly observable: filtered fingerprints lower n_shared
     * (never silently cap pair rows), and the dropped postings surface in
     * the stats table (fp, df) — one row per stoplisted fingerprint.
     *
-    * Two caps with DIFFERENT jobs, mirroring ERPipeline's maxTokenDf +
-    * pairCapPerBlock split exactly:
+    * Two caps with DIFFERENT jobs, mirroring ERPipeline's MaxTokenDf +
+    * PairCapPerBlock split exactly:
     * @param maxPostingsFrac BOILERPLATE semantics — fingerprints in more
     *   than floor(frac × corpus) documents are template noise at any
     *   corpus size, so the threshold must scale with the corpus; never

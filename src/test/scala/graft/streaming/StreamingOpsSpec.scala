@@ -46,7 +46,7 @@ class StreamingOpsSpec extends SparkSuite {
       .map(r => r.getString(0) -> r.getLong(1)).toMap
     val corpus = PageGen.pages(spark, 40, seed = 31L)
     val cex = ERPipeline.extract(corpus).localCheckpoint()
-    val stop = ERPipeline.tokenStoplist(cex, cfg, Some(cex.count()))
+    val stop = ERPipeline.tokenStoplist(cex, Some(cex.count()))
     val cblocked = ERPipeline.block(cex, cfg, Some(cex.count())).localCheckpoint()
     val idToUrl = cex.select("id", "url").collect()
       .map(r => r.getLong(0) -> r.getString(1)).toMap
@@ -57,7 +57,7 @@ class StreamingOpsSpec extends SparkSuite {
     val in = MemoryStream[(java.sql.Timestamp, String, String)]
     val stream = in.toDF().toDF("ts", "url", "text")
     val (matches, _) = Streaming.streamingMatches(stream, cex, cblocked,
-      stopTokens = stop, cfg = cfg)
+      stopTokens = stop)
     val q = matches.writeStream.format("memory").queryName("er_stream_out")
       .outputMode("append").start()
     try {
@@ -85,21 +85,23 @@ class StreamingOpsSpec extends SparkSuite {
   }
 
   test("capCorpusBlocks bounds hot static blocks deterministically, drops surfaced") {
-    // streamingMatches caps the static corpus it is given (lowest ids win
-    // per block, as BlockingSpec pins) and returns the drops; the stream
-    // is never started, the cap runs at plan build
+    // streamingMatches caps the static corpus it is given at the
+    // production cap (lowest ids win per block, as BlockingSpec pins) and
+    // returns the drops; the stream is never started, the cap runs at
+    // plan build
     implicit val sq = spark.sqlContext
     import graft.pipeline.ERPipeline
-    val corpus = Seq((10L, 7L), (11L, 7L), (12L, 7L), (13L, 8L))
+    val cap = ERPipeline.PairCapPerBlock
+    val corpus = ((0L to cap.toLong).map(i => (10L + i, 7L)) :+ (5000L, 8L))
       .toDF("id", "block_key")
     val cex = ERPipeline.extract(graft.gen.PageGen.pages(spark, 4, seed = 31L))
     val stream = MemoryStream[(java.sql.Timestamp, String, String)].toDF()
       .toDF("ts", "url", "text")
     val (_, drops) = Streaming.streamingMatches(stream, cex, corpus,
-      stopTokens = Nil, cfg = ERPipeline.Config(pairCapPerBlock = 2))
+      stopTokens = Nil)
     val d = drops.collect().map(r => (r.getAs[Long]("block_key"),
       r.getAs[Long]("n_total"), r.getAs[Long]("n_dropped")))
-    assert(d.toSeq === Seq((7L, 3L, 1L)))
+    assert(d.toSeq === Seq((7L, cap + 1L, 1L)))
   }
 
   test("streaming ER ingest: file source + checkpoint restart, no re-emission") {
@@ -117,7 +119,7 @@ class StreamingOpsSpec extends SparkSuite {
       .map(r => r.getString(0) -> r.getLong(1)).toMap
     val corpus = PageGen.pages(spark, 40, seed = 31L)
     val cex = ERPipeline.extract(corpus).localCheckpoint()
-    val stop = ERPipeline.tokenStoplist(cex, cfg, Some(cex.count()))
+    val stop = ERPipeline.tokenStoplist(cex, Some(cex.count()))
     val cblocked = ERPipeline.block(cex, cfg, Some(cex.count())).localCheckpoint()
     val idToUrl = cex.select("id", "url").collect()
       .map(r => r.getLong(0) -> r.getString(1)).toMap
@@ -138,7 +140,7 @@ class StreamingOpsSpec extends SparkSuite {
         .option("maxFilesPerTrigger", 1)
         .parquet(s"$srcDir/*")
       Streaming.streamingMatches(stream, cex, cblocked,
-          stopTokens = stop, cfg = cfg)._1
+          stopTokens = stop)._1
         .writeStream.format("parquet")
         .option("path", sinkDir)
         .option("checkpointLocation", ckptDir)
