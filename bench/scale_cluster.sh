@@ -28,7 +28,7 @@
 # NOT optional on this box: its anon-page first-touch path runs at ~30 MB/s
 # per thread for 4 KB pages, so a lazily-committed heap faults in DURING the
 # measured work, in kernel mode, 4x more of it at the wide level — the
-# round-3..5 "noise storms" were mostly this (see graft.HostPhaseProbe).
+# round-3..5 "noise storms" were mostly this (BENCH/BASELINE.md round 5).
 # THP's 2 MB pages fault 6x faster and pre-touch moves the cost before
 # executor registration (the driver waits via minRegisteredResourcesRatio).
 #

@@ -1,5 +1,6 @@
 package graft.app
 
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.SparkSession
 
 /** The session every app `main` runs on: AQE, UTC session time, WARN
@@ -11,8 +12,9 @@ import org.apache.spark.sql.SparkSession
   * demo, where all executor JVMs share the local filesystem); on a real
   * multi-node cluster pre-set shared storage (HDFS/S3) via
   * spark.checkpoint.dir. The context cleaner deletes a checkpoint once
-  * its frame is unreferenced, so a run's intermediates do not pile up
-  * there. */
+  * its frame is unreferenced, and [[stop]] deletes what is still
+  * referenced at the end of the run, so a run's intermediates do not pile
+  * up there. */
 private[app] object AppSession {
 
   def apply(appName: String, workRoot: String): SparkSession = {
@@ -27,4 +29,18 @@ private[app] object AppSession {
       spark.sparkContext.setCheckpointDir(s"$workRoot/_spark_ckpt")
     spark
   }
+
+  /** Deletes this run's checkpoint directory, then stops the session. */
+  def stop(spark: SparkSession): Unit =
+    try deleteCheckpointDir(spark) finally spark.stop()
+
+  /** Deletes Spark's per-context checkpoint directory (the uuid
+    * subdirectory `setCheckpointDir` made, never its parent, which other
+    * runs may share). */
+  def deleteCheckpointDir(spark: SparkSession): Unit =
+    spark.sparkContext.getCheckpointDir.foreach { d =>
+      val dir = new Path(d)
+      dir.getFileSystem(spark.sparkContext.hadoopConfiguration)
+        .delete(dir, true)
+    }
 }

@@ -57,7 +57,7 @@ object CurationApp {
     val stats = run(spark, workRoot, spark.read.parquet(input),
       eval.map(spark.read.parquet(_)))
     stats.show(truncate = false)
-    spark.stop()
+    AppSession.stop(spark)
   }
 
   /** Returns the per-stage stats table: (stage, rows_in, rows_out,

@@ -29,7 +29,7 @@ object PipelineApp {
 
     val spark = AppSession("graft-er-pipeline", workRoot)
     run(spark, workRoot, nEntities, seed, inputPath)
-    spark.stop()
+    AppSession.stop(spark)
   }
 
   def run(spark: SparkSession, workRoot: String, nEntities: Long, seed: Long,

@@ -52,7 +52,7 @@ object StreamingIngestApp {
     val q = start(spark, workRoot, spark.read.parquet(corpusPath),
       incomingDir, follow = follow)
     q.awaitTermination()
-    spark.stop()
+    AppSession.stop(spark)
   }
 
   /** Builds the corpus side (snapshot-resumed), wires the stream, and

@@ -1,8 +1,8 @@
 package graft.cluster
 
-import org.apache.spark.sql.{DataFrame, Observation, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.graft.ColumnBridge
 import org.apache.spark.sql.types.DecimalType
 import graft.io.Materialize
 
@@ -17,10 +17,13 @@ import graft.io.Materialize
  * where component = the minimum id in the node's component — a total,
  * deterministic labeling, identical at any parallelism level.
  *
- * Scale design: each round is two shuffles (groupBy min + join), O(log n)
- * rounds to converge; materializing every round ([[graft.io.Materialize]])
- * truncates lineage so plan size stays constant. Convergence is detected by an
- * order-independent checksum (count + exact decimal sum of pair hashes)
+ * Scale design: each round is three exchanges — two windows (each star's
+ * per-node minimum is a `min` over the edges partitioned by `u`, not a
+ * groupBy joined back) and one distinct on the small-star output —
+ * O(log n) rounds to converge; materializing every round
+ * ([[graft.io.Materialize]]) truncates lineage so plan size stays
+ * constant. Convergence is detected by an order-independent checksum
+ * (count + exact decimal sum of pair hashes)
  * of the deduped edge set, collected via `observe` DURING the round's own
  * materialization job — zero extra jobs / driver round-trips per round
  * (the driver's per-round serial work is pure Amdahl overhead that caps
@@ -59,24 +62,15 @@ object ConnectedComponents {
       .where($"src" =!= $"dst")
       .select(least($"src", $"dst").as("lo"), greatest($"src", $"dst").as("hi"))
       .distinct()
-    // (node set is derived from the MATERIALIZED first-round edge set below,
-    // not from `base`: deriving it here would re-run the caller's whole
-    // upstream lineage — e.g. a minhash pair generation — a second time
-    // at the final assignment join.)
-
     // Materialize + checksum in ONE job: the order-independent exact
     // checksum (count + decimal sum of pair hashes; decimal keeps ANSI
     // mode overflow-free) rides the materialization job as an observed
-    // metric; both Materialize branches are eager, so it is ready here.
+    // metric.
     def materializeWithChecksum(df: DataFrame)
         : (DataFrame, (Long, java.math.BigDecimal)) = {
-      val obs = Observation()
-      val p = Materialize(df.observe(obs,
+      val (p, m) = Materialize.observed(df,
         count(lit(1)).as("cnt"),
-        sum(xxhash64($"u", $"v").cast(DecimalType(38, 0))).as("cs")))
-      val m = ColumnBridge.metricsOrEmpty(obs)
-      require(m.nonEmpty,
-        "materialization did not surface the convergence checksum")
+        sum(xxhash64($"u", $"v").cast(DecimalType(38, 0))).as("cs"))
       val cs = m("cs") match {
         case null => java.math.BigDecimal.ZERO
         case d: java.math.BigDecimal => d
@@ -90,33 +84,27 @@ object ConnectedComponents {
 
     // Small-graph fast path: the deduped edge count came for free with the
     // first checksum; under the cutoff, collect the (already materialized)
-    // edges and close them on the driver — zero further jobs, and the
-    // result is a LocalRelation the final assignment join can broadcast.
+    // edges and close them on the driver — zero further jobs.
     if (curSum._1 <= driverUnionFindMaxEdges) return unionFindLocal(spark, cur)
 
-    val nodes = cur.select($"u".as("id"))
-      .union(cur.select($"v".as("id"))).distinct()
+    val byU = Window.partitionBy($"u")
     var converged = false
     var iter = 0
     while (!converged && iter < MaxIter) {
       // --- large-star: connect strictly-larger neighbors to the min ------
-      // symmetrized adjacency
-      val adj = cur.select($"u", $"v")
+      // m(u) = min(u, min neighbor) over the symmetrized adjacency; each
+      // neighbor v > u gets the edge (v, m(u)). m(u) <= u < v, so the edge
+      // is already canonical and never a self-loop. Duplicates are left
+      // in: the small-star minimum ignores them and its distinct drops them.
+      val large = cur.select($"u", $"v")
         .union(cur.select($"v".as("u"), $"u".as("v")))
-      val minNbr = adj.groupBy($"u")
-        .agg(min($"v").as("mn"))
-        .select($"u", least($"u", $"mn").as("m"))
-      val large = adj.join(minNbr, "u")
+        .withColumn("m", least($"u", min($"v").over(byU)))
         .where($"v" > $"u")
-        .select($"v".as("a"), $"m".as("b"))
-        .where($"a" =!= $"b")
-        .select(greatest($"a", $"b").as("u"), least($"a", $"b").as("v"))
-        .distinct()
+        .select($"v".as("u"), $"m".as("v"))
 
       // --- small-star: connect smaller-or-equal neighbors + self to min --
-      // operate on edges oriented u > v (all of `large` already are)
-      val minSmall = large.groupBy($"u").agg(min($"v").as("m"))
-      val small = large.join(minSmall, "u")
+      // operates on edges oriented u > v (all of `large` are)
+      val small = large.withColumn("m", min($"v").over(byU))
         .select(explode(array(
             struct($"v".as("a"), $"m".as("b")),
             struct($"u".as("a"), $"m".as("b")))).as("e"))
@@ -137,10 +125,10 @@ object ConnectedComponents {
     require(converged, s"connected components did not converge in $MaxIter rounds")
 
     // After convergence the graph is a union of stars rooted at component
-    // minima: every edge is (member, root).
-    val assign = cur.select($"u".as("id"), $"v".as("component"))
-    nodes.join(assign, Seq("id"), "left")
-      .select($"id", coalesce($"component", $"id").as("component"))
+    // minima: every edge is (member, root), one per member, so each member
+    // is labeled by its edge and each root by itself.
+    cur.select($"u".as("id"), $"v".as("component"))
+      .union(cur.select($"v".as("id"), $"v".as("component")).distinct())
   }
 
   /** Driver-side transitive closure of a collected canonical edge set:

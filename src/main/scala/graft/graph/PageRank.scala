@@ -22,10 +22,12 @@ import graft.io.Materialize
  * at web scale that is the same modeling error as float rounding, but
  * deterministic.
  *
- * Scale shape per round: join ranks→edges on src (both sides
- * hash-partitioned on the join key; edges are repartitioned and
- * materialized ONCE so only the small rank table moves) + one
- * partial-aggregated `groupBy(dst)`. Ranks are one row per node — always the slim side.
+ * Scale shape per round: ranks join the edges on src — at benchmark scale
+ * the rank table (one slim row per node) is broadcast and the edges, with
+ * their loop-invariant outdegree, are materialized ONCE and never move —
+ * then one partial-aggregated `groupBy(id)` exchange sums the received
+ * contributions plus a zero row per node, so there is no per-round join
+ * back onto the node table.
  * Dangling nodes (outdeg 0) keep receiving the teleport share but their
  * retained mass is dropped, the common "remove dangling mass" PageRank
  * variant; callers that need mass conservation add sink self-loops.
@@ -65,28 +67,31 @@ object PageRank {
     val e = Materialize(e0.repartition(col("src")).withColumn("odeg",
       count(lit(1)).over(org.apache.spark.sql.expressions.Window
         .partitionBy($"src"))))
-    val nodes = Materialize(
-      e.select($"src".as("id")).union(e.select($"dst".as("id"))).distinct())
-    // n is the one driver-side scalar (same pattern as IVF's Lloyd loop);
-    // every derived constant is integer arithmetic on it.
-    val n = nodes.count()
+    // n is the one driver-side scalar (same pattern as IVF's Lloyd loop),
+    // counted by the node table's own materialization job; every derived
+    // constant is integer arithmetic on it.
+    val (nodes, nm) = Materialize.observed(
+      e.select($"src".as("id")).union(e.select($"dst".as("id"))).distinct(),
+      count(lit(1)).as("n"))
+    val n = nm("n").asInstanceOf[Long]
     require(n > 0, "PageRank needs at least one edge")
     val teleport = (15L * UNIT / 100L) / n
     // rank0 is a constant projection of the materialized node table — no
     // separate materialization needed
     var rank = nodes.select($"id", lit(UNIT / n).as("r"))
+    // every node contributes 0 to its own sum, so a node nobody links to
+    // still gets its row — one aggregation, no join back onto `nodes`
+    val zeros = nodes.select($"id", lit(0L).as("c"))
     var i = 0
     while (i < iters) {
       // integer DIV, not `/`: Spark's `/` on longs is IEEE double division
       // and a correctly-rounded double quotient can truncate to a
       // different integer than exact integer division near boundaries.
-      val contrib = e.join(rank, e("src") === rank("id"))
+      val next = e.join(rank, e("src") === rank("id"))
         .select($"dst".as("id"),
           expr("(85 * r) DIV (100 * odeg)").as("c"))
-        .groupBy($"id").agg(sum($"c").as("recv"))
-      val next = nodes.join(contrib, Seq("id"), "left")
-        .select($"id",
-          (lit(teleport) + coalesce($"recv", lit(0L))).as("r"))
+        .union(zeros)
+        .groupBy($"id").agg((lit(teleport) + sum($"c")).as("r"))
       // No explicit unpersist of the previous round: Materialize makes no
       // CacheManager entry, and its local blocks are freed by the
       // ContextCleaner once the superseded round's RDD becomes

@@ -1,6 +1,7 @@
 package graft.io
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame, Observation}
+import org.apache.spark.sql.graft.ColumnBridge
 
 /**
  * The one materialization policy for an intermediate that is read more
@@ -23,4 +24,16 @@ private[graft] object Materialize {
   def apply(df: DataFrame): DataFrame =
     if (df.sparkSession.sparkContext.isLocal) df.localCheckpoint()
     else df.checkpoint()
+
+  /** Materializes `df` and returns the named aggregate `metrics` over its
+    * rows, computed by the same job (no extra pass, no driver round-trip).
+    * Fails if the job surfaced no metrics. */
+  def observed(df: DataFrame, metric: Column, more: Column*)
+      : (DataFrame, Map[String, Any]) = {
+    val obs = Observation()
+    val out = apply(df.observe(obs, metric, more: _*))
+    val m = ColumnBridge.metricsOrEmpty(obs)
+    require(m.nonEmpty, "materialization did not surface its observed metrics")
+    (out, m)
+  }
 }

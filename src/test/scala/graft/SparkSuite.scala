@@ -44,4 +44,18 @@ abstract class SparkSuite extends AnyFunSuite {
       (r, jobs.get)
     } finally sc.removeSparkListener(listener)
   }
+
+  /** Runs `body` with broadcast joins off, restoring the settings after:
+    * both the static and the AQE-runtime thresholds, since AQE can re-plan
+    * a small side to broadcast even when the static one is off. */
+  def withNoBroadcast[A](body: => A): A = {
+    val keys = Seq("spark.sql.autoBroadcastJoinThreshold",
+      "spark.sql.adaptive.autoBroadcastJoinThreshold")
+    val prev = keys.map(k => k -> spark.conf.getOption(k))
+    keys.foreach(spark.conf.set(_, "-1"))
+    try body finally prev.foreach {
+      case (k, Some(v)) => spark.conf.set(k, v)
+      case (k, None) => spark.conf.unset(k)
+    }
+  }
 }

@@ -6,6 +6,9 @@ import scala.util.Random
 class ConnectedComponentsSpec extends SparkSuite {
   import ConnectedComponentsSpec._
 
+  /** Spark jobs of the 60-chain forced-distributed fixture. */
+  private val JobCeiling = 22
+
   private def runCc(edges: Seq[(Long, Long)]): Map[Long, Long] = {
     import spark.implicits._
     ConnectedComponents.run(spark, edges.toDF("src", "dst"))
@@ -63,6 +66,62 @@ class ConnectedComponentsSpec extends SparkSuite {
       assert(distributed === small, s"trial $trial")
       assert(distributed === unionFind(edges), s"trial $trial vs reference")
     }
+  }
+
+  /** Forced distributed path: the output rows, as collected. */
+  private def runDistributed(edges: Seq[(Long, Long)]): Seq[(Long, Long)] = {
+    import spark.implicits._
+    ConnectedComponents.run(spark, edges.toDF("src", "dst"),
+      driverUnionFindMaxEdges = 0L).as[(Long, Long)].collect().toSeq
+  }
+
+  /** The distributed path labels like the reference union-find, with
+    * exactly one row per distinct node. */
+  private def assertDistributedMatches(edges: Seq[(Long, Long)]): Unit = {
+    val rows = runDistributed(edges)
+    val want = unionFind(edges)
+    assert(rows.size === want.size, "one row per distinct node")
+    assert(rows.toMap === want)
+  }
+
+  test("distributed path: hub star with 200 leaves") {
+    // the hub is neither the min nor the max id of its component
+    assertDistributedMatches((1L to 200L).map(leaf =>
+      if (leaf % 2 == 0) (100L, leaf * 3) else (leaf * 3, 100L)))
+  }
+
+  test("distributed path: chains of lengths 2, 3, 17 and 64 in one graph") {
+    val rnd = new Random(5)
+    val edges = Seq(2, 3, 17, 64).zipWithIndex.flatMap { case (len, c) =>
+      // ids of one chain in random order, so the min sits mid-chain
+      val ids = rnd.shuffle((0 until len).map(k => 1000L * (c + 1) + k))
+      ids.sliding(2).map(p => (p(0), p(1)))
+    }
+    assertDistributedMatches(rnd.shuffle(edges))
+  }
+
+  test("distributed path: duplicate and reversed edges") {
+    val base = Seq((1L, 2L), (2L, 3L), (7L, 5L), (5L, 6L), (40L, 30L))
+    assertDistributedMatches(
+      base ++ base.map(_.swap) ++ base ++ Seq((3L, 3L), (6L, 7L)))
+  }
+
+  test("distributed path: single-edge graph") {
+    assertDistributedMatches(Seq((9L, 4L)))
+  }
+
+  test("distributed round shape: job ceiling on 60 chains of 8 nodes") {
+    // each chain's 8 ids come from a shuffled pool, so minima sit at
+    // random chain positions; measured at 20 jobs (3 exchanges and one
+    // materialization a round)
+    val rnd = new Random(60)
+    val pool = rnd.shuffle((0L until 480L).toVector)
+    val edges = rnd.shuffle((0 until 60).flatMap { c =>
+      pool.slice(8 * c, 8 * c + 8).sliding(2).map(p => (p(0), p(1)))
+    })
+    val (rows, jobs) = withJobCount(runDistributed(edges))
+    assert(rows.size === 480 && rows.toMap === unionFind(edges))
+    assert(jobs <= JobCeiling, s"distributed CC ran $jobs Spark jobs")
   }
 
   test("self-loops and duplicate edges are harmless") {

@@ -7,6 +7,9 @@ import graft.gen.LinkGen
 class PageRankSpec extends SparkSuite {
   import spark.implicits._
 
+  /** Spark jobs of 10 rounds over the 60-host fixture. */
+  private val JobCeiling = 22
+
   /** Driver-side fixed-point reference: same recurrence, plain Scala. */
   private def reference(edges: Seq[(Long, Long)], iters: Int): Map[Long, Long] = {
     val e = edges.filter { case (s, d) => s != d }.distinct
@@ -42,6 +45,22 @@ class PageRankSpec extends SparkSuite {
       .as[(Long, Long)].collect().toMap
     val want = reference(edgeSeq, iters = 10)
     assert(got === want)
+  }
+
+  test("sort-merge-join rounds (broadcast off) match the reference " +
+      "bit-for-bit") {
+    val got = withNoBroadcast(PageRank.run(spark, links, iters = 10)
+      .as[(Long, Long)].collect().toMap)
+    assert(got === reference(edgeSeq, iters = 10))
+  }
+
+  test("round shape: job ceiling for 10 rounds") {
+    // measured at 20 jobs: one aggregation exchange per round, the node
+    // count observed on its materialization
+    val (got, jobs) = withJobCount(PageRank.run(spark, links, iters = 10)
+      .as[(Long, Long)].collect().toMap)
+    assert(got === reference(edgeSeq, iters = 10))
+    assert(jobs <= JobCeiling, s"PageRank ran $jobs Spark jobs")
   }
 
   test("deterministic across input partitioning") {

@@ -34,19 +34,6 @@ class BucketedSnapshotSpec extends SparkSuite {
     rec(df.queryExecution.executedPlan)
   }
 
-  private def withNoBroadcast[A](body: => A): A = {
-    // both the static and the AQE-runtime broadcast thresholds: AQE can
-    // re-plan a small side to broadcast even when the static one is off
-    val keys = Seq("spark.sql.autoBroadcastJoinThreshold",
-      "spark.sql.adaptive.autoBroadcastJoinThreshold")
-    val prev = keys.map(k => k -> spark.conf.getOption(k))
-    keys.foreach(spark.conf.set(_, "-1"))
-    try body finally prev.foreach {
-      case (k, Some(v)) => spark.conf.set(k, v)
-      case (k, None) => spark.conf.unset(k)
-    }
-  }
-
   test("bucketed-bucketed equi-join and bucket-key aggregation are shuffle-free") {
     val root = Files.createTempDirectory("bucketed").toString
     val corpus = spark.range(0, 1000)
