@@ -1,9 +1,6 @@
 package graft
 
 import org.apache.spark.sql.SparkSession
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart,
-  SparkListenerStageCompleted, SparkListenerTaskEnd}
-import java.util.concurrent.atomic.AtomicLong
 
 /** Optimization-round instrumentation (guide §1): NOT part of the driver
   * contract — Bench.scala stays the artifact of record. Per query this
@@ -20,45 +17,6 @@ import java.util.concurrent.atomic.AtomicLong
   *   SPARK_GRAFT_PLAN_DIR    if set, write <dir>/<query>.txt formatted plans
   */
 object BenchExtra {
-
-  private final class Tally extends SparkListener {
-    val jobs = new AtomicLong
-    val stages = new AtomicLong
-    val tasks = new AtomicLong
-    val shufWrite = new AtomicLong
-    val shufRead = new AtomicLong
-    val jobLog = sys.env.contains("SPARK_GRAFT_EXTRA_JOBLOG")
-    val jobStartNs = new java.util.concurrent.ConcurrentHashMap[Int, (Long, String)]()
-    override def onJobStart(e: SparkListenerJobStart): Unit = {
-      jobs.incrementAndGet()
-      if (jobLog) {
-        val desc = Option(e.properties)
-          .flatMap(p => Option(p.getProperty("spark.job.description")))
-          .getOrElse("")
-        val site = Option(e.properties)
-          .flatMap(p => Option(p.getProperty("callSite.short"))).getOrElse("")
-        jobStartNs.put(e.jobId, (System.nanoTime(), s"$desc | $site"))
-      }
-    }
-    override def onJobEnd(e: org.apache.spark.scheduler.SparkListenerJobEnd): Unit =
-      if (jobLog) {
-        val v = jobStartNs.remove(e.jobId)
-        if (v != null) println(
-          f"  [job ${e.jobId}%4d] ${(System.nanoTime() - v._1) / 1e9}%6.3fs ${v._2}")
-      }
-    override def onStageCompleted(e: SparkListenerStageCompleted): Unit =
-      stages.incrementAndGet()
-    override def onTaskEnd(e: SparkListenerTaskEnd): Unit = {
-      tasks.incrementAndGet()
-      val m = e.taskMetrics
-      if (m != null) {
-        shufWrite.addAndGet(m.shuffleWriteMetrics.bytesWritten)
-        shufRead.addAndGet(m.shuffleReadMetrics.totalBytesRead)
-      }
-    }
-    def snapshot: (Long, Long, Long, Long, Long) =
-      (jobs.get, stages.get, tasks.get, shufWrite.get, shufRead.get)
-  }
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
@@ -97,12 +55,12 @@ object BenchExtra {
       case Some(names) => SparkEntry.queries.filter(q => names(q._1))
       case None => SparkEntry.queries
     }
-    val tally = new Tally
+    val tally = new JobTally
     spark.sparkContext.addSparkListener(tally)
     selected.toSeq.sortBy(_._1).foreach { case (name, fn) =>
       var r = 0
       while (r < reps) {
-        val before = tally.snapshot
+        val before = tally.snapshot(spark.sparkContext)
         spark.sparkContext.setJobDescription(s"$name rep$r")
         val t0 = System.nanoTime()
         val df = fn(spark, sfDir)
@@ -110,10 +68,8 @@ object BenchExtra {
           df.write.format("noop").mode("overwrite").save()
         else df.count()
         val sec = (System.nanoTime() - t0) / 1e9
-        // listener events are async; drain before reading counters
-        org.apache.spark.graft.ListenerBridge.drain(spark.sparkContext, 10000)
-        val after = tally.snapshot
-        println(f"""{"query":"$name","rep":$r,"sec":$sec%.3f,"jobs":${after._1 - before._1},"stages":${after._2 - before._2},"tasks":${after._3 - before._3},"shuf_write_kb":${(after._4 - before._4) / 1024},"shuf_read_kb":${(after._5 - before._5) / 1024}}""")
+        val d = tally.snapshot(spark.sparkContext) - before
+        println(f"""{"query":"$name","rep":$r,"sec":$sec%.3f,"jobs":${d.jobs},"stages":${d.stages},"tasks":${d.tasks},"shuf_write_kb":${d.shuffleWriteBytes / 1024},"shuf_read_kb":${d.shuffleReadBytes / 1024}}""")
         if (r == 0) planDir.foreach { d =>
           new java.io.File(d).mkdirs()
           java.nio.file.Files.writeString(

@@ -214,8 +214,6 @@ object SparkEntry {
     }),
     "doc_fingerprint" -> ((s, dir) => { implicit val sp = s; import s.implicits._
       // 60-bit content fingerprint from md5 — cross-engine checkable
-      // (the rolling-hash fingerprint64 stays the library primitive for
-      // windowed/winnowing use; unit-tested in TextAnalysisSpec)
       t(dir, "documents").select($"doc_id",
         conv(substring(md5($"text"), 1, 15), 16, 10)
           .cast(LongType).as("fingerprint"))
@@ -382,8 +380,7 @@ object SparkEntry {
     }),
     "doc_length_quantiles" -> ((s, dir) => { implicit val sp = s; import s.implicits._
       // exact discrete (nearest-rank) per-language length quantiles —
-      // always a real data value, so bit-exact cross-engine. The approx
-      // (sketch) scale path is pinned to this one in QuantilesSpec.
+      // always a real data value, so bit-exact cross-engine.
       graft.ops.Quantiles.exactDisc(t(dir, "documents"),
           $"lang", $"n_chars", Seq(0.25, 0.5, 0.75, 0.9, 0.99))
         .withColumnRenamed("g", "lang")

@@ -14,22 +14,25 @@ import org.apache.spark.sql.types._
  */
 object Ann {
 
-  /** Cosine similarity of two float-vector columns as ONE compact JVM
-    * function — bit-identical to the previous higher-order-expression
-    * formulation (`Similarity.vecCosine` over double-cast arrays): the
-    * same left-fold order (acc += a(i)·b(i) ascending from 0.0), the same
-    * `sqrt(dot(a,a))·sqrt(dot(b,b))` denominator, the same `denom == 0 →
-    * 0.0` guard, null on null/length-mismatched input (what zip_with's
-    * null padding collapsed to).
+  /** Cosine similarity of two numeric-vector columns as ONE compact JVM
+    * function: a left fold in doubles (acc += a(i)·b(i) ascending from
+    * 0.0), denominator `sqrt(dot(a,a))·sqrt(dot(b,b))`, `denom == 0 → 0.0`,
+    * null on a null input, a length mismatch or a null element.
     *
-    * WHY: Catalyst evaluates `aggregate`/`zip_with`/`transform` lambdas
-    * interpreted (CodegenFallback), allocating per element — and the old
-    * CASE expression re-evaluated the two norm folds twice (condition +
-    * else branch): five interpreted O(dim) folds per row. Measured on the
-    * sf0.1 bench: emb_ann_topk 1.23 s → the scan's per-row cost dominated
-    * everything else. One JVM loop does the identical arithmetic in
-    * primitive registers. */
-  private val cosineFloatUdf = udf { (a: Seq[java.lang.Float], b: Seq[java.lang.Float]) =>
+    * The inputs are typed `array<double>`: the analyzer widens an
+    * `array<float>` argument element-wise, which is exact, so a float
+    * vector (every caller in this codebase) and a double vector both
+    * enter the fold at full precision; neither is narrowed to float.
+    *
+    * WHY a JVM function: Catalyst evaluates `aggregate`/`zip_with`/
+    * `transform` lambdas interpreted (CodegenFallback), allocating per
+    * element, and a CASE over the norm folds re-evaluated them twice:
+    * five interpreted O(dim) folds per row. Measured on the sf0.1 bench:
+    * emb_ann_topk 1.23 s → the scan's per-row cost dominated everything
+    * else. One JVM loop does the identical arithmetic in primitive
+    * registers. Reference the result once per projection (PlanSpec pins
+    * one call per row pipeline): every extra reference re-runs the loop. */
+  private val cosineUdf = udf { (a: Seq[java.lang.Double], b: Seq[java.lang.Double]) =>
     var nullElem = a == null || b == null || a.length != b.length
     var dot = 0.0; var na = 0.0; var nb = 0.0
     if (!nullElem) {
@@ -44,18 +47,15 @@ object Ann {
         i += 1
       }
     }
-    (if (nullElem) null   // null input / length mismatch / null element:
-                          // what the old null-padded zip_with fold gave
+    (if (nullElem) null
     else {
       val denom = math.sqrt(na) * math.sqrt(nb)
       java.lang.Double.valueOf(if (denom == 0.0) 0.0 else dot / denom)
     }): java.lang.Double
   }
 
-  /** Float-vector cosine (array<float> columns; other numeric array types
-    * are analyzer-cast to float — pass float vectors, which every caller
-    * in this codebase does). */
-  def cosine(a: Column, b: Column): Column = cosineFloatUdf(a, b)
+  /** Cosine of two numeric-vector columns (see `cosineUdf`). */
+  def cosine(a: Column, b: Column): Column = cosineUdf(a, b)
 
   /** Brute-force top-k neighbors for the first `nQueries` vec_ids.
     * Query side is tiny → broadcast; corpus side never shuffles until the
@@ -139,7 +139,7 @@ object Ann {
   def kmeansAssign(emb: DataFrame, centroids: Array[Array[Double]])
       : DataFrame = {
     // One JVM function instead of nlist interpreted aggregate/zip_with
-    // trees per row (CodegenFallback — see cosineFloatUdf). Bit-identical
+    // trees per row (CodegenFallback — see cosineUdf). Bit-identical
     // to the declarative formulation: same per-centroid left-fold dot,
     // each dot rounded exactly as Spark's Round on DoubleType does
     // (java.math.BigDecimal.valueOf(d).setScale(6, HALF_UP)), first-max

@@ -31,14 +31,6 @@ object Dedup {
           .partitionBy(col("_h")).orderBy(idCol)) === 1)
       .where(col("_keep")).drop("_h", "_keep")
 
-  /** 3-gram character shingles of the normalized text (short strings —
-    * titles, names). For document bodies prefer `wordShingles`: char
-    * n-grams of natural text are shared by nearly all documents, which
-    * collapses LSH into a handful of giant blocks (quadratic pair blowup
-    * — measured 700s vs 8s at sf0.01). */
-  def shingles(textCol: Column, n: Int = 3): Column =
-    GraftFunctions.charShingles(textCol, n)
-
   /** Broder-style w-shingling: distinct word n-grams of the lowercased
     * text, as ONE compact JVM function per row.
     *
@@ -203,28 +195,10 @@ object Dedup {
   def simhash64(textCol: Column): Column =
     simhashUdf(GraftFunctions.tokens(textCol))
 
-  /** Near-dup pairs by SimHash hamming distance <= maxHamming, blocked on
-    * 4 x 16-bit bands (any near pair within hamming<=3 shares >=1 band). */
-  def simhashPairs(docs: DataFrame, idCol: Column, textCol: Column,
-      maxHamming: Int = 3): DataFrame = {
-    val base = docs.select(idCol.as("id"), simhash64(textCol).as("sh"))
-    val banded = base.withColumn("band", explode(array((0 until 4).map { b =>
-      struct(lit(b).as("b"),
-        shiftright(col("sh"), b * 16).bitwiseAND(lit(0xFFFFL)).as("v"))
-    }: _*)))
-    val l = banded.select(col("band"), col("id").as("l_id"), col("sh").as("l_sh"))
-    val r = banded.select(col("band"), col("id").as("r_id"), col("sh").as("r_sh"))
-    l.join(r, Seq("band")).where(col("l_id") < col("r_id"))
-      .dropDuplicates("l_id", "r_id")
-      .withColumn("hamming", bit_count(col("l_sh").bitwiseXOR(col("r_sh"))))
-      .where(col("hamming") <= maxHamming)
-      .select(col("l_id"), col("r_id"), col("hamming"))
-  }
-
   /** Near-dup CANONICALIZATION: transitive closure over similarity pairs
     * → one keeper (min id) per near-dup cluster, one row per document.
     * This is the keep-one step a training-data pipeline runs after any
-    * pair generator above (minhash / simhash / winnowing / embedding
+    * pair generator (minhash bands, winnowing containment, embedding
     * LSH): exact dedup canonicalizes by content hash; near-dup dedup
     * must canonicalize by CONNECTED COMPONENT, because near-duplication
     * is not transitive row-by-row (A~B, B~C, A≁C still collapse to one
@@ -234,7 +208,7 @@ object Dedup {
     * rounds), then one left join back to the doc ids — document bodies
     * are never touched.
     *
-    * @param pairs any (l_id, r_id) pair table from the generators above.
+    * @param pairs any (l_id, r_id) pair table from such a generator.
     * @return (doc_id, keeper) for EVERY document (singletons keep
     *   themselves). */
   def nearDupKeepers(docs: DataFrame, idCol: Column, pairs: DataFrame)

@@ -86,8 +86,4 @@ object ColVal {
       PyText.strip(cleaned)
     } else ""
   }
-
-  /** Render a key->value map back to a COL/VAL line (canonical form). */
-  def render(fields: Seq[(String, String)]): String =
-    fields.map { case (k, v) => s"COL $k VAL $v" }.mkString(" ")
 }

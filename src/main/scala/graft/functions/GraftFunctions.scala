@@ -20,18 +20,6 @@ object GraftFunctions {
   val parseColValRobust = udf((s: String) => ColVal.parseRobust(s))
   val extractTitleUdf = udf((s: String) => ColVal.extractTitle(s))
 
-  /** Fast-path title extraction as pure built-ins (regexp_extract chain).
-    * Equivalent to `extractTitleUdf` on all fixture rows (spec-enforced);
-    * kept for whole-stage-codegen hot paths.
-    * Cite: /root/reference/Converters/computers/computer.py:45-56. */
-  def extractTitleCol(c: Column): Column = {
-    val ws = graft.extract.PyText.WS
-    val raw = regexp_extract(c, s"COL[$ws]+title[$ws]+VAL[$ws]+([^\n]*?)(?=[$ws]+COL[$ws]+|[$ws]*\\z)", 1)
-    val cleaned = regexp_replace(
-      regexp_replace(raw, "\"", ""), "@en|@NL|@fr", "")
-    pyTrim(cleaned)
-  }
-
   /** Python-strip as a built-in chain (unicode whitespace both ends). */
   def pyTrim(c: Column): Column = {
     val ws = graft.extract.PyText.WS
@@ -195,17 +183,6 @@ object GraftFunctions {
   }
 
   val tokensUdf = udf(tokensJvm _)
-
-  /** Character n-gram shingles of the lowercased, ws-normalized string.
-    * The normalized string is bound once via a lambda variable so the
-    * regex chain isn't re-evaluated per shingle (see Dedup.wordShingles). */
-  def charShingles(c: Column, n: Int): Column = {
-    val sh = transform(array(regexp_replace(lower(c), "\\s+", " ")), s => {
-      val count = greatest(length(s) - lit(n - 1), lit(0))
-      transform(sequence(lit(1), count), i => s.substr(i, lit(n)))
-    })
-    array_distinct(element_at(sh, 1))
-  }
 
   /** Register SQL-callable names for the UDF surface. */
   def register(spark: SparkSession): Unit = {

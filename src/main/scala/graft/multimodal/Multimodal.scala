@@ -1,8 +1,6 @@
 package graft.multimodal
 
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
-import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types._
+import org.apache.spark.sql.Dataset
 
 /**
  * Multimodal-column operators for a training-data pipeline: media travel
@@ -155,27 +153,5 @@ object Multimodal {
     val bos = new java.io.ByteArrayOutputStream()
     javax.imageio.ImageIO.write(img, "png", bos)
     bos.toByteArray
-  }
-
-  /** Frame/window sampling plan for time-media: deterministic sample
-    * offsets as a column expression (no decode needed for planning). */
-  def sampleOffsets(durationMs: org.apache.spark.sql.Column, everyMs: Long)
-      : org.apache.spark.sql.Column =
-    sequence(lit(0L), greatest(durationMs - 1, lit(0L)), lit(everyMs))
-
-  /** Synthetic media table derived from the page corpus html payloads
-    * (binary column exercise; deterministic). */
-  def mediaFromPages(spark: SparkSession, pages: DataFrame): Dataset[MediaRow] = {
-    import spark.implicits._
-    pages.select(
-        xxhash64(col("url")).as("media_id"),
-        col("html").as("payload"))
-      .withColumn("meta", struct(
-        lit("image").as("kind"),
-        (pmod(xxhash64(col("media_id")), lit(1024)) + 64).cast(IntegerType).as("width"),
-        (pmod(xxhash64(col("media_id"), lit(1)), lit(768)) + 64).cast(IntegerType).as("height"),
-        lit(0).as("sampleRateHz"),
-        lit(0L).as("durationMs")))
-      .as[MediaRow]
   }
 }

@@ -5,27 +5,20 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 /**
- * Per-group quantiles, two ways:
+ * Per-group exact discrete (nearest-rank, numpy-'lower') quantiles via ONE
+ * hash shuffle + per-group sort. The selected element sits at zero-based
+ * index floor((n-1)·p), so the result is always a real data value — no
+ * interpolation, hence bit-exact cross-engine (the float product (n-1)·p
+ * rounds identically under IEEE-754 in Spark and the DuckDB oracle). Long
+ * output shape (group, p, q) keeps the quantile list a plain column, not a
+ * schema.
  *
- *  - `exactDisc`: exact discrete (nearest-rank, numpy-'lower') quantiles
- *    via ONE hash shuffle + per-group sort. The selected element sits at
- *    zero-based index floor((n-1)·p), so the result is always a real data
- *    value — no interpolation, hence bit-exact cross-engine (the float
- *    product (n-1)·p rounds identically under IEEE-754 in Spark and the
- *    DuckDB oracle). Long output shape (group, p, q) keeps the quantile
- *    list a plain column, not a schema.
- *
- *  - `approx`: the 100 TB path — `approx_percentile` (KLL-style mergeable
- *    sketch) aggregates map-side partials, so the shuffle carries one
- *    sketch per group per partition instead of every row. QuantilesSpec
- *    pins the approx path to the exact one within the sketch's accuracy
- *    bound.
- *
- * The exact variant's window sort is the cost ceiling: per-group work is
- * n·log n in that group's row count and a hot group serializes inside its
- * partition. That is acceptable for telemetry-sized groups (per-language
- * corpus stats); for heavy-tailed groups switch to `approx`, which never
- * materializes a per-row rank.
+ * The window sort is the cost ceiling: per-group work is n·log n in that
+ * group's row count and a hot group serializes inside its partition. That
+ * is acceptable for telemetry-sized groups (per-language corpus stats); a
+ * heavy-tailed group wants Spark's `percentile_approx` (a mergeable sketch
+ * that never materializes a per-row rank), at the price of cross-engine
+ * bit-exactness.
  */
 object Quantiles {
 
@@ -48,15 +41,4 @@ object Quantiles {
       .where(size(col("hit_ps")) > 0)
       .select(col("g"), explode(col("hit_ps")).as("p"), col("v").as("q"))
   }
-
-  /** Sketch-based quantiles with the same output shape. */
-  def approx(df: DataFrame, group: Column, value: Column,
-      ps: Seq[Double], accuracy: Int = 10000): DataFrame =
-    df.groupBy(group.as("g"))
-      .agg(percentile_approx(value, array(ps.map(lit): _*), lit(accuracy))
-        .as("qs"))
-      .select(col("g"),
-        explode(arrays_zip(array(ps.map(lit): _*).as("p"),
-          col("qs").as("q"))).as("z"))
-      .select(col("g"), col("z.p").as("p"), col("z.q").as("q"))
 }

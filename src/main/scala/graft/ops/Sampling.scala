@@ -30,13 +30,11 @@ object Sampling {
     conv(substring(md5(key.cast(StringType)), 1, 15), 16, 10)
       .cast(LongType).cast(DoubleType) / lit(1152921504606846976.0) // 2^60
 
-  /** Keep ~`fraction` of rows, deterministically by key. */
-  def sampleByKey(df: DataFrame, key: Column, fraction: Double): DataFrame =
-    df.where(hashUnit(key) < lit(fraction))
-
-  /** Stratified variant: per-stratum keep fractions with a default for
-    * unlisted strata. Rates compile to a CASE chain — no join, no
-    * driver-side stratum enumeration. */
+  /** Keep, deterministically by key, about the listed fraction of each
+    * stratum's rows and `defaultRate` of every unlisted stratum's
+    * (`rates = Nil` is the flat sample).
+    * Rates compile to a CASE chain — no join, no driver-side stratum
+    * enumeration. */
   def stratifiedSampleByKey(df: DataFrame, stratum: Column, key: Column,
       rates: Seq[(String, Double)], defaultRate: Double): DataFrame = {
     val rate = rates.foldRight(lit(defaultRate): Column) {

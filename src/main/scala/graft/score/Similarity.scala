@@ -8,7 +8,8 @@ import org.apache.spark.sql.types.DoubleType
  * Pairwise similarity measures for the scoring stage (SURVEY.md §7.2 M5;
  * north_rule: Jaro-Winkler + Levenshtein on title/url fields plus cosine on
  * token-shingle vectors). Levenshtein is the Spark built-in; Jaro-Winkler is
- * a pure-Scala implementation (no public Spark builtin) exposed as a UDF;
+ * a native Catalyst expression (no public Spark builtin) with a pure-Scala
+ * parity reference;
  * set measures (Jaccard, cosine) are pure higher-order-function column
  * expressions so they stay inside whole-stage codegen.
  */
@@ -66,11 +67,9 @@ object Similarity {
     j + prefix * 0.1 * (1.0 - j)
   }
 
-  val jaroWinklerUdf = udf(jaroWinkler _)
-
   /** Column surface backed by the NATIVE Catalyst expression
-    * (JaroWinklerExpr, codegen'd) — the UDF remains only as the
-    * registration/parity reference. */
+    * (JaroWinklerExpr, codegen'd); `jaroWinkler` above is its
+    * interpreted body and scalar parity reference. */
   def jaro_winkler(a: Column, b: Column): Column = {
     import org.apache.spark.sql.graft.ColumnBridge
     ColumnBridge.column(JaroWinklerExpr(
@@ -99,17 +98,8 @@ object Similarity {
     when(denom === 0.0, lit(0.0)).otherwise(inter / denom)
   }
 
-  /** Cosine similarity of two float-vector columns (array<float>/<double>),
-    * as higher-order expressions: dot / (||a|| * ||b||). */
-  def vecCosine(a: Column, b: Column): Column = {
-    def dot(x: Column, y: Column): Column =
-      aggregate(zip_with(x, y, (p, q) => p * q), lit(0.0d), (acc, v) => acc + v)
-    val denom = sqrt(dot(a, a)) * sqrt(dot(b, b))
-    when(denom === 0.0, lit(0.0)).otherwise(dot(a, b) / denom)
-  }
-
   def register(spark: SparkSession): Unit = {
-    // SQL name bound to the native expression (not the UDF) so
+    // SQL name bound to the native expression so
     // `SELECT jaro_winkler(a, b)` codegens too.
     spark.sessionState.functionRegistry.createOrReplaceTempFunction(
       "jaro_winkler",

@@ -1,50 +1,21 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
 /**
- * Structured Streaming operators for continuous ingestion (the reference
- * is batch-only; these are the rebuild's streaming twins of the batch
- * pipeline — SURVEY.md §2.9):
+ * Structured Streaming ER ingest (the reference is batch-only; this is
+ * the rebuild's streaming twin of the batch match stage — SURVEY.md
+ * §2.9): a stream of new pages scored against a static pre-blocked
+ * corpus, with the candidate-pair dedup bounded by a watermark.
+ * `app/StreamingIngestApp` drives it from a file source.
  *
- *  - watermarked event-time windowed aggregation (the batch
- *    `q9_events_daily` as an incremental query)
- *  - streaming exact dedup (dropDuplicatesWithinWatermark — per-key,
- *    state bounded by the watermark horizon, not corpus size)
- *  - custom keyed state via flatMapGroupsWithState: incremental
- *    per-entity profiles for ER ingestion (count, first/last seen,
- *    token-set fingerprint of the latest title)
- *
- * Scale notes: every operator keys its state on a bounded-cardinality
- * column and carries ids/hashes, not payloads; state stores stay
- * proportional to ACTIVE keys within the watermark, which is the only
- * sustainable shape at a 10^12-event design point.
+ * Scale notes: the only state is the watermark-bounded (l_id, r_id)
+ * dedup — ids, not payloads — so the state store stays proportional to
+ * pairs seen within the horizon, which is the only sustainable shape at
+ * a 10^12-event design point.
  */
 object Streaming {
-
-  /** Event-time daily aggregation with a late-data watermark. `events`
-    * must be a streaming DataFrame with (ts TIMESTAMP, event_type, value).
-    * TIMESTAMP_NTZ parquet sources must cast ts first (Spark watermarks
-    * need LTZ timestamps). */
-  def dailyEventAgg(events: DataFrame, lateness: String = "1 hour"): DataFrame =
-    events
-      .withWatermark("ts", lateness)
-      .groupBy(window(col("ts"), "1 day"), col("event_type"))
-      .agg(count(lit(1)).as("n_events"),
-        sum(col("value").cast("decimal(18,4)")).cast("double").as("sum_value"))
-
-  /** Streaming exact dedup on the KEY alone: keeps the first arrival per
-    * key and drops re-ingests even when they carry a different event
-    * timestamp (the common replay case). `dropDuplicatesWithinWatermark`
-    * bounds state by the watermark horizon — a key's state is evicted once
-    * the watermark passes its last-seen event time + lateness, so state is
-    * proportional to keys ACTIVE within the horizon, not the corpus. */
-  def streamingDedup(docs: DataFrame, tsCol: String, keyCols: Seq[String],
-      lateness: String = "1 hour"): DataFrame =
-    docs.withWatermark(tsCol, lateness)
-      .dropDuplicatesWithinWatermark(keyCols)
 
   /** Streaming ER ingest: score a STREAM of newly-crawled pages against a
     * STATIC pre-blocked corpus — the incremental-matching shape of a
@@ -133,70 +104,5 @@ object Streaming {
       .select(col("ts"), col("l_id"), col("r_id"), col("l_url"), col("r_url"),
         round(col("score"), 6).as("score"))
     (matches, drops)
-  }
-
-  /** Incremental per-entity ingestion profile (ER streaming state). */
-  case class PageEvent(entity_key: Long, url: String, title: String,
-      ts: java.sql.Timestamp)
-  case class EntityProfile(entity_key: Long, n_pages: Long,
-      first_seen: java.sql.Timestamp, last_seen: java.sql.Timestamp,
-      latest_title: String, title_fp: Long)
-
-  /** flatMapGroupsWithState updater: emits the refreshed profile on every
-    * batch that touches the key. State: one small row per active entity,
-    * evicted by an EVENT-TIME timeout `stateTtl` after the entity's last
-    * event — so the store tracks entities active within the watermark
-    * horizon, never the total distinct-key population (the only shape that
-    * survives a 10^12-event design point). A re-appearing entity simply
-    * starts a fresh profile. */
-  def entityProfiles(pages: Dataset[PageEvent], lateness: String = "1 hour",
-      stateTtl: String = "1 hour"): Dataset[EntityProfile] = {
-    import pages.sparkSession.implicits._
-    pages.withWatermark("ts", lateness)
-      .groupByKey(_.entity_key)
-      .flatMapGroupsWithState(OutputMode.Append,
-        GroupStateTimeout.EventTimeTimeout)(updateProfile(stateTtl))
-  }
-
-  private[streaming] def updateProfile(stateTtl: String)(
-      key: Long, events: Iterator[PageEvent],
-      state: GroupState[EntityProfile]): Iterator[EntityProfile] = {
-    if (state.hasTimedOut) {
-      // watermark passed last_seen + ttl: evict, emit nothing
-      state.remove()
-      return Iterator.empty
-    }
-    val evs = events.toSeq.sortBy(_.ts.getTime)
-    if (evs.isEmpty) Iterator.empty
-    else {
-      val prev = state.getOption
-      val latest = evs.last
-      val fp = {
-        // order-insensitive token-set fingerprint (FNV-1a over sorted toks)
-        val toks = latest.title.toLowerCase.split("[^a-z0-9]+")
-          .filter(_.nonEmpty).distinct.sorted
-        var h = -3750763034362895579L
-        toks.foreach { t =>
-          var i = 0
-          while (i < t.length) { h ^= t.charAt(i); h *= 1099511628211L; i += 1 }
-          h ^= ' '; h *= 1099511628211L
-        }
-        h
-      }
-      val next = EntityProfile(
-        entity_key = key,
-        n_pages = prev.map(_.n_pages).getOrElse(0L) + evs.size,
-        first_seen = prev.map(_.first_seen).getOrElse(evs.head.ts),
-        last_seen = latest.ts,
-        latest_title = latest.title,
-        title_fp = fp)
-      state.update(next)
-      // timeout timestamp must exceed the current watermark; late events
-      // (ts below watermark) still refresh the ttl from the watermark
-      state.setTimeoutTimestamp(
-        math.max(latest.ts.getTime, state.getCurrentWatermarkMs() + 1),
-        stateTtl)
-      Iterator.single(next)
-    }
   }
 }

@@ -20,11 +20,8 @@ import org.apache.spark.sql.types._
  * per partition. Nothing in the plan is proportional to corpus bytes
  * except the scan itself.
  *
- * The join key is the n-gram STRING here (the oracle-checked path —
- * DuckDB re-derives the same grams); `flaggedHashed` keys on
- * xxhash64(ngram) instead, which is what the 100 TB path wants (8-byte
- * keys in the broadcast hashmap). DecontaminateSpec pins the two
- * result-identical on the test corpus.
+ * The join key is the n-gram STRING (the oracle-checked path — DuckDB
+ * re-derives the same grams).
  */
 object Decontaminate {
 
@@ -96,25 +93,6 @@ object Decontaminate {
       .distinct()
     docGrams(train, docId, text, n)
       .join(broadcast(evalGrams), "ngram")
-      .groupBy("doc_id")
-      .agg(count(lit(1)).as("n_overlap"))
-  }
-
-  /** The scale variant: identical semantics, but the join key is
-    * xxhash64(ngram) so the broadcast map holds 8-byte keys instead of
-    * ~8·n-byte strings. A hash collision could only ADD a spurious flag
-    * (never lose one), with probability ~|eval_grams|²/2⁶⁴ — acceptable
-    * for a contamination FILTER, not for the oracle, which is why the
-    * string-keyed twin above exists. */
-  def flaggedHashed(train: DataFrame, docId: Column, text: Column,
-      eval: DataFrame, evalText: Column, n: Int): DataFrame = {
-    val evalGrams = eval
-      .select(explode(distinctGramsUdf(n)(evalText)).as("ngram"))
-      .select(xxhash64(col("ngram")).as("gh"))
-      .distinct()
-    docGrams(train, docId, text, n)
-      .select(col("doc_id"), xxhash64(col("ngram")).as("gh")).distinct()
-      .join(broadcast(evalGrams), "gh")
       .groupBy("doc_id")
       .agg(count(lit(1)).as("n_overlap"))
   }

@@ -6,9 +6,10 @@ import org.apache.spark.sql.types._
 
 /**
  * Text-analysis operators for a large-scale training-data pipeline:
- * token counting, quality signals, language-ID heuristics, document
- * fingerprinting. All pure built-in expressions (whole-stage codegen)
- * except the rolling-hash fingerprint (JVM function, still distributed).
+ * token counting, quality counters, a LIKE-based language guess, and
+ * winnowing fingerprints with their containment join. All pure built-in
+ * expressions (whole-stage codegen) except the winnowing rolling hash
+ * (JVM function, still distributed).
  */
 object TextAnalysis {
 
@@ -38,19 +39,6 @@ object TextAnalysis {
     size(regexp_extract_all(lower(c),
       lit("\\b(" + stopwordsEn.mkString("|") + ")\\b"), lit(0)))
 
-  /** Quality score in [0,1]: length-normalized blend of alpha ratio,
-    * stopword density and punctuation penalty (for ranking/filtering;
-    * not oracle-checked — float division). */
-  def qualityScore(c: Column): Column = {
-    val n = greatest(length(c), lit(1)).cast(DoubleType)
-    val alphaRatio = alphaCount(c) / n
-    val stopDensity = least(stopwordCount(c).cast(DoubleType) /
-      greatest(tokenCount(c), lit(1)).cast(DoubleType) * 4.0, lit(1.0))
-    val punctPenalty = least(punctCount(c).cast(DoubleType) / n * 5.0, lit(1.0))
-    round(greatest(least(alphaRatio * 0.5 + stopDensity * 0.5 - punctPenalty * 0.2,
-      lit(1.0)), lit(0.0)), 4)
-  }
-
   /** LIKE-based language guess — semantics chosen to be expressible
     * identically in ANSI SQL (see SparkEntry.oracleSql doc_lang_guess). */
   def langGuessSql(c: Column): Column = {
@@ -59,42 +47,6 @@ object TextAnalysis {
       .when(lo.like("% de %") || lo.like("% la %") || lo.like("% el %"), "es")
       .when(lo.like("% le %") || lo.like("% et %") || lo.like("% les %"), "fr")
       .otherwise("unknown")
-  }
-
-  /** Richer n-gram profile language ID: scores stopword hit-rates per
-    * language over word tokens; returns best language or 'unknown'. */
-  private val langProfiles: Map[String, Seq[String]] = Map(
-    "en" -> Seq("the", "and", "of", "to", "in", "is", "that", "it", "for", "with"),
-    "es" -> Seq("de", "la", "el", "que", "en", "los", "del", "las", "por", "un"),
-    "fr" -> Seq("le", "de", "et", "la", "les", "des", "en", "un", "une", "du"),
-    "nl" -> Seq("de", "het", "een", "en", "van", "ik", "te", "dat", "die", "in"))
-
-  def langIdNgram(c: Column): Column = {
-    val toks = split(lower(c), "\\s+")
-    val n = greatest(size(toks), lit(1)).cast(DoubleType)
-    val scores = langProfiles.toSeq.sortBy(_._1).map { case (lang, words) =>
-      val hits = size(filter(toks, t => t.isin(words: _*)))
-      struct((hits.cast(DoubleType) / n).as("score"), lit(lang).as("lang"))
-    }
-    val best = greatest(scores: _*)
-    when(best.getField("score") >= 0.05, best.getField("lang"))
-      .otherwise(lit("unknown"))
-  }
-
-  /** 64-bit rolling polynomial fingerprint (Rabin-Karp style, base 31,
-    * over UTF-16 code units) — deterministic, order-sensitive document
-    * identity for shard-level dedup bookkeeping. */
-  def fingerprint64(c: Column): Column = {
-    val f = udf { (s: String) =>
-      if (s == null) 0L
-      else {
-        var h = 1125899906842597L
-        var i = 0
-        while (i < s.length) { h = 31 * h + s.charAt(i); i += 1 }
-        h
-      }
-    }
-    f(c)
   }
 
   /** Winnowing document fingerprints (Schleimer, Wilkerson, Aiken:

@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.graft.ListenerBridge
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -27,22 +25,17 @@ abstract class SparkSuite extends AnyFunSuite {
   lazy val spark: SparkSession = TestSpark.spark
 
   /** Runs `body`; returns its result and the number of Spark jobs it
-    * started. The listener bus is drained before and after, so jobs of
-    * earlier work never leak into the count. */
+    * started. `JobTally.snapshot` drains the listener bus before and after,
+    * so jobs of earlier work never leak into the count. */
   def withJobCount[A](body: => A): (A, Int) = {
     val sc = spark.sparkContext
-    val jobs = new java.util.concurrent.atomic.AtomicInteger
-    val listener = new SparkListener {
-      override def onJobStart(e: SparkListenerJobStart): Unit =
-        jobs.incrementAndGet()
-    }
-    ListenerBridge.drain(sc, 10000)
-    sc.addSparkListener(listener)
+    val tally = new JobTally
+    sc.addSparkListener(tally)
     try {
+      val before = tally.snapshot(sc)
       val r = body
-      ListenerBridge.drain(sc, 10000)
-      (r, jobs.get)
-    } finally sc.removeSparkListener(listener)
+      (r, (tally.snapshot(sc) - before).jobs.toInt)
+    } finally sc.removeSparkListener(tally)
   }
 
   /** Runs `body` with broadcast joins off, restoring the settings after:

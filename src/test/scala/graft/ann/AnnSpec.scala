@@ -2,6 +2,7 @@ package graft.ann
 
 import graft.SparkSuite
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{ArrayType, DoubleType}
 
 /** RHP-LSH near-dup recall, cross-checked against brute force on a fixture
   * with PLANTED near-duplicates (the driver's embeddings.parquet fixture
@@ -200,5 +201,27 @@ class AnnSpec extends SparkSuite {
     val b = emb.repartition(7).select($"vec_id", sigs(7).as("s"))
       .as[(Long, Long)].collect().toMap
     assert(a === b)
+  }
+
+  test("cosine keeps array<double> inputs in double; float inputs widen exactly") {
+    // double cosine 0.71343449653, 3.5e-9 below the 6-dp rounding
+    // boundary 0.7134345; narrowing the inputs to float moves it to
+    // 0.71343450631, across the boundary (0.713435)
+    val d = Seq((Seq(1.0, 0.414), Seq(0.425, 1.0))).toDF("a", "b")
+    assert(d.schema("a").dataType === ArrayType(DoubleType, false))
+    assert(d.select(round(Ann.cosine($"a", $"b"), 6)).as[Double].head() ===
+      0.713434)
+    // array<float>: the same double fold over the widened elements
+    val (fa, fb) = (Seq(1.0f, 0.414f), Seq(0.425f, 1.0f))
+    def fold(a: Seq[Double], b: Seq[Double]) = {
+      var dot = 0.0; var na = 0.0; var nb = 0.0
+      a.indices.foreach { i =>
+        dot += a(i) * b(i); na += a(i) * a(i); nb += b(i) * b(i)
+      }
+      dot / (math.sqrt(na) * math.sqrt(nb))
+    }
+    val f = Seq((fa, fb)).toDF("a", "b")
+    assert(f.select(Ann.cosine($"a", $"b")).as[Double].head() ===
+      fold(fa.map(_.toDouble), fb.map(_.toDouble)))
   }
 }

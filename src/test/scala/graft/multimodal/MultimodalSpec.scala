@@ -8,8 +8,14 @@ class MultimodalSpec extends SparkSuite {
   import spark.implicits._
 
   test("binary media plumbing: schema, batching, deterministic features") {
-    val pages = PageGen.pages(spark, 50, seed = 9L)
-    val media = Multimodal.mediaFromPages(spark, pages)
+    // page html bytes as opaque image payloads, typed the way the
+    // multimodal_features query types its mm_media stage
+    val media = PageGen.pages(spark, 50, seed = 9L)
+      .select(xxhash64($"url").as("media_id"), $"html".as("payload"))
+      .withColumn("meta", struct(
+        lit("image").as("kind"), lit(640).as("width"), lit(480).as("height"),
+        lit(0).as("sampleRateHz"), lit(0L).as("durationMs")))
+      .as[Multimodal.MediaRow]
     val feats = Multimodal.extractFeatures(media, dim = 16)
     val rows = feats.collect()
     assert(rows.length === media.count())
@@ -65,13 +71,5 @@ class MultimodalSpec extends SparkSuite {
     val bos2 = new java.io.ByteArrayOutputStream()
     javax.imageio.ImageIO.write(img, "png", bos2)
     assert(Multimodal.decodeImage(bos2.toByteArray, 16).get._1 === cs)
-  }
-
-  test("sample-offset planning is a pure column expression") {
-    val df = Seq((1L, 1000L), (2L, 0L)).toDF("id", "dur")
-      .select($"id", Multimodal.sampleOffsets($"dur", 250L).as("offsets"))
-      .collect().map(r => r.getLong(0) -> r.getSeq[Long](1)).toMap
-    assert(df(1L) === Seq(0L, 250L, 500L, 750L))
-    assert(df(2L) === Seq(0L))
   }
 }

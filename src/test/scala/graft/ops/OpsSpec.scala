@@ -58,16 +58,6 @@ class DedupSpec extends SparkSuite {
     assert(ham(m(1L), m(2L)) <= 20)
     assert(ham(m(1L), m(3L)) >= 20)
   }
-
-  test("simhashPairs blocks recover hamming<=3 neighbors") {
-    val a = "alpha beta gamma delta epsilon zeta eta theta iota kappa"
-    val b = "alpha beta gamma delta epsilon zeta eta theta iota kappb"
-    val docs = Seq((1L, a), (2L, b), (3L, "unrelated text corpus entry"))
-      .toDF("doc_id", "text")
-    val prs = Dedup.simhashPairs(docs, $"doc_id", $"text", maxHamming = 16)
-      .select("l_id", "r_id").as[(Long, Long)].collect().toSet
-    assert(prs.contains((1L, 2L)))
-  }
 }
 
 class AnnSpec extends SparkSuite {
@@ -112,8 +102,7 @@ class TextAnalysisSpec extends SparkSuite {
       TextAnalysis.alphaCount($"text").as("na"),
       TextAnalysis.digitCount($"text").as("nd"),
       TextAnalysis.punctCount($"text").as("np"),
-      TextAnalysis.langGuessSql($"text").as("lang"),
-      TextAnalysis.qualityScore($"text").as("q"))
+      TextAnalysis.langGuessSql($"text").as("lang"))
       .collect().map(r => r.getLong(0) -> r).toMap
     assert(out(1L).getAs[Int]("nt") === 8)
     assert(out(1L).getAs[String]("lang") === "en")
@@ -121,17 +110,6 @@ class TextAnalysisSpec extends SparkSuite {
     assert(out(3L).getAs[String]("lang") === "unknown")
     assert(out(3L).getAs[Int]("nd") === 3)
     assert(out(3L).getAs[Int]("np") === 3)
-    assert(out(1L).getAs[Double]("q") > out(3L).getAs[Double]("q"))
-  }
-
-  test("ngram lang-id picks dominant profile") {
-    val df = Seq(
-      (1L, "the house of the king and the queen is in the north"),
-      (2L, "de het een en van ik te dat die in")).toDF("doc_id", "text")
-    val out = df.select($"doc_id", TextAnalysis.langIdNgram($"text").as("l"))
-      .collect().map(r => r.getLong(0) -> r.getString(1)).toMap
-    assert(out(1L) === "en")
-    assert(out(2L) === "nl")
   }
 
   test("winnowing: shared long substrings share fingerprints; disjoint texts don't") {
@@ -193,14 +171,6 @@ class TextAnalysisSpec extends SparkSuite {
       docs, $"doc_id", $"text", floor = 0.3, maxPostingsFrac = 1.0)
     assert(noDrops.count() === 0L)
     assert(allPairs.count() > pairs.count())
-  }
-
-  test("fingerprint is deterministic and content-sensitive") {
-    val df = Seq((1L, "abc"), (2L, "abc"), (3L, "abd")).toDF("doc_id", "text")
-      .select($"doc_id", TextAnalysis.fingerprint64($"text").as("f"))
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    assert(df(1L) === df(2L))
-    assert(df(1L) !== df(3L))
   }
 }
 

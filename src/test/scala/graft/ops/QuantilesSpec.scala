@@ -1,7 +1,6 @@
 package graft.ops
 
 import graft.SparkSuite
-import org.apache.spark.sql.functions._
 
 class QuantilesSpec extends SparkSuite {
   import spark.implicits._
@@ -39,23 +38,5 @@ class QuantilesSpec extends SparkSuite {
       .orderBy("g", "p").collect().toSeq
     assert(a === b)
     assert(a.size === 9)
-  }
-
-  test("approx (sketch scale path) tracks exact within the accuracy bound") {
-    val df = (0 until 20000).map(i => (s"g${i % 2}", (i * 131 % 7919).toLong))
-      .toDF("g", "v")
-    val ps = Seq(0.1, 0.5, 0.9)
-    val exact = Quantiles.exactDisc(df, $"g", $"v", ps)
-      .as[(String, Double, Long)].collect().map { case (g, p, q) => (g, p) -> q }.toMap
-    val approx = Quantiles.approx(df, $"g", $"v", ps, accuracy = 10000)
-      .as[(String, Double, Long)].collect().map { case (g, p, q) => (g, p) -> q }.toMap
-    assert(approx.keySet === exact.keySet)
-    // accuracy=10000 -> rank error <= n/10000 = 1 rank; values step by <= ~1
-    exact.foreach { case (k, ev) =>
-      assert(math.abs(approx(k) - ev) <= 8, s"$k approx ${approx(k)} vs exact $ev")
-    }
-    // approx shuffles sketches, not rows: partial aggregation present
-    val plan = Quantiles.approx(df, $"g", $"v", ps).queryExecution.executedPlan.toString
-    assert(plan.contains("partial_percentile_approx"), plan)
   }
 }

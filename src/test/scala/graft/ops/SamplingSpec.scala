@@ -1,6 +1,7 @@
 package graft.ops
 
 import graft.SparkSuite
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 class SamplingSpec extends SparkSuite {
@@ -8,30 +9,32 @@ class SamplingSpec extends SparkSuite {
 
   private lazy val keys = (0L until 10000L).toDF("id")
 
+  /** The flat sample: one stratum, no listed rates. */
+  private def sample(df: DataFrame, fraction: Double): DataFrame =
+    Sampling.stratifiedSampleByKey(df, lit(""), $"id", Nil, fraction)
+
   test("sampleByKey: deterministic, repartition-invariant, no shuffle") {
-    val a = Sampling.sampleByKey(keys, $"id", 0.3).select("id").collect().map(_.getLong(0)).toSet
-    val b = Sampling.sampleByKey(keys.repartition(17), $"id", 0.3)
+    val a = sample(keys, 0.3).select("id").collect().map(_.getLong(0)).toSet
+    val b = sample(keys.repartition(17), 0.3)
       .select("id").collect().map(_.getLong(0)).toSet
     assert(a === b)
     // uniform hash: observed rate within 2 percentage points at n=10k
     assert(math.abs(a.size / 10000.0 - 0.3) < 0.02, s"rate ${a.size / 10000.0}")
-    val plan = Sampling.sampleByKey(keys, $"id", 0.3)
-      .queryExecution.executedPlan.toString
+    val plan = sample(keys, 0.3).queryExecution.executedPlan.toString
     assert(!plan.contains("Exchange"), s"sampling must be a narrow filter:\n$plan")
   }
 
   test("consistent across tables: sample of a superset agrees on shared keys") {
     val subset = keys.where($"id" < 4000L)
-    val fromAll = Sampling.sampleByKey(keys, $"id", 0.25)
+    val fromAll = sample(keys, 0.25)
       .where($"id" < 4000L).collect().map(_.getLong(0)).toSet
-    val fromSub = Sampling.sampleByKey(subset, $"id", 0.25)
-      .collect().map(_.getLong(0)).toSet
+    val fromSub = sample(subset, 0.25).collect().map(_.getLong(0)).toSet
     assert(fromAll === fromSub)
   }
 
   test("nested rates: a 10% sample is a subset of the 30% sample (same keys)") {
-    val p10 = Sampling.sampleByKey(keys, $"id", 0.1).collect().map(_.getLong(0)).toSet
-    val p30 = Sampling.sampleByKey(keys, $"id", 0.3).collect().map(_.getLong(0)).toSet
+    val p10 = sample(keys, 0.1).collect().map(_.getLong(0)).toSet
+    val p30 = sample(keys, 0.3).collect().map(_.getLong(0)).toSet
     assert(p10.subsetOf(p30))
   }
 
@@ -45,9 +48,10 @@ class SamplingSpec extends SparkSuite {
     assert(math.abs(rate("en") - 0.5) < 0.04, s"en ${rate("en")}")
     assert(math.abs(rate("de") - 0.2) < 0.04, s"de ${rate("de")}")
     assert(math.abs(rate("xx") - 0.05) < 0.03, s"xx ${rate("xx")}")
-    // stratum membership within one stratum must equal the flat sample at
-    // that stratum's rate — strata only pick the threshold, never the hash
-    val enOnly = Sampling.sampleByKey(rows.where($"lang" === "en"), $"id", 0.5)
+    // stratum membership within one stratum must equal the flat hash
+    // threshold at that stratum's rate — strata only pick the threshold,
+    // never the hash
+    val enOnly = rows.where($"lang" === "en" && Sampling.hashUnit($"id") < 0.5)
       .select("id").collect().map(_.getLong(0)).toSet
     val enStrat = Sampling.stratifiedSampleByKey(rows, $"lang", $"id",
       Seq("en" -> 0.5, "de" -> 0.2), 0.05)

@@ -298,4 +298,29 @@ class PlanSpec extends SparkSuite {
       assert(plan.toString.contains("Generate"), plan.toString)
     } finally spark.conf.set("spark.sql.adaptive.enabled", "true")
   }
+
+  /** JVM-function (ScalaUDF) calls in the optimized plan, counted per set
+    * of input columns they read. A row pipeline must name a UDF's result
+    * once and reference that name: the optimizer does not share repeated
+    * calls, so a second reference re-runs the O(dim)/O(len) loop per row. */
+  private def udfCallsByInput(df: org.apache.spark.sql.DataFrame)
+      : Map[Set[Long], Int] =
+    df.queryExecution.optimizedPlan
+      .flatMap(_.expressions.flatMap(_.collect {
+        case u: org.apache.spark.sql.catalyst.expressions.ScalaUDF => u
+      }))
+      .groupBy(_.references.map(_.exprId.id).toSet)
+      .map { case (in, calls) => in -> calls.size }
+
+  test("emb_ann_topk evaluates the cosine UDF once per row") {
+    val calls = udfCallsByInput(SparkEntry.queries("emb_ann_topk")(spark, dir))
+    assert(calls.values.toSeq === Seq(1), calls)
+  }
+
+  test("doc_decontaminate evaluates the n-gram UDF once per row on each side") {
+    // train docs and eval rows are two pipelines, one UDF call each
+    val calls = udfCallsByInput(
+      SparkEntry.queries("doc_decontaminate")(spark, dir))
+    assert(calls.size === 2 && calls.values.forall(_ == 1), calls)
+  }
 }

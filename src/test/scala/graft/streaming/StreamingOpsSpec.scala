@@ -1,39 +1,12 @@
 package graft.streaming
 
 import graft.SparkSuite
-import org.apache.spark.sql.functions._
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 
 class StreamingOpsSpec extends SparkSuite {
   import spark.implicits._
 
   private def ts(s: String) = java.sql.Timestamp.valueOf(s)
-
-  test("streaming dedup drops duplicate keys within the watermark") {
-    implicit val sq = spark.sqlContext
-    val in = MemoryStream[(java.sql.Timestamp, Long, String)]
-    val df = in.toDF().toDF("ts", "doc_id", "text")
-    val dedup = Streaming.streamingDedup(df, "ts", Seq("doc_id"))
-    val q = dedup.writeStream.format("memory").queryName("dedup_out")
-      .outputMode("append").start()
-    try {
-      in.addData(
-        (ts("2026-01-01 10:00:00"), 1L, "a"),
-        (ts("2026-01-01 10:00:00"), 1L, "a-dup"),
-        (ts("2026-01-01 10:01:00"), 2L, "b"))
-      q.processAllAvailable()
-      in.addData((ts("2026-01-01 10:00:00"), 1L, "a-again"),
-        // re-ingest of key 2 with a DIFFERENT event time (the common
-        // replay case) must also be dropped: dedup is per key, not per
-        // (key, ts)
-        (ts("2026-01-01 10:03:00"), 2L, "b-replayed"),
-        (ts("2026-01-01 10:02:00"), 3L, "c"))
-      q.processAllAvailable()
-      val out = spark.table("dedup_out").select("doc_id")
-        .as[Long].collect().sorted
-      assert(out === Array(1L, 2L, 3L))
-    } finally q.stop()
-  }
 
   test("streaming ER ingest matches new pages to their planted corpus entity") {
     implicit val sq = spark.sqlContext
@@ -177,94 +150,5 @@ class StreamingOpsSpec extends SparkSuite {
     out.foreach { case (lUrl, (_, rId)) =>
       assert(truth(lUrl) === truth(idToUrl(rId)), s"cross-entity $lUrl")
     }
-  }
-
-  test("entity profile state is evicted after the event-time ttl") {
-    implicit val sq = spark.sqlContext
-    val in = MemoryStream[Streaming.PageEvent]
-    val profiles = Streaming.entityProfiles(in.toDS(),
-      lateness = "10 minutes", stateTtl = "1 hour")
-    val q = profiles.writeStream.format("memory").queryName("profiles_ttl")
-      .outputMode("append").start()
-    try {
-      // batch 1: entity 7 and the watermark-driver entity 99
-      in.addData(
-        Streaming.PageEvent(7L, "https://a/1", "Acer Aspire 5",
-          ts("2026-01-01 09:00:00")),
-        Streaming.PageEvent(99L, "https://w/1", "tick",
-          ts("2026-01-01 09:00:00")))
-      q.processAllAvailable()
-      // batch 2 advances the watermark to 12:50 (> 7's 10:00 timeout) …
-      in.addData(Streaming.PageEvent(99L, "https://w/2", "tick",
-        ts("2026-01-01 13:00:00")))
-      q.processAllAvailable()
-      // … batch 3 runs timeout processing with that watermark: 7 evicted
-      in.addData(Streaming.PageEvent(99L, "https://w/3", "tick",
-        ts("2026-01-01 13:01:00")))
-      q.processAllAvailable()
-      // batch 4: entity 7 re-appears — state was removed, profile restarts
-      in.addData(Streaming.PageEvent(7L, "https://a/2", "Acer Aspire 5",
-        ts("2026-01-01 13:30:00")))
-      q.processAllAvailable()
-      val rows7 = spark.table("profiles_ttl")
-        .where(col("entity_key") === 7L)
-        .orderBy("last_seen").as[Streaming.EntityProfile].collect()
-      assert(rows7.length === 2)
-      assert(rows7.last.n_pages === 1L)           // fresh state, not 2
-      assert(rows7.last.first_seen === ts("2026-01-01 13:30:00"))
-    } finally q.stop()
-  }
-
-  test("entity profiles accumulate state across batches (flatMapGroupsWithState)") {
-    implicit val sq = spark.sqlContext
-    val in = MemoryStream[Streaming.PageEvent]
-    val profiles = Streaming.entityProfiles(in.toDS())
-    val q = profiles.writeStream.format("memory").queryName("profiles_out")
-      .outputMode("append").start()
-    try {
-      in.addData(
-        Streaming.PageEvent(7L, "https://a/1", "Acer Aspire 5",
-          ts("2026-01-01 09:00:00")),
-        Streaming.PageEvent(7L, "https://b/1", "acer aspire 5",
-          ts("2026-01-01 10:00:00")))
-      q.processAllAvailable()
-      in.addData(Streaming.PageEvent(7L, "https://c/1", "Aspire 5 Acer",
-        ts("2026-01-01 11:00:00")))
-      q.processAllAvailable()
-      val rows = spark.table("profiles_out")
-        .orderBy("n_pages").as[Streaming.EntityProfile].collect()
-      assert(rows.length === 2)                 // one emission per batch
-      val last = rows.last
-      assert(last.n_pages === 3L)               // state carried across batches
-      assert(last.first_seen === ts("2026-01-01 09:00:00"))
-      assert(last.last_seen === ts("2026-01-01 11:00:00"))
-      // token-set fingerprint is order/case-insensitive: all three titles
-      // share it (same normalized token set)
-      assert(rows.head.title_fp === last.title_fp)
-    } finally q.stop()
-  }
-
-  test("streaming daily agg matches the batch q9 aggregation") {
-    val dir = "/root/testdata/sf0.001"
-    val streamDir = java.nio.file.Files.createTempDirectory("ev2-stream")
-    java.nio.file.Files.copy(
-      java.nio.file.Paths.get(s"$dir/events.parquet"),
-      streamDir.resolve("events.parquet"))
-    val schema = spark.read.parquet(s"$dir/events.parquet").schema
-    val stream = spark.readStream.schema(schema).parquet(streamDir.toString)
-      .withColumn("ts", col("ts").cast("timestamp"))
-    val q = Streaming.dailyEventAgg(stream)
-      .writeStream.outputMode("complete").format("memory")
-      .queryName("daily_agg").start()
-    try {
-      q.processAllAvailable()
-      val streamed = spark.table("daily_agg")
-        .agg(sum("n_events"), round(sum("sum_value"), 4)).collect()(0)
-      val batch = spark.read.parquet(s"$dir/events.parquet")
-        .agg(count(lit(1)), round(sum(col("value").cast("decimal(18,4)"))
-          .cast("double"), 4)).collect()(0)
-      assert(streamed.getLong(0) === batch.getLong(0))
-      assert(streamed.getDouble(1) === batch.getDouble(1))
-    } finally q.stop()
   }
 }

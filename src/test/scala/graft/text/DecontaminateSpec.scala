@@ -35,21 +35,6 @@ class DecontaminateSpec extends SparkSuite {
     assert(out === Map(0L -> 4L, 2L -> 2L))
   }
 
-  test("flaggedHashed is result-identical to the string-keyed path") {
-    val train = (0L until 200L).map(i =>
-      (i, (0 until 12).map(j => s"w${(i * 7 + j * 3) % 40}").mkString(" ")))
-      .toDF("doc_id", "text")
-    val eval = (0L until 10L).map(i =>
-      // same token stride (3) as the train side so 4-grams can collide
-      (0 until 8).map(j => s"w${(i * 5 + j * 3) % 40}").mkString(" "))
-      .toDF("etext")
-    val a = Decontaminate.flagged(train, $"doc_id", $"text", eval, $"etext", 4)
-      .as[(Long, Long)].collect().toMap
-    val b = Decontaminate.flaggedHashed(train, $"doc_id", $"text", eval, $"etext", 4)
-      .as[(Long, Long)].collect().toMap
-    assert(a.nonEmpty && a === b)
-  }
-
   test("plan: eval grams broadcast; corpus side never exchanges pre-join") {
     val train = (0L until 50L).map(i => (i, s"a b c d$i e f")).toDF("doc_id", "text")
     val eval = Seq("a b c d e").toDF("etext")
