@@ -12,6 +12,7 @@ import graft.score.Similarity
 import graft.text.TextAnalysis
 import graft.dedup.Dedup
 import graft.ann.Ann
+import graft.app.CurationApp
 
 /** Driver contract — see /root/repo/SURVEY.md §7 + the builder prompt.
   *
@@ -275,14 +276,12 @@ object SparkEntry {
         .withColumnRenamed("k", "doc_id")
     }),
     "curation_e2e" -> ((s, dir) => { implicit val sp = s; import s.implicits._
-      // the full curation COMPOSITION under one oracle: pii → quality
-      // (char floor + repetition ceiling) → exact dedup → near-dup CC
-      // keepers → decontaminate → mixture → packing, as one declarative
-      // plan (CurationApp wires the same stages with snapshots/stats).
-      // The packed layout depends on every upstream drop decision, so a
-      // single hash-match pins the chain, not just each stage. The
-      // staged corpus plants PII (PiiGen) and exact byte-duplicates
-      // (copies under new ids) so stages 1 and 3 do real work.
+      // the full curation COMPOSITION under one oracle: CurationApp's
+      // stage bodies with this query's literals, plus exact dedup, a
+      // token-budget mixture and packing. The packed layout depends on
+      // every upstream drop decision, so a single hash-match pins the
+      // chain. The staged corpus plants PII (PiiGen) and exact byte-
+      // duplicates (copies under new ids) so stages 1 and 3 do real work.
       val cur = stageOnce(s, "curation_docs", {
         val injected = graft.gen.PiiGen.inject(
           t(dir, "documents"), $"doc_id", $"text")
@@ -291,36 +290,14 @@ object SparkEntry {
         injected.unionByName(copies)
       }, tag = dir)
       val eval = deconEvalFixture(s, dir)
-      val pii = graft.text.Pii.redact(cur, $"doc_id", $"text")
-        .select($"doc_id", $"clean_text")
-        .join(cur.drop("text"), Seq("doc_id"))
-      val sig = graft.text.Repetition.repetitionScore(
-        graft.text.Repetition.signals(pii, $"doc_id", $"clean_text"))
-        .select($"doc_id", $"rep_score")
-      val quality = pii.join(sig, Seq("doc_id"), "left")
-        .where(length($"clean_text") >= 60 &&
-          coalesce($"rep_score", lit(0.0)) <= 0.2)
-        .drop("rep_score")
-      // Stage the post-quality/exact-dedup survivors once: three consumers
-      // (minhash banding, CC keepers, keeper join) would otherwise each
-      // recompute the pii→repetition→quality lineage. Same materialize-
-      // between-stages pattern CurationApp uses with snapshots.
+      val quality = CurationApp.qualityGate(CurationApp.piiScrub(cur),
+        minChars = 60L, maxRepScore = 0.2)
+      // staged: the near-dup stage reads them three times
       val exact = stageOnce(s, "curation_exact",
-        Dedup.exactKeepers(quality, $"clean_text", $"doc_id"), tag = dir)
-      val pairs = Dedup.minhashPairs(exact, $"doc_id", $"clean_text",
-        bands = 8, rowsPerBand = 4, jaccardFloor = 0.7)
-      val keep = Dedup.nearDupKeepers(exact, $"doc_id", pairs)
-        .where($"doc_id" === $"keeper").select("doc_id")
-      val near = exact.join(keep, Seq("doc_id"))
-      val flagged = graft.text.Decontaminate.flagged(near, $"doc_id",
-        $"clean_text", eval, $"text", n = 8)
-      // Materialize the decontaminated survivors once: the mixture stage
-      // consumes them twice (per-domain totals aggregation + the keep-
-      // rate join), and each arm would otherwise re-run the decon gram
-      // scan buried in this lineage. Same stage boundary CurationApp
-      // snapshots.
-      val dec = near.join(flagged.select("doc_id"), Seq("doc_id"), "left_anti")
-        .localCheckpoint()
+        Dedup.exactKeepers(quality, $"text", $"doc_id"), tag = dir)
+      // the mixture reads them twice (per-domain totals, keep-rate join)
+      val dec = graft.io.Materialize(CurationApp.deconKept(
+        CurationApp.nearDupKept(exact, jaccardFloor = 0.7), eval))
       val mixed = graft.ops.Mixture.tokenBudgetSample(dec, $"source",
         $"doc_id", $"n_chars",
         Seq("src0" -> 0.45, "src1" -> 0.25, "src2" -> 0.3), budget = 10000L)
@@ -417,8 +394,8 @@ object SparkEntry {
       // the persisted artifact next to the corpus): the hot-block cap's
       // eager size probe and the band join would otherwise each re-run
       // the band-key UDF over the whole corpus
-      val index = Dedup.minhashBandIndex(docs, $"doc_id", $"text",
-        bands = 8, rowsPerBand = 4).localCheckpoint()
+      val index = graft.io.Materialize(Dedup.minhashBandIndex(docs,
+        $"doc_id", $"text", bands = 8, rowsPerBand = 4))
       Dedup.incrementalMinhashPairs(inc, $"doc_id", $"text", index,
         docs, $"doc_id", $"text", bands = 8, rowsPerBand = 4,
         jaccardFloor = 0.8)

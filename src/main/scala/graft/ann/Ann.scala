@@ -7,7 +7,8 @@ import org.apache.spark.sql.types._
 
 /**
  * Approximate-nearest-neighbor search over an embedding column
- * (array<float>). Baseline: brute-force cosine top-k (broadcast the query
+ * (array<float> or array<double>, read as doubles: float widens exactly).
+ * Baseline: brute-force cosine top-k (broadcast the query
  * side — the scan side streams, no shuffle of the corpus). Scale path:
  * random-hyperplane LSH bucketing so candidate generation is a bucket
  * equi-join instead of a cross join.
@@ -101,7 +102,7 @@ object Ann {
     val seeds = emb.orderBy(xxhash64(col("vec_id")), col("vec_id"))
       .limit(nlist)
       .select(col("embedding")).collect()
-      .map(_.getSeq[Float](0).map(_.toDouble).toArray)
+      .map(_.getSeq[Number](0).map(_.doubleValue).toArray)
     var cents = seeds
     var it = 0
     while (it < lloydIters) {
@@ -145,7 +146,7 @@ object Ann {
     // (java.math.BigDecimal.valueOf(d).setScale(6, HALF_UP)), first-max
     // tie-break replicating array_position(arr, array_max(arr)).
     val dim = if (centroids.isEmpty) 0 else centroids(0).length
-    val assignUdf = udf { (v: Seq[java.lang.Float]) =>
+    val assignUdf = udf { (v: Seq[java.lang.Double]) =>
       // null / length-mismatched / null-element vectors: the old
       // zip_with chain nulled every dot, array_max over all-null gave a
       // null topic and dot — return a null struct for the same rows
@@ -180,7 +181,7 @@ object Ann {
     * a per-centroid expression tree would blow up plan size the same way
     * the MinHash expression family did — see Blocking.bandKeysUdf). */
   def nearestList(emb: Column, centroids: Array[Array[Double]]): Column = {
-    val f = udf { (v: Seq[Float]) =>
+    val f = udf { (v: Seq[Double]) =>
       var best = 0; var bestDot = Double.MinValue
       var l = 0
       while (l < centroids.length) {
@@ -213,7 +214,7 @@ object Ann {
     // per-query probe lists computed on the driver (queries are few by
     // contract; the corpus-side work is the distributed part)
     val probeRows = queries.flatMap { r =>
-      val q = r.getSeq[Float](1).map(_.toDouble).toArray
+      val q = r.getSeq[Number](1).map(_.doubleValue).toArray
       val byDot = cents.zipWithIndex.map { case (c, i) =>
         (c.zip(q).map { case (a, b) => a * b }.sum, i)
       }.sortBy(-_._1).take(nprobe).map(_._2)
@@ -222,8 +223,9 @@ object Ann {
     val spark = emb.sparkSession
     import spark.implicits._
     val probes = probeRows.toSeq.toDF("query_id", "list_id")
-    val qdf = queries.map(r => (r.getLong(0), r.getSeq[Float](1)))
-      .toSeq.toDF("query_id", "q_emb")
+    val qdf = queries.toSeq.map(r =>
+      (r.getLong(0), r.getSeq[Number](1).map(_.doubleValue)))
+      .toDF("query_id", "q_emb")
     corpus
       .join(broadcast(probes), Seq("list_id"))
       .where(col("vec_id") =!= col("query_id"))
@@ -273,7 +275,7 @@ object Ann {
     // zip_with fold collapsed every bit to).
     val planes = Array.tabulate(bits, dim)((b, j) =>
       if ((mix64(b.toLong * 1000003L + j) & 1L) == 0L) 1.0d else -1.0d)
-    val f = udf { (v: Seq[java.lang.Float]) =>
+    val f = udf { (v: Seq[java.lang.Double]) =>
       // null / mismatched / null-element input: every bit's null-padded
       // fold went null, `when(null > 0)` fell to the 0L branch → sig 0
       if (v == null || v.length != dim || v.exists(_ == null)) 0L

@@ -2,7 +2,6 @@ package graft.app
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types._
 import graft.dedup.Dedup
 import graft.io.Snapshots
 import graft.text.{Decontaminate, Pii, Repetition}
@@ -37,6 +36,12 @@ import graft.text.{Decontaminate, Pii, Repetition}
  * optional `--eval` table needs (text). Without `--eval` the
  * decontamination stage passes everything through (stats row records 0
  * drops) rather than silently skipping.
+ *
+ * Stages 1, 2, 4 and 5 are `piiScrub`, `qualityGate`, `nearDupKept` and
+ * `deconKept` (rows keyed by doc_id, document in `text`, literals as
+ * parameters). Their second caller, the `curation_e2e` query in
+ * `graft.SparkEntry`, chains them with its own literals under the DuckDB
+ * oracle, so the oracle checks this app's stage code.
  */
 object CurationApp {
 
@@ -86,56 +91,23 @@ object CurationApp {
     }
 
     // 1. PII scrub — row-preserving; audit counts ride along as columns
-    val piiClean = staged("pii_clean", docs) { d =>
-      Pii.redact(d, col("doc_id"), col("text"))
-        .join(d.drop("text"), Seq("doc_id"))
-        .withColumnRenamed("clean_text", "text")
-    }
-
-    // 2. quality gate: SCRIPT-NEUTRAL length floor (chars, not Latin
-    // tokens — a zh/ru doc must not die because the tokenizer can't see
-    // it) + repetition ceiling. Signals left-join back by id with a
-    // benign default (no gram evidence -> rep_score 0), so token-less
-    // docs pass through to script-appropriate downstream gates instead
-    // of being silently misattributed to "quality".
-    val quality = staged("quality", piiClean) { d =>
-      val sig = Repetition.repetitionScore(
-        Repetition.signals(d, col("doc_id"), col("text")))
-        .select(col("doc_id"), col("rep_score"))
-      d.join(sig, Seq("doc_id"), "left")
-        .where(length(col("text")) >= 20L &&
-          coalesce(col("rep_score"), lit(0.0)) <= 0.5)
-        .drop("rep_score")
-    }
-
+    val piiClean = staged("pii_clean", docs)(piiScrub)
+    // 2. quality gate — char floor + repetition ceiling
+    val quality = staged("quality", piiClean)(qualityGate(_, 20L, 0.5))
     // 3. exact dedup — keep the min-id representative per content hash
     val exactKept = staged("exact_kept", quality) { d =>
       Dedup.exactKeepers(d, col("text"), col("doc_id"))
     }
-
     // 4. near-dup dedup — pairs → connected components → keeper rows only
-    val nearKept = staged("neardup_kept", exactKept) { d =>
-      val pairs = Dedup.minhashPairs(d, col("doc_id"), col("text"),
-        bands = 8, rowsPerBand = 4, jaccardFloor = 0.8)
-      val keepers = Dedup.nearDupKeepers(d, col("doc_id"), pairs)
-        .where(col("doc_id") === col("keeper")).select("doc_id")
-      d.join(keepers, Seq("doc_id"))
-    }
-
+    val nearKept = staged("neardup_kept", exactKept)(nearDupKept(_, 0.8))
     // 5. decontamination — anti-join the flagged set (eval side broadcast)
-    val deconKept = staged("decon_kept", nearKept) { d =>
-      evalDocs match {
-        case Some(e) =>
-          val flagged = Decontaminate.flagged(d, col("doc_id"), col("text"),
-            e, col("text"), n = 8)
-          d.join(flagged.select("doc_id"), Seq("doc_id"), "left_anti")
-        case None => d
-      }
+    val decon = staged("decon_kept", nearKept) { d =>
+      evalDocs.fold(d)(deconKept(d, _))
     }
 
     // 6. the training cut — consistent-hash membership (reproducible
     // under retries and across runs; re-sampling a re-run is a no-op)
-    val sampled = staged("sample", deconKept) { d =>
+    val sampled = staged("sample", decon) { d =>
       graft.ops.Sampling.stratifiedSampleByKey(d, col("lang"),
         col("doc_id"), rates = Seq("en" -> 0.5), defaultRate = 0.25)
     }
@@ -156,5 +128,46 @@ object CurationApp {
       .withColumn("rows_dropped", col("rows_in") - col("rows_out"))
     Snapshots.commit(spark, stats, workRoot, "stats")
     stats
+  }
+
+  /** PII redaction; the per-type counts (n_email, n_phone, n_ip) ride
+    * along as audit columns next to the input's other columns. */
+  private[graft] def piiScrub(d: DataFrame): DataFrame =
+    Pii.redact(d, col("doc_id"), col("text"))
+      .join(d.drop("text"), Seq("doc_id"))
+      .withColumnRenamed("clean_text", "text")
+
+  /** SCRIPT-NEUTRAL length floor (chars: a zh/ru doc must not die because
+    * the tokenizer can't see it) + repetition ceiling. No gram evidence
+    * reads as rep_score 0, so token-less docs pass on to script-appropriate
+    * gates instead of being misattributed to "quality". */
+  private[graft] def qualityGate(d: DataFrame, minChars: Long,
+      maxRepScore: Double): DataFrame = {
+    val sig = Repetition.repetitionScore(
+      Repetition.signals(d, col("doc_id"), col("text")))
+      .select(col("doc_id"), col("rep_score"))
+    d.join(sig, Seq("doc_id"), "left")
+      .where(length(col("text")) >= minChars &&
+        coalesce(col("rep_score"), lit(0.0)) <= maxRepScore)
+      .drop("rep_score")
+  }
+
+  /** Near-dup keepers: MinHash-LSH pairs (8 bands × 4 rows) → connected
+    * components → the keeper row of each cluster. */
+  private[graft] def nearDupKept(d: DataFrame, jaccardFloor: Double)
+      : DataFrame = {
+    val pairs = Dedup.minhashPairs(d, col("doc_id"), col("text"),
+      bands = 8, rowsPerBand = 4, jaccardFloor = jaccardFloor)
+    val keepers = Dedup.nearDupKeepers(d, col("doc_id"), pairs)
+      .where(col("doc_id") === col("keeper")).select("doc_id")
+    d.join(keepers, Seq("doc_id"))
+  }
+
+  /** Drops the docs sharing an 8-gram with `evalDocs` (their `text`). */
+  private[graft] def deconKept(d: DataFrame, evalDocs: DataFrame)
+      : DataFrame = {
+    val flagged = Decontaminate.flagged(d, col("doc_id"), col("text"),
+      evalDocs, col("text"), n = 8)
+    d.join(flagged.select("doc_id"), Seq("doc_id"), "left_anti")
   }
 }

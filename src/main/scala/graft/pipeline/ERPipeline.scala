@@ -173,14 +173,15 @@ object ERPipeline {
         lit(ScoreThreshold)
     val jw = if (cfg.pruneHeavySims) when(reachable, jwRaw).otherwise(lit(0.0)) else jwRaw
     val lev = if (cfg.pruneHeavySims) when(reachable, levRaw).otherwise(lit(0.0)) else levRaw
-    // R6 preserve-specificity guard: disjoint model-number tokens on both
-    // sides is strong evidence of distinct entities.
-    val modelsDisjoint = size(col("l_model_tokens")) > 0 &&
-      size(col("r_model_tokens")) > 0 &&
-      size(array_intersect(col("l_model_tokens"), col("r_model_tokens"))) === 0
+    // R6 preserve-specificity guard: each side carrying a model-number
+    // token the other lacks is strong evidence of distinct entities, even
+    // when both also share one (a CPU part such as `13900h`).
+    val l = col("l_model_tokens"); val r = col("r_model_tokens")
+    val modelsDiffer =
+      size(array_except(l, r)) > 0 && size(array_except(r, l)) > 0
     val raw = lit(wJw) * jw + lit(wLev) * lev + lit(wCos) * cos + lit(wJac) * jac
     PairSims(jw, lev, cos, jac,
-      when(modelsDisjoint, raw * 0.5).otherwise(raw))
+      when(modelsDiffer, raw * 0.5).otherwise(raw))
   }
 
   /** Stage 3+4: candidate pairs + scores. Returns scored pairs plus the

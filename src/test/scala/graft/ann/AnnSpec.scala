@@ -224,4 +224,28 @@ class AnnSpec extends SparkSuite {
     assert(f.select(Ann.cosine($"a", $"b")).as[Double].head() ===
       fold(fa.map(_.toDouble), fb.map(_.toDouble)))
   }
+
+  test("IVF, k-means and RHP paths read array<double> like the same floats") {
+    // every float widens to double exactly, so the double column carries
+    // the same values and each path must give the same answer
+    val f = fixture(40, 32)
+    val d = f.select($"vec_id", $"embedding".cast("array<double>").as("embedding"))
+    def topK(emb: org.apache.spark.sql.DataFrame) =
+      Ann.ivfTopK(emb, nQueries = 6, k = 3, nlist = 8, nprobe = 3)
+        .as[(Long, Long, Double, Long)].collect().toSet
+    assert(topK(d) === topK(f))
+    val cents = Ann.trainIvfCentroids(f, nlist = 6)
+    assert(Ann.trainIvfCentroids(d, nlist = 6).map(_.toSeq).toSeq ===
+      cents.map(_.toSeq).toSeq)
+    def perRow(emb: org.apache.spark.sql.DataFrame) = {
+      val k = Ann.kmeansAssign(emb, cents)
+        .as[(Long, Long, Double)].collect().toSet
+      val rows = emb.select($"vec_id",
+          Ann.nearestList($"embedding", cents).cast("long"),
+          Ann.rhpSignature($"embedding", 10, 32))
+        .as[(Long, Long, Long)].collect().toSet
+      (k, rows)
+    }
+    assert(perRow(d) === perRow(f))
+  }
 }

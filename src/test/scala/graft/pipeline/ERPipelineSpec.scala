@@ -101,6 +101,20 @@ class ERPipelineSpec extends SparkSuite {
     assert(edges(true) === edges(false))
   }
 
+  test("model-number guard: one component per planted entity (3000 entities, seed 2)") {
+    // seed 2 plants distinct entities whose titles share a CPU model
+    // token next to their own model numbers; a guard that fires only on
+    // disjoint model-token sets merges them
+    val truth = PageGen.pagesWithTruth(spark, 3000, seed = 2L)
+      .select("url", "entity_id")
+    val (clusters, _) = ERPipeline.run(spark, PageGen.pages(spark, 3000, seed = 2L))
+    val perEntity = clusters.join(truth, "url").groupBy("entity_id")
+      .agg(countDistinct(col("component")).as("n"))
+    assert(perEntity.where(col("n") > 1).count() === 0L, "planted entity split")
+    val comps = clusters.select(countDistinct(col("component"))).head().getLong(0)
+    assert(comps === 3000L, s"$comps components for 3000 planted entities")
+  }
+
   test("extraction satisfies the per-row invariant on generated corpus") {
     val ex = ERPipeline.extract(PageGen.pages(spark, 100, seed = 3L))
     assert(ex.where(length(col("canonical_text")) === 0).count() === 0)
