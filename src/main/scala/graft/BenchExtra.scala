@@ -10,7 +10,7 @@ import org.apache.spark.sql.SparkSession
   *
   * Env:
   *   SPARK_GRAFT_SF_DIR      data dir (default /root/testdata/sf0.1)
-  *   SPARK_GRAFT_CPUS        local core count (default 32)
+  *   SPARK_GRAFT_CPUS        local core count (default: this host's)
   *   SPARK_GRAFT_BENCH_ONLY  comma-separated query subset
   *   SPARK_GRAFT_EXTRA_REPS  reps per query (default 3)
   *   SPARK_GRAFT_EXTRA_MODE  count (Bench parity, default) | noop (§1.4)
@@ -20,7 +20,8 @@ object BenchExtra {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS",
+      Runtime.getRuntime.availableProcessors.toString)
     val reps = sys.env.getOrElse("SPARK_GRAFT_EXTRA_REPS", "3").toInt.max(1)
     val mode = sys.env.getOrElse("SPARK_GRAFT_EXTRA_MODE", "count")
     val planDir = sys.env.get("SPARK_GRAFT_PLAN_DIR")

@@ -38,12 +38,14 @@ object SparkEntry {
     * consume the same rows. Generator-derived fixtures (PageGen/UrlGen/
     * EmbGen) are seed-deterministic and sf-independent; CORPUS-derived
     * fixtures differ per sf dir, so their staged bytes are only valid for
-    * the dir that produced them (tracked via `tag` below). CONCURRENT
-    * JVMs running different sf dirs must isolate via
+    * the dir that produced them (tracked via `tag` below). The root
+    * defaults to `target/oracle_stage` under the working directory, so
+    * each checkout stages into its own tree; CONCURRENT JVMs in one
+    * checkout running different sf dirs must isolate via
     * SPARK_GRAFT_STAGE_ROOT — the oracle SQL embeds this root at dump
     * time, so each JVM's oracle reads its own staging. */
   private val stageRoot = sys.env.getOrElse("SPARK_GRAFT_STAGE_ROOT",
-    "/root/repo/target/oracle_stage")
+    new java.io.File("target/oracle_stage").getAbsolutePath)
 
   /** @param singleFile write one parquet file instead of one near-empty
     *   file per partition (guide §6 — small files cost commit/listing

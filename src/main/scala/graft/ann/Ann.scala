@@ -6,8 +6,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.types._
 
 /**
- * Approximate-nearest-neighbor search over an embedding column
- * (array<float> or array<double>, read as doubles: float widens exactly).
+ * Approximate-nearest-neighbor search over an embedding column.
  * Baseline: brute-force cosine top-k (broadcast the query
  * side — the scan side streams, no shuffle of the corpus). Scale path:
  * random-hyperplane LSH bucketing so candidate generation is a bucket
@@ -15,43 +14,55 @@ import org.apache.spark.sql.types._
  */
 object Ann {
 
-  /** Cosine similarity of two numeric-vector columns as ONE compact JVM
-    * function: a left fold in doubles (acc += a(i)·b(i) ascending from
-    * 0.0), denominator `sqrt(dot(a,a))·sqrt(dot(b,b))`, `denom == 0 → 0.0`,
-    * null on a null input, a length mismatch or a null element.
-    *
-    * The inputs are typed `array<double>`: the analyzer widens an
-    * `array<float>` argument element-wise, which is exact, so a float
-    * vector (every caller in this codebase) and a double vector both
-    * enter the fold at full precision; neither is narrowed to float.
+  /** The one bad-input gate of every embedding path: `v` as doubles
+    * (an `array<float>` column widens exactly), or null when `v` is null,
+    * holds a null element or has a length other than `dim` (the
+    * centroids', the planes' or the first seed's; `-1` takes any length,
+    * for the operand that fixes it). A bad vector gets a null cosine,
+    * k-means topic and dot, list id and RHP signature (so it joins no
+    * bucket), is no IVF candidate or query, and is left out of the Lloyd
+    * means; a bad seed fails `trainIvfCentroids` by name. NaN and Inf
+    * elements are values and flow through. */
+  private def vec(v: scala.collection.Seq[java.lang.Double], dim: Int)
+      : Array[Double] =
+    if (v == null || (dim >= 0 && v.length != dim)) null
+    else {
+      val out = new Array[Double](v.length)
+      var i = 0
+      while (i < out.length) {
+        val x = v(i)
+        if (x == null) return null
+        out(i) = x.doubleValue
+        i += 1
+      }
+      out
+    }
+
+  /** The one multiply-add loop: an ascending left fold from 0.0. */
+  private def dot(a: Array[Double], b: Array[Double]): Double = {
+    var acc = 0.0; var i = 0
+    while (i < a.length) { acc += a(i) * b(i); i += 1 }
+    acc
+  }
+
+  /** Cosine `dot(a,b) / (sqrt(dot(a,a))·sqrt(dot(b,b)))`, 0.0 when the
+    * denominator is 0, as ONE JVM function.
     *
     * WHY a JVM function: Catalyst evaluates `aggregate`/`zip_with`/
     * `transform` lambdas interpreted (CodegenFallback), allocating per
     * element, and a CASE over the norm folds re-evaluated them twice:
     * five interpreted O(dim) folds per row. Measured on the sf0.1 bench:
     * emb_ann_topk 1.23 s → the scan's per-row cost dominated everything
-    * else. One JVM loop does the identical arithmetic in primitive
-    * registers. Reference the result once per projection (PlanSpec pins
+    * else. The JVM function does the same arithmetic on primitive
+    * doubles. Reference the result once per projection (PlanSpec pins
     * one call per row pipeline): every extra reference re-runs the loop. */
   private val cosineUdf = udf { (a: Seq[java.lang.Double], b: Seq[java.lang.Double]) =>
-    var nullElem = a == null || b == null || a.length != b.length
-    var dot = 0.0; var na = 0.0; var nb = 0.0
-    if (!nullElem) {
-      var i = 0
-      while (i < a.length && !nullElem) {
-        val xb = a(i); val yb = b(i)
-        if (xb == null || yb == null) nullElem = true
-        else {
-          val x = xb.doubleValue; val y = yb.doubleValue
-          dot += x * y; na += x * x; nb += y * y
-        }
-        i += 1
-      }
-    }
-    (if (nullElem) null
+    val x = vec(a, dim = -1)
+    val y = if (x == null) null else vec(b, x.length)
+    (if (y == null) null
     else {
-      val denom = math.sqrt(na) * math.sqrt(nb)
-      java.lang.Double.valueOf(if (denom == 0.0) 0.0 else dot / denom)
+      val denom = math.sqrt(dot(x, x)) * math.sqrt(dot(y, y))
+      java.lang.Double.valueOf(if (denom == 0.0) 0.0 else dot(x, y) / denom)
     }): java.lang.Double
   }
 
@@ -99,10 +110,14 @@ object Ann {
     * design — it IS the broadcastable model). */
   def trainIvfCentroids(emb: DataFrame, nlist: Int,
       lloydIters: Int = 2): Array[Array[Double]] = {
-    val seeds = emb.orderBy(xxhash64(col("vec_id")), col("vec_id"))
+    val rows = emb.orderBy(xxhash64(col("vec_id")), col("vec_id"))
       .limit(nlist)
-      .select(col("embedding")).collect()
-      .map(_.getSeq[Number](0).map(_.doubleValue).toArray)
+      .select(col("embedding").cast("array<double>")).collect()
+      .map(_.getAs[scala.collection.Seq[java.lang.Double]](0))
+    val first = rows.headOption.map(vec(_, dim = -1)).orNull
+    val seeds = rows.map(vec(_, if (first == null) 0 else first.length))
+    require(!seeds.contains(null), "trainIvfCentroids: a seed vector is " +
+      "null, holds a null element or differs in length from the first")
     var cents = seeds
     var it = 0
     while (it < lloydIters) {
@@ -116,8 +131,9 @@ object Ann {
         .agg(avg(col("v")).as("m"))
         .collect()
       val next = cents.map(_.clone())
-      means.foreach { r =>
-        next(r.getAs[Int]("list_id"))(r.getAs[Int]("pos")) = r.getAs[Double]("m")
+      // a bad vector's null list id: its cells join no mean
+      means.filterNot(_.isNullAt(0)).foreach { r =>
+        next(r.getLong(0).toInt)(r.getInt(1)) = r.getDouble(2)
       }
       cents = next
       it += 1
@@ -127,74 +143,50 @@ object Ann {
 
   /** Hard k-means TOPIC assignment over a trained centroid matrix — the
     * corpus-clustering consumer of `trainIvfCentroids` (topic bucketing /
-    * embedding-space stratification of a training corpus). Returns
-    * (vec_id, topic, dot): nearest centroid by inner product rounded to
-    * the 6-decimal cross-engine grid, ties to the SMALLEST centroid id
-    * (first max wins).
-    *
-    * Shape: one narrow, zero-shuffle JVM projection over the broadcast-
-    * sized centroid matrix; the corpus only gets scanned. Differs from
-    * `nearestList` in contract, not mechanics: this returns the oracle-
-    * grid (topic, dot) pair, nearestList just the raw-argmax list id —
-    * spec-pinned assignment-identical. */
+    * embedding-space stratification of a training corpus): (vec_id,
+    * topic, dot) by `nearest`, one narrow zero-shuffle projection. */
   def kmeansAssign(emb: DataFrame, centroids: Array[Array[Double]])
-      : DataFrame = {
-    // One JVM function instead of nlist interpreted aggregate/zip_with
-    // trees per row (CodegenFallback — see cosineUdf). Bit-identical
-    // to the declarative formulation: same per-centroid left-fold dot,
-    // each dot rounded exactly as Spark's Round on DoubleType does
-    // (java.math.BigDecimal.valueOf(d).setScale(6, HALF_UP)), first-max
-    // tie-break replicating array_position(arr, array_max(arr)).
-    val dim = if (centroids.isEmpty) 0 else centroids(0).length
-    val assignUdf = udf { (v: Seq[java.lang.Double]) =>
-      // null / length-mismatched / null-element vectors: the old
-      // zip_with chain nulled every dot, array_max over all-null gave a
-      // null topic and dot — return a null struct for the same rows
-      val bad = v == null || v.length != dim || v.exists(_ == null)
-      if (bad) null.asInstanceOf[(Long, Double)]
-      else {
-        var bestIdx = 0L; var bestVal = Double.NegativeInfinity
-        var l = 0
-        while (l < centroids.length) {
-          val c = centroids(l)
-          var acc = 0.0; var i = 0
-          while (i < dim) { acc += v(i).doubleValue * c(i); i += 1 }
-          // Round passes NaN/Inf through; array_max ranks NaN above
-          // every other value and takes the first of equal maxima
-          val r = if (acc.isNaN || acc.isInfinite) acc
-            else java.math.BigDecimal.valueOf(acc)
-              .setScale(6, java.math.RoundingMode.HALF_UP).doubleValue()
-          if (r > bestVal || (r.isNaN && !bestVal.isNaN)) {
-            bestVal = r; bestIdx = l
-          }
-          l += 1
-        }
-        (bestIdx, bestVal)
-      }
-    }
-    emb.select(col("vec_id"), assignUdf(col("embedding")).as("a"))
+      : DataFrame =
+    emb.select(col("vec_id"), assign(col("embedding"), centroids).as("a"))
       .select(col("vec_id"), col("a._1").as("topic"), col("a._2").as("dot"))
+
+  /** The IVF list id of each vector: the topic of `kmeansAssign`. */
+  private[graft] def nearestList(emb: Column,
+      centroids: Array[Array[Double]]): Column =
+    assign(emb, centroids).getField("_1")
+
+  /** (topic, dot) of `nearest` as a per-row JVM function over the
+    * broadcast centroid matrix (nlist × dim multiply-adds per row; a
+    * per-centroid expression tree would blow up plan size the same way
+    * the MinHash expression family did — see Blocking.bandKeysUdf). */
+  private def assign(emb: Column, centroids: Array[Array[Double]]): Column = {
+    val dim = centroids.headOption.fold(0)(_.length)
+    udf { (v: Seq[java.lang.Double]) =>
+      val x = vec(v, dim)
+      if (x == null) null.asInstanceOf[(Long, Double)] else nearest(x, centroids)
+    }.apply(emb)
   }
 
-  /** Nearest-centroid assignment as a compact per-row JVM function over
-    * the broadcast centroid matrix (nlist × dim multiply-adds per row;
-    * a per-centroid expression tree would blow up plan size the same way
-    * the MinHash expression family did — see Blocking.bandKeysUdf). */
-  def nearestList(emb: Column, centroids: Array[Array[Double]]): Column = {
-    val f = udf { (v: Seq[Double]) =>
-      var best = 0; var bestDot = Double.MinValue
-      var l = 0
-      while (l < centroids.length) {
-        val c = centroids(l)
-        var dot = 0.0; var i = 0
-        val n = math.min(c.length, v.length)
-        while (i < n) { dot += c(i) * v(i); i += 1 }
-        if (dot > bestDot) { bestDot = dot; best = l }
-        l += 1
+  /** The one nearest-centroid argmax: (index, dot) of the largest inner
+    * product rounded to the 6-decimal cross-engine grid exactly as
+    * Spark's Round on DoubleType does (BigDecimal HALF_UP; NaN and Inf
+    * pass through). Ties go to the SMALLEST centroid id and NaN ranks
+    * above every other value, as `array_position(d, array_max(d))`. */
+  private def nearest(v: Array[Double], centroids: Array[Array[Double]])
+      : (Long, Double) = {
+    var bestIdx = 0L; var bestVal = Double.NegativeInfinity
+    var l = 0
+    while (l < centroids.length) {
+      val d = dot(v, centroids(l))
+      val r = if (d.isNaN || d.isInfinite) d
+        else java.math.BigDecimal.valueOf(d)
+          .setScale(6, java.math.RoundingMode.HALF_UP).doubleValue()
+      if (r > bestVal || (r.isNaN && !bestVal.isNaN)) {
+        bestVal = r; bestIdx = l
       }
-      best
+      l += 1
     }
-    f(emb)
+    (bestIdx, bestVal)
   }
 
   /** IVF candidate scan: corpus bucketed by nearest centroid; each query
@@ -208,26 +200,29 @@ object Ann {
     val cents = trainIvfCentroids(emb, nlist, lloydIters)
     val corpus = emb.select(col("vec_id"), col("embedding"),
       nearestList(col("embedding"), cents).as("list_id"))
+    val dim = cents.headOption.fold(0)(_.length)
+    // a bad query vector probes nothing and is left out of the broadcast
     val queries = emb.orderBy(col("vec_id")).limit(nQueries)
-      .select(col("vec_id").as("query_id"), col("embedding").as("q_emb"))
+      .select(col("vec_id"), col("embedding").cast("array<double>"))
       .collect()
+      .map(r => (r.getLong(0),
+        vec(r.getAs[scala.collection.Seq[java.lang.Double]](1), dim)))
+      .filter(_._2 != null)
     // per-query probe lists computed on the driver (queries are few by
     // contract; the corpus-side work is the distributed part)
-    val probeRows = queries.flatMap { r =>
-      val q = r.getSeq[Number](1).map(_.doubleValue).toArray
-      val byDot = cents.zipWithIndex.map { case (c, i) =>
-        (c.zip(q).map { case (a, b) => a * b }.sum, i)
-      }.sortBy(-_._1).take(nprobe).map(_._2)
-      byDot.map(list => (r.getLong(0), list))
+    val probeRows = queries.flatMap { case (id, q) =>
+      cents.indices.sortBy(l => -dot(cents(l), q)).take(nprobe)
+        .map(l => (id, l.toLong))
     }
     val spark = emb.sparkSession
     import spark.implicits._
     val probes = probeRows.toSeq.toDF("query_id", "list_id")
-    val qdf = queries.toSeq.map(r =>
-      (r.getLong(0), r.getSeq[Number](1).map(_.doubleValue)))
+    val qdf = queries.toSeq.map { case (id, q) => (id, q.toSeq) }
       .toDF("query_id", "q_emb")
+    // `<=>`: with `===` the optimizer pushes isnotnull(list_id) under the
+    // projection, a second assignment per row; probes hold no null id
     corpus
-      .join(broadcast(probes), Seq("list_id"))
+      .join(broadcast(probes), corpus("list_id") <=> probes("list_id"))
       .where(col("vec_id") =!= col("query_id"))
       .join(broadcast(qdf), Seq("query_id"))
       .withColumn("cos", round(cosine(col("q_emb"), col("embedding")), 6))
@@ -263,34 +258,26 @@ object Ann {
         col("cos"), col("rank"))
   }
 
-  /** Random-hyperplane LSH signature: `bits` sign-bits of dot products
-    * with deterministic ±1 hyperplanes baked in as literals — per-row work
-    * is exactly bits×dim multiply-adds, fully codegen'd, no stored model. */
-  def rhpSignature(emb: Column, bits: Int, dim: Int): Column = {
-    // One JVM function instead of bits interpreted aggregate/zip_with
-    // trees (CodegenFallback; plan size also grew with bits×dim literal
-    // arrays). Bit-identical: same ±1 planes (mix64 stream), same
-    // ascending left-fold from 0.0 per bit, same strict `dot > 0` sign
-    // test; null/length-mismatched input yields 0L (what the null-padded
-    // zip_with fold collapsed every bit to).
+  /** Random-hyperplane LSH signature: `bits` sign-bits (strict `dot > 0`)
+    * of dot products with deterministic ±1 hyperplanes (the mix64
+    * stream) — per-row work is exactly bits×dim multiply-adds in one JVM
+    * function (not `bits` interpreted zip_with folds with bits×dim
+    * literals in the plan — see cosineUdf), no stored model. */
+  private[graft] def rhpSignature(emb: Column, bits: Int, dim: Int): Column = {
     val planes = Array.tabulate(bits, dim)((b, j) =>
       if ((mix64(b.toLong * 1000003L + j) & 1L) == 0L) 1.0d else -1.0d)
     val f = udf { (v: Seq[java.lang.Double]) =>
-      // null / mismatched / null-element input: every bit's null-padded
-      // fold went null, `when(null > 0)` fell to the 0L branch → sig 0
-      if (v == null || v.length != dim || v.exists(_ == null)) 0L
+      val x = vec(v, dim)
+      (if (x == null) null
       else {
         var sig = 0L
         var b = 0
         while (b < bits) {
-          val p = planes(b)
-          var acc = 0.0; var j = 0
-          while (j < dim) { acc += v(j).doubleValue * p(j); j += 1 }
-          if (acc > 0) sig |= (1L << b)
+          if (dot(x, planes(b)) > 0) sig |= (1L << b)
           b += 1
         }
-        sig
-      }
+        java.lang.Long.valueOf(sig)
+      }): java.lang.Long
     }
     f(emb)
   }
@@ -317,12 +304,15 @@ object Ann {
     val dim = dimOpt.getOrElse(probeDim(emb))
     val sig = emb.select(col("vec_id"),
       rhpSignature(col("embedding"), bits, dim).as("sig"))
-    // probe buckets: own signature + each 1-bit flip — ids only
+    // probe buckets: own signature + each 1-bit flip — ids only; a bad
+    // vector's null signature probes nothing
     val probes = sig.select(col("vec_id").as("r_id"), explode(array(
       (col("sig") +: (0 until bits).map(b =>
         col("sig").bitwiseXOR(lit(1L << b)))): _*)).as("bucket"))
+      .where(col("bucket").isNotNull)
     val left = sig.select(col("sig").as("bucket"), col("vec_id").as("l_id"))
-    val idPairs = left.join(probes, Seq("bucket"))
+    // `<=>` as in ivfCandidates: `===` would sign the left side twice
+    val idPairs = left.join(probes, left("bucket") <=> probes("bucket"))
       .where(col("l_id") < col("r_id"))
       .select(col("l_id"), col("r_id"))
       .dropDuplicates("l_id", "r_id")

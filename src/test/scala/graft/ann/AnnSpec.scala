@@ -248,4 +248,86 @@ class AnnSpec extends SparkSuite {
     }
     assert(perRow(d) === perRow(f))
   }
+
+  test("one bad-vector contract across every embedding path") {
+    import org.apache.spark.sql.Row
+    import org.apache.spark.sql.types._
+    val dim = 3
+    def v(xs: java.lang.Double*): Seq[java.lang.Double] = xs
+    // (input, bad: null / null element / wrong length, cosine against
+    // (1, 2, 3) as a string or null); NaN, Inf and zero are values
+    val table: Seq[(String, Seq[java.lang.Double], Boolean, String)] = Seq(
+      ("null", null, true, null),
+      ("null element", v(1.0, null, 0.5), true, null),
+      ("short", v(1.0, 0.5), true, null),
+      ("long", v(1.0, 0.5, 0.25, 2.0), true, null),
+      ("NaN", v(Double.NaN, 0.5, 0.25), false, "NaN"),
+      ("+Inf", v(Double.PositiveInfinity, 0.5, 0.25), false, "NaN"),
+      ("zero", v(0.0, 0.0, 0.0), false, "0.0"))
+    // the edge rows take ids that are not IVF seeds (lowest xxhash64)
+    val nlist = 3
+    val ids = 0L until 40L + table.size
+    val seedIds = ids.toDF("vec_id").orderBy(xxhash64($"vec_id"), $"vec_id")
+      .limit(nlist).as[Long].collect().toSet
+    val edgeIds = ids.filterNot(seedIds).take(table.size)
+    val rnd = new scala.util.Random(5)
+    val rows = ids.map { id =>
+      edgeIds.indexOf(id) match {
+        case -1 => Row(id, null, Seq.fill(dim)(rnd.nextGaussian()))
+        case i => Row(id, table(i)._1, table(i)._2)
+      }
+    }
+    val emb = spark.createDataFrame(java.util.Arrays.asList(rows: _*),
+      StructType(Seq(StructField("vec_id", LongType, false),
+        StructField("label", StringType),
+        StructField("embedding", ArrayType(DoubleType, true)))))
+    val badIds = edgeIds.zip(table).collect { case (id, t) if t._3 => id }.toSet
+
+    val cents = Array(Array(1.0, 0.0, 0.0), Array(0.0, 1.0, 0.0))
+    val got = emb.select($"vec_id", $"label",
+        Ann.cosine($"embedding", typedLit(Seq(1.0, 2.0, 3.0)))
+          .cast("string").as("cos"),
+        Ann.nearestList($"embedding", cents).as("list"),
+        Ann.rhpSignature($"embedding", 8, dim).as("sig"))
+      .join(Ann.kmeansAssign(emb, cents), Seq("vec_id"))
+      .where($"label".isNotNull).collect()
+      .map(r => r.getAs[String]("label") -> r).toMap
+    table.foreach { case (label, _, bad, cos) =>
+      val r = got(label)
+      assert(r.getAs[String]("cos") === cos, label)
+      val outs = Seq("list", "sig", "topic", "dot")
+      val nulls = outs.filter(c => r.isNullAt(r.fieldIndex(c)))
+      if (bad) assert(nulls === outs, label)
+      else {
+        assert(nulls.isEmpty, label)
+        assert(r.getAs[Long]("list") === r.getAs[Long]("topic"), label)
+      }
+    }
+
+    // IVF: a bad corpus row is never a candidate, a bad query gets no
+    // rows, and every other query still gets its full-probe top-k
+    val cands = Ann.ivfCandidates(emb, nQueries = ids.size, nlist = nlist,
+      nprobe = nlist).select("query_id", "vec_id").as[(Long, Long)].collect()
+    val top = Ann.ivfTopK(emb, nQueries = ids.size, k = 3, nlist = nlist,
+      nprobe = nlist).select("query_id", "neighbor_id").as[(Long, Long)].collect()
+    Seq(cands, top).foreach { pairs =>
+      assert(pairs.forall { case (q, n) => !badIds(q) && !badIds(n) })
+      assert(pairs.map(_._1).toSet === ids.toSet -- badIds)
+    }
+    // training leaves bad rows out of the Lloyd means ...
+    val good = emb.where($"label".isNull)
+    def trained(df: org.apache.spark.sql.DataFrame) =
+      Ann.trainIvfCentroids(df, nlist).map(_.toSeq).toSeq
+    assert(trained(good.union(emb.where($"vec_id".isin(badIds.toSeq: _*)))) ===
+      trained(good))
+    // ... and fails by name on a bad seed
+    table.filter(_._3).foreach { case (label, vec, _, _) =>
+      val seeds = spark.createDataFrame(java.util.Arrays.asList(
+          Row(0L, null, Seq[java.lang.Double](1.0, 2.0, 3.0)), Row(1L, null, vec)),
+        emb.schema)
+      val e = intercept[IllegalArgumentException](
+        Ann.trainIvfCentroids(seeds, nlist = 2))
+      assert(e.getMessage.contains("a seed vector"), label)
+    }
+  }
 }

@@ -324,18 +324,43 @@ class PlanSpec extends SparkSuite {
     assert(calls.size === 2 && calls.values.forall(_ == 1), calls)
   }
 
-  test("curation_e2e stays within its warm job budget") {
-    // A job count is deterministic for a plan, so a rise is a plan
-    // regression even when the rows stay right. The warm run reuses every
-    // stageOnce fixture the first run staged, so its count does not depend
-    // on which spec ran first in the JVM.
-    val run = () => SparkEntry.queries("curation_e2e")(spark, dir).count()
+  test("IVF list ids and RHP signatures run once per row") {
+    // both join on a nullable key with `<=>`: an `===` join lets the
+    // optimizer push isnotnull(key) under the projection, a second call
+    Seq("emb_ann_ivf", "emb_neardup_lsh").foreach { q =>
+      val calls = udfCallsByInput(SparkEntry.queries(q)(spark, dir))
+        .filter(_._1.size == 1)
+      assert(calls.nonEmpty && calls.values.forall(_ == 1), s"$q: $calls")
+    }
+  }
+
+  /** Spark jobs of the second (warm) run of `query`. A job count is
+    * deterministic for a plan, so a rise is a plan regression even when
+    * the rows stay right. The warm run reuses every stageOnce fixture the
+    * first run staged, so its count does not depend on which spec ran
+    * first in the JVM. */
+  private def warmJobs(query: String): Int = {
+    val run = () => SparkEntry.queries(query)(spark, dir).count()
     val cold = run()
     val (warm, jobs) = withJobCount(run())
-    assert(warm === cold, "curation_e2e changed its row count between runs")
-    info(s"$jobs jobs warm")
-    // the warm count measured on sf0.001 in this local[8] test session
-    // when the budget was set
+    assert(warm === cold, s"$query changed its row count between runs")
+    info(s"$query: $jobs jobs warm")
+    jobs
+  }
+
+  // Each budget is the warm count measured on sf0.001 in this local[8]
+  // test session when the budget was set.
+  test("curation_e2e stays within its warm job budget") {
+    val jobs = warmJobs("curation_e2e")
     assert(jobs <= 27, s"curation_e2e ran $jobs Spark jobs warm")
+  }
+
+  test("emb_* queries stay within their warm job budgets") {
+    Seq("emb_ann_topk" -> 5, "emb_ann_ivf" -> 12, "emb_kmeans_topics" -> 9,
+      "emb_neardup_lsh" -> 8, "emb_ann_ivf_probe" -> 12).foreach {
+      case (q, budget) =>
+        val jobs = warmJobs(q)
+        assert(jobs <= budget, s"$q ran $jobs Spark jobs warm")
+    }
   }
 }
