@@ -16,6 +16,13 @@
 set -euo pipefail
 cd "$(dirname "$0")/.."
 
+# The topology pins JVMs to cores 0-15 and 28-30: on a smaller host
+# taskset fails, so stop before any JVM starts.
+if [ "$(nproc)" -lt 31 ]; then
+  echo "cluster_submit.sh: needs a host with 31+ cores (JVMs pinned to cores 0-15 and 28-30); this one has $(nproc)" >&2
+  exit 1
+fi
+
 ENTITIES="${1:-200000}"
 WORK="${2:-/tmp/graft-submit}"
 MASTER_PORT=7077
@@ -59,6 +66,8 @@ for _ in $(seq 1 30); do
   grep -q "I have been elected leader" /tmp/spark-cluster/master.log 2>/dev/null && break
   sleep 1
 done
+grep -q "I have been elected leader" /tmp/spark-cluster/master.log 2>/dev/null ||
+  { echo "master failed to start" >&2; exit 1; }
 
 for i in 0 1 2 3; do
   SPARK_HOME=/opt/spark SPARK_SCALA_VERSION=2.13 \

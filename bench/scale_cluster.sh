@@ -36,6 +36,13 @@
 set -euo pipefail
 cd "$(dirname "$0")/.."
 
+# The topology pins JVMs to cores 0-15 and 28-30: on a smaller host
+# taskset fails, so stop before any JVM starts.
+if [ "$(nproc)" -lt 31 ]; then
+  echo "scale_cluster.sh: needs a host with 31+ cores (JVMs pinned to cores 0-15 and 28-30); this one has $(nproc)" >&2
+  exit 1
+fi
+
 ENTITIES="${1:-200000}"
 REPS="${2:-2}"
 WARMUP=20000

@@ -104,12 +104,12 @@ object Ann {
     * content (timestamps, shard prefixes, sorted embeddings) still get
     * seeds spread across the whole corpus; seeding by lowest raw vec_id
     * degenerates exactly there (all seeds in one content cluster → recall
-    * collapse). Refined by `lloydIters` Lloyd iterations (element-wise
-    * mean of assigned vectors; empty lists keep their previous centroid).
+    * collapse). Refined by two Lloyd iterations (element-wise mean of
+    * assigned vectors; empty lists keep their previous centroid).
     * Returns the centroid matrix (small: nlist × dim, driver-resident by
     * design — it IS the broadcastable model). */
-  def trainIvfCentroids(emb: DataFrame, nlist: Int,
-      lloydIters: Int = 2): Array[Array[Double]] = {
+  def trainIvfCentroids(emb: DataFrame, nlist: Int)
+      : Array[Array[Double]] = {
     val rows = emb.orderBy(xxhash64(col("vec_id")), col("vec_id"))
       .limit(nlist)
       .select(col("embedding").cast("array<double>")).collect()
@@ -120,7 +120,7 @@ object Ann {
       "null, holds a null element or differs in length from the first")
     var cents = seeds
     var it = 0
-    while (it < lloydIters) {
+    while (it < 2) {
       val assigned = emb.select(col("embedding"),
         nearestList(col("embedding"), cents).as("list_id"))
       // element-wise mean per list: posexplode → (list, pos) avg — one
@@ -196,8 +196,8 @@ object Ann {
     * billions of vectors. Returns every probed (query_id, vec_id, cos)
     * candidate — callers rank (ivfTopK) or audit (ivfProbeStats). */
   def ivfCandidates(emb: DataFrame, nQueries: Int, nlist: Int = 16,
-      nprobe: Int = 4, lloydIters: Int = 2): DataFrame = {
-    val cents = trainIvfCentroids(emb, nlist, lloydIters)
+      nprobe: Int = 4): DataFrame = {
+    val cents = trainIvfCentroids(emb, nlist)
     val corpus = emb.select(col("vec_id"), col("embedding"),
       nearestList(col("embedding"), cents).as("list_id"))
     val dim = cents.headOption.fold(0)(_.length)
@@ -248,8 +248,8 @@ object Ann {
     * nprobe = nlist (full probe) this reproduces bruteForceTopK exactly —
     * the driver-oracle query emb_ann_ivf pins that equivalence. */
   def ivfTopK(emb: DataFrame, nQueries: Int, k: Int, nlist: Int = 16,
-      nprobe: Int = 4, lloydIters: Int = 2): DataFrame = {
-    val candidates = ivfCandidates(emb, nQueries, nlist, nprobe, lloydIters)
+      nprobe: Int = 4): DataFrame = {
+    val candidates = ivfCandidates(emb, nQueries, nlist, nprobe)
     val w = Window.partitionBy(col("query_id"))
       .orderBy(col("cos").desc, col("vec_id").asc)
     candidates.withColumn("rank", row_number().over(w).cast(LongType))
@@ -282,11 +282,6 @@ object Ann {
     f(emb)
   }
 
-  /** Embedding dimensionality probed from the first row (one tiny job);
-    * callers at true scale should pass the known dim instead. */
-  def probeDim(emb: DataFrame, embCol: String = "embedding"): Int =
-    emb.select(size(col(embCol))).head().getInt(0)
-
   /** Embedding near-duplicate pairs: bucket by RHP signature, verify by
     * exact cosine >= cosFloor. Multi-probe: also joins buckets at hamming
     * distance 1 (flip each bit) to recover near-boundary pairs.
@@ -298,10 +293,12 @@ object Ann {
     * the shuffled payload 13× at bits=12 (at a 10-TB embedding table,
     * ~130 TB through the wire). Embeddings are re-attached AFTER the
     * id-pair dedup by two id-joins, so each embedding crosses the wire
-    * once per side, and only for surviving candidate pairs. */
-  def cosineNearDupLsh(emb: DataFrame, bits: Int, cosFloor: Double,
-      dimOpt: Option[Int] = None): DataFrame = {
-    val dim = dimOpt.getOrElse(probeDim(emb))
+    * once per side, and only for surviving candidate pairs.
+    *
+    * The dimension is probed from the first row (one tiny job). */
+  def cosineNearDupLsh(emb: DataFrame, bits: Int, cosFloor: Double)
+      : DataFrame = {
+    val dim = emb.select(size(col("embedding"))).head().getInt(0)
     val sig = emb.select(col("vec_id"),
       rhpSignature(col("embedding"), bits, dim).as("sig"))
     // probe buckets: own signature + each 1-bit flip — ids only; a bad

@@ -51,22 +51,22 @@ object PipelineApp {
       ERPipeline.extract(pages)
     }
 
+    // one job checks that urls map to distinct ids and counts the rows
+    // block and scorePairs need; lazy, so a resumed run never pays it
+    lazy val n = Some(ERPipeline.checkedRows(extracted))
+
     val blocked = Snapshots.getOrCompute(spark, workRoot, "blocked") {
-      ERPipeline.block(extracted, cfg)
+      ERPipeline.block(extracted, cfg, n)
     }
 
     val scored = Snapshots.getOrCompute(spark, workRoot, "scored") {
-      val (sc, drops) = ERPipeline.scorePairs(extracted, blocked, cfg)
+      val (sc, drops) = ERPipeline.scorePairs(extracted, blocked, cfg, n)
       Snapshots.commit(spark, drops, workRoot, "cap_drops")
       sc
     }
 
     val clusters = Snapshots.getOrCompute(spark, workRoot, "clusters") {
-      val comps = ERPipeline.cluster(spark, scored, cfg)
-      extracted.select(col("url"), col("id"))
-        .join(comps, Seq("id"), "left")
-        .select(col("url"), col("id"),
-          coalesce(col("component"), col("id")).as("component"))
+      ERPipeline.assign(extracted, ERPipeline.cluster(spark, scored, cfg))
     }
 
     // Planted-truth evaluation only applies to generated corpora; an

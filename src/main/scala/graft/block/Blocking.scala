@@ -69,10 +69,11 @@ object Blocking {
     }
   }
 
-  /** One row per (blockKey, id...); rows with no tokens produce no keys. */
+  /** One row per (block_key, id...); rows with no tokens produce no keys. */
   def minhashBlocks(df: DataFrame, tokensCol: Column, bands: Int,
-      rowsPerBand: Int, keyName: String = "block_key"): DataFrame =
-    df.withColumn(keyName, explode(bandKeysUdf(bands, rowsPerBand)(tokensCol)))
+      rowsPerBand: Int): DataFrame =
+    df.withColumn("block_key",
+      explode(bandKeysUdf(bands, rowsPerBand)(tokensCol)))
 
   /** Exact set fingerprint of a token array (order-insensitive): the
     * cheap key family that guarantees recall for records whose normalized

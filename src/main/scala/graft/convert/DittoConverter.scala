@@ -120,10 +120,9 @@ object DittoConverter {
 
   /** S5: fixed train/valid/test split-set iteration, skipping missing
     * files (Amazon/prompt.py:250-257 main() shape). */
-  def convertSplits(spark: SparkSession, dir: String, cfg: Config,
-      splits: Seq[String] = Seq("train", "valid", "test"))
+  def convertSplits(spark: SparkSession, dir: String, cfg: Config)
       : Map[String, DataFrame] =
-    splits.flatMap { s =>
+    Seq("train", "valid", "test").flatMap { s =>
       val p = s"$dir/$s.txt"
       if (new java.io.File(p).exists())
         Some(s -> convertLines(spark, spark.read.text(p), cfg))

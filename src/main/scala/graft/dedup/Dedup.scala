@@ -132,45 +132,35 @@ object Dedup {
     * index table, not even sorted). Corpus TEXT is touched exactly once,
     * by an id-equi-join that attaches shingles to verified candidates
     * only. A degenerate hot band (boilerplate) fans the whole corpus to
-    * one increment row: `blockCap` bounds index rows per block with the
-    * drop count SURFACED via the returned stats table (TopK's per-key
-    * cap, lowest corpus ids win), mirroring the stream-static discipline
-    * (Streaming.streamingMatches). */
-  def incrementalMinhashPairsWithStats(
+    * one increment row: index rows per block are capped at 10000 (TopK's
+    * per-key cap, lowest corpus ids win), mirroring the stream-static
+    * discipline (Streaming.streamingMatches). The capped rows are not
+    * reported. */
+  def incrementalMinhashPairs(
       increment: DataFrame, incId: Column, incText: Column,
       corpusIndex: DataFrame, corpus: DataFrame, corpusId: Column,
       corpusText: Column, bands: Int, rowsPerBand: Int,
-      jaccardFloor: Double, blockCap: Int = 10000): (DataFrame, DataFrame) = {
+      jaccardFloor: Double): DataFrame = {
     val incBase = increment
       .select(incId.as("inc_id"), wordShingles(incText).as("inc_sh"))
     val incBlocks = broadcast(Blocking.minhashBlocks(
       incBase.select(col("inc_id"), col("inc_sh").as("tokens")),
       col("tokens"), bands, rowsPerBand).select("block_key", "inc_id"))
-    val (cappedIndex, drops) = graft.ops.TopK.perKeyWithDrops(
+    val (cappedIndex, _) = graft.ops.TopK.perKeyWithDrops(
       corpusIndex.select(col("block_key"), col("id").as("corpus_id")),
-      col("block_key"), "block_key", Seq(col("corpus_id")), blockCap)
+      col("block_key"), "block_key", Seq(col("corpus_id")), 10000)
     val candidates = cappedIndex.join(incBlocks, Seq("block_key"))
       .select(col("inc_id"), col("corpus_id"))
       .dropDuplicates("inc_id", "corpus_id")
     val corpusSh = corpus.select(corpusId.as("corpus_id"),
       wordShingles(corpusText).as("c_sh"))
-    val verified = candidates
+    candidates
       .join(incBase, Seq("inc_id"))
       .join(corpusSh, Seq("corpus_id"))
       .select(col("inc_id"), col("corpus_id"),
         Similarity.jaccard(col("inc_sh"), col("c_sh")).as("jaccard"))
       .where(col("jaccard") >= jaccardFloor)
-    (verified, drops)
   }
-
-  /** Pairs-only view of `incrementalMinhashPairsWithStats`. */
-  def incrementalMinhashPairs(
-      increment: DataFrame, incId: Column, incText: Column,
-      corpusIndex: DataFrame, corpus: DataFrame, corpusId: Column,
-      corpusText: Column, bands: Int, rowsPerBand: Int,
-      jaccardFloor: Double): DataFrame =
-    incrementalMinhashPairsWithStats(increment, incId, incText, corpusIndex,
-      corpus, corpusId, corpusText, bands, rowsPerBand, jaccardFloor)._1
 
   /** 64-bit SimHash over word tokens (JVM function; still a narrow map). */
   val simhashUdf = udf { (toks: Seq[String]) =>

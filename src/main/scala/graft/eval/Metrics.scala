@@ -38,9 +38,8 @@ object Metrics {
   /** One-row DataFrame: tp, fp, fn, tn, precision, recall, f1.
     * Single partial-aggregable pass (map-side combine; one shuffle of 4
     * longs — scale-free). */
-  def prf1(pairs: DataFrame, goldCol: String = "gold",
-      predCol: String = "pred"): DataFrame = {
-    val g = col(goldCol); val p = col(predCol)
+  def prf1(pairs: DataFrame): DataFrame = {
+    val g = col("gold"); val p = col("pred")
     // coalesce: sum over ZERO pairs is NULL — an empty label set must read
     // as all-zero counts (P=R=F1=0), not a row of NULLs
     withPrf1Cols(pairs.agg(
@@ -61,14 +60,13 @@ object Metrics {
     * partial-aggregable groupBy(threshold) shuffles 4 longs per threshold
     * (map-side combine does the heavy counting; the shuffle is
     * |thresholds| rows, independent of log size). */
-  def prAtThresholds(log: DataFrame, thresholds: Seq[Double],
-      goldCol: String = "gold", probCol: String = "probability"): DataFrame = {
+  def prAtThresholds(log: DataFrame, thresholds: Seq[Double]): DataFrame = {
     require(thresholds.nonEmpty, "prAtThresholds needs at least one threshold")
     val g = col("gold"); val p = col("prob")
     val pred = (p >= col("threshold")).cast("int")
     withPrf1Cols(
-      log.select(col(goldCol).cast("int").as("gold"),
-          col(probCol).cast("double").as("prob"))
+      log.select(col("gold").cast("int").as("gold"),
+          col("probability").cast("double").as("prob"))
         .withColumn("threshold", explode(array(thresholds.map(lit): _*)))
         .groupBy(col("threshold"))
         .agg(

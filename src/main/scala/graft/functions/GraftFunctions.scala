@@ -1,6 +1,6 @@
 package graft.functions
 
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import graft.extract.ColVal
@@ -183,12 +183,4 @@ object GraftFunctions {
   }
 
   val tokensUdf = udf(tokensJvm _)
-
-  /** Register SQL-callable names for the UDF surface. */
-  def register(spark: SparkSession): Unit = {
-    spark.udf.register("colval_strict", parseColValStrict)
-    spark.udf.register("colval_robust", parseColValRobust)
-    spark.udf.register("extract_title", extractTitleUdf)
-    graft.score.Similarity.register(spark)
-  }
 }

@@ -49,13 +49,10 @@ object Snapshots {
   /** Write stage output + manifest; returns the re-read DataFrame so the
     * downstream plan reads from the snapshot (lineage cut, resumable). */
   def commit(spark: SparkSession, df: DataFrame, root: String, stage: String,
-      partitionBy: Seq[String] = Nil, extra: Map[String, String] = Map.empty)
-      : DataFrame = {
+      extra: Map[String, String] = Map.empty): DataFrame = {
     val dataPath = s"$root/$stage"
     seal(spark, df, root, stage, extra) { observed =>
-      val w = observed.write.mode("overwrite")
-      (if (partitionBy.nonEmpty) w.partitionBy(partitionBy: _*) else w)
-        .parquet(dataPath)
+      observed.write.mode("overwrite").parquet(dataPath)
       // file sources read every column back as nullable, as an inferred
       // read of these files would
       spark.read.schema(df.schema).parquet(dataPath)
@@ -154,12 +151,11 @@ object Snapshots {
     * layout over the same files — Spark's bucket ids ride the file
     * names, so the DDL claim is sound for files this method wrote). */
   def commitBucketed(spark: SparkSession, df: DataFrame, root: String,
-      stage: String, bucketCols: Seq[String], nBuckets: Int,
-      extra: Map[String, String] = Map.empty): DataFrame = {
+      stage: String, bucketCols: Seq[String], nBuckets: Int): DataFrame = {
     require(bucketCols.nonEmpty && nBuckets > 0)
     val table = tableName(stage)
     spark.sql(s"DROP TABLE IF EXISTS $table")
-    seal(spark, df, root, stage, extra ++ Map("buckets" -> nBuckets.toString,
+    seal(spark, df, root, stage, Map("buckets" -> nBuckets.toString,
         "bucket_cols" -> bucketCols.mkString(","), "table" -> table)) {
       observed =>
         observed.write.mode("overwrite")
@@ -195,11 +191,10 @@ object Snapshots {
     * is computed this run — a resumed stage keeps the manifest of the run
     * that produced it (read back via `manifestField`). */
   def getOrCompute(spark: SparkSession, root: String, stage: String,
-      partitionBy: Seq[String] = Nil,
       extra: => Map[String, String] = Map.empty)(compute: => DataFrame)
       : DataFrame =
     if (isComplete(root, stage)) spark.read.parquet(s"$root/$stage")
-    else commit(spark, compute, root, stage, partitionBy, extra)
+    else commit(spark, compute, root, stage, extra)
 
   /** Read one field back from a stage manifest (string fields unquoted).
     * The manifest is the flat JSON object writeManifest produced. */

@@ -20,9 +20,9 @@ import graft.functions.GraftFunctions._
 object Enrichment {
 
   /** Missing-value rendering per dataset ("unknown" vs "VAL -").
-    * R14 knobs (all gated on `alignMatches` + label==1):
-    *  - `noCopy`: fields whose values must NEVER cross sides (prices —
-    *    Amazon/prompt.py:95 "NEVER invent prices. Do not copy a price").
+    * R14 knobs (all gated on `alignMatches` + label==1; `price`/`Price`
+    * values never cross sides, in any config — Amazon/prompt.py:95
+    * "NEVER invent prices. Do not copy a price"):
     *  - `versionAlign`: fields that receive the other side's version/
     *    edition tokens when they have none (Amazon/prompt.py:90-93).
     *  - `matchRules`: extra per-field cleanup applied ONLY to matched
@@ -34,7 +34,6 @@ object Enrichment {
       missing: String = "unknown",
       sources: Map[String, String] = Map.empty,    // field → input column (C3)
       alignMatches: Boolean = false,
-      noCopy: Set[String] = Set("price", "Price"),
       versionAlign: Set[String] = Set.empty,
       matchRules: Map[String, Column => Column] = Map.empty)
 
@@ -46,6 +45,9 @@ object Enrichment {
   /** Same cleanup but preserving original casing (titles keep versions). */
   def cleanText(c: Column): Column =
     wsCollapse(dedupeWords(regexp_replace(c, "[\\\\`]", "")))
+
+  /** Fields whose values never cross sides under R14a. */
+  private val noCopy = Set("price", "Price")
 
   private def renderOr(c: Column, missing: String): Column =
     coalesce(c, lit(missing))
@@ -101,7 +103,7 @@ object Enrichment {
             col(s"_n_${if (side == "left") "right" else "left"}_$f")
           // R14a: copy the other side's value when this side is missing
           val copied =
-            if (cfg.noCopy(f)) normalized
+            if (noCopy(f)) normalized
             else when(matched && normalized.isNull, other).otherwise(normalized)
           // R14b: graft the other side's version/edition tokens when this
           // side has none (no conflict possible) — matched pairs only

@@ -34,11 +34,10 @@ import org.apache.spark.sql.types.StructType
  */
 object AsofJoin {
 
-  /** @param payload right-side columns to attach, prefixed `prefix`.
+  /** @param payload right-side columns to attach, prefixed `asof_`.
     * @return left rows (all columns, original names) + prefixed payload. */
   def asofBackward(left: DataFrame, right: DataFrame, keys: Seq[String],
-      leftTs: String, rightTs: String, payload: Seq[String],
-      prefix: String = "asof_"): DataFrame = {
+      leftTs: String, rightTs: String, payload: Seq[String]): DataFrame = {
     require(keys.nonEmpty && payload.nonEmpty)
     val pType = StructType(payload.map(c => right.schema(c)))
     val lType = StructType(left.schema.fields)
@@ -62,6 +61,6 @@ object AsofJoin {
       .withColumn("_asof", last(col("_p"), ignoreNulls = true).over(w))
       .where(col("_side") === 1)
       .select(col("_l.*") +:
-        payload.map(c => col(s"_asof.$c").as(prefix + c)): _*)
+        payload.map(c => col(s"_asof.$c").as("asof_" + c)): _*)
   }
 }

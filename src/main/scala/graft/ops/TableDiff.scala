@@ -13,14 +13,14 @@ import org.apache.spark.sql.functions._
  * pass a fingerprint column (e.g. `md5(text)`) as the payload — the diff
  * then shuffles only (key, fingerprint), never the documents themselves.
  *
- * `unchanged` rows are dropped by default: at web scale they are ~99% of
+ * `unchanged` rows are always dropped: at web scale they are ~99% of
  * the corpus and the diff's consumers (re-extract, re-index, re-dedup
  * increments) only want the delta.
  */
 object TableDiff {
 
   def diffByKey(oldDf: DataFrame, newDf: DataFrame, key: Column,
-      payload: Column, keepUnchanged: Boolean = false): DataFrame = {
+      payload: Column): DataFrame = {
     val a = oldDf.select(key.as("td_key"), payload.as("td_old"))
     val b = newDf.select(key.as("td_key"), payload.as("td_new"))
     val joined = a.withColumn("td_in_old", lit(true))
@@ -29,7 +29,7 @@ object TableDiff {
       .when(col("td_in_new").isNull, "deleted")
       .when(col("td_old") <=> col("td_new"), "unchanged")
       .otherwise("changed")
-    val out = joined.select(col("td_key").as("key"), status.as("status"))
-    if (keepUnchanged) out else out.where(col("status") =!= "unchanged")
+    joined.select(col("td_key").as("key"), status.as("status"))
+      .where(col("status") =!= "unchanged")
   }
 }

@@ -246,29 +246,38 @@ object ERPipeline {
     // extract feeds blocking, payload attachment and the final assignment
     // join — materialize once
     val ex = Materialize(extract(pages))
-    // Record identity is xxhash64(url); 64-bit birthday collisions are
-    // statistically certain at 10^12 docs (silently merging entities).
-    // One aggregate job yields the row count AND the collision check
-    // (separate count() + countDistinct jobs doubled the driver round-
-    // trips for scalars over the same materialized frame).
-    val r = ex.agg(count(lit(1)),
-      countDistinct(col("url")), countDistinct(col("id"))).collect()(0)
-    require(r.getLong(1) == r.getLong(2),
-      s"xxhash64(url) id collision: ${r.getLong(1)} urls → ${r.getLong(2)} ids; " +
-        "switch to a wider id before trusting cluster output")
-    val n = Some(r.getLong(0))
+    val n = Some(checkedRows(ex))
     val blocked = block(ex, cfg, n)
     val (scored, drops) = scorePairs(ex, blocked, cfg, n)
     val comps = cluster(spark, scored, cfg)
     // Materialize the assignment (one narrow row per url): downstream
     // consumers (evaluation joins, metrics) would otherwise re-execute the
     // whole pipeline per action.
-    val assign = Materialize(ex.select(col("url"), col("id"))
+    (Materialize(assign(ex, comps)), drops)
+  }
+
+  /** Row count of an extracted frame, after checking that distinct urls
+    * map to distinct ids. Record identity is xxhash64(url); 64-bit
+    * birthday collisions are statistically certain at 10^12 docs
+    * (silently merging entities). One aggregate job yields the row count
+    * AND the collision check (separate count() + countDistinct jobs
+    * doubled the driver round-trips for scalars over the same frame). */
+  private[graft] def checkedRows(ex: DataFrame): Long = {
+    val r = ex.agg(count(lit(1)),
+      countDistinct(col("url")), countDistinct(col("id"))).collect()(0)
+    require(r.getLong(1) == r.getLong(2),
+      s"xxhash64(url) id collision: ${r.getLong(1)} urls → ${r.getLong(2)} ids; " +
+        "switch to a wider id before trusting cluster output")
+    r.getLong(0)
+  }
+
+  /** (url, id, component) for every extracted row: pages with no edge
+    * above threshold are singletons (component = own id). */
+  private[graft] def assign(ex: DataFrame, comps: DataFrame): DataFrame =
+    ex.select(col("url"), col("id"))
       .join(comps, Seq("id"), "left")
       .select(col("url"), col("id"),
-        coalesce(col("component"), col("id")).as("component")))
-    (assign, drops)
-  }
+        coalesce(col("component"), col("id")).as("component"))
 
   /** Data-driven threshold selection: P/R/F1 of "match iff score >= t" at
     * each t in `thresholds`, over labeled url pairs — evaluates the raw

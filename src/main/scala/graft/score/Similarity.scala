@@ -1,6 +1,6 @@
 package graft.score
 
-import org.apache.spark.sql.{Column, SparkSession}
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DoubleType
 
@@ -96,15 +96,5 @@ object Similarity {
     val inter = size(array_intersect(a, b)).cast(DoubleType)
     val denom = sqrt(size(a).cast(DoubleType) * size(b).cast(DoubleType))
     when(denom === 0.0, lit(0.0)).otherwise(inter / denom)
-  }
-
-  def register(spark: SparkSession): Unit = {
-    // SQL name bound to the native expression so
-    // `SELECT jaro_winkler(a, b)` codegens too.
-    spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "jaro_winkler",
-      (children: Seq[org.apache.spark.sql.catalyst.expressions.Expression]) =>
-        JaroWinklerExpr.build(children),
-      "scala_udf")
   }
 }

@@ -31,10 +31,14 @@ import graft.functions.GraftFunctions
  */
 object Bm25 {
 
-  /** @param queries (query_id: long, term: string) rows — pre-tokenized.
+  /** Okapi BM25 with k1 = 1.2 and b = 0.75, the constants the DuckDB
+    * oracle fixes.
+    * @param queries (query_id: long, term: string) rows — pre-tokenized.
     * @return (query_id, doc_id, score, rank) with rank 1..k per query. */
   def topK(docs: DataFrame, id: Column, text: Column, queries: DataFrame,
-      k: Int, k1: Double = 1.2, b: Double = 0.75): DataFrame = {
+      k: Int): DataFrame = {
+    val k1 = 1.2
+    val b = 0.75
     // Deliberately the DECLARATIVE tokenizer: for bare tokenization the
     // native split/filter chain operates on UTF8String in place, while a
     // UDF pays String conversions both ways (measured slower). The JVM

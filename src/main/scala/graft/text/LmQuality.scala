@@ -15,7 +15,8 @@ import org.apache.spark.sql.types.{DecimalType, DoubleType, LongType}
  * distributional signal: it needs corpus-level statistics, not just the
  * row.
  *
- *   P(b|a) = (C(a b) + k) / (C(a) + k·V)        V = corpus vocab size
+ *   P(b|a) = (C(a b) + k) / (C(a) + k·V)        V = corpus vocab size,
+ *                                               k = 0.5 (the oracle's)
  *   score(doc) = mean over its bigrams of ln P(b|a)
  *
  * Scale shape: two corpus aggregations (unigram + bigram counts, both
@@ -44,8 +45,8 @@ object LmQuality {
     * @return (id, n_bigrams, avg_ll): docs with < 2 tokens get
     *         n_bigrams = 0 and a null score (no evidence, not bad
     *         evidence — callers gate on n_bigrams). */
-  def bigramScores(docs: DataFrame, id: Column, text: Column,
-      addK: Double = 0.5): DataFrame = {
+  def bigramScores(docs: DataFrame, id: Column, text: Column): DataFrame = {
+    val addK = 0.5
     val toks = graft.functions.GraftFunctions.tokens(text)
     val base = docs.select(id.as("lm_id"), toks.as("toks"))
     val nTok = size(col("toks"))

@@ -57,8 +57,11 @@ object TextAnalysis {
     * length >= w + k - 1 contributes at least one shared fingerprint —
     * the standard containment/near-dup primitive for web-scale text.
     * Narrow per-row JVM function; output is a small Array[Long] per doc
-    * suitable for explode + groupBy postings-list joins. */
-  def winnowFingerprints(c: Column, k: Int = 5, w: Int = 4): Column = {
+    * suitable for explode + groupBy postings-list joins. k = 5 and w = 4,
+    * the DuckDB oracle's constants. */
+  def winnowFingerprints(c: Column): Column = {
+    val k = 5
+    val w = 4
     val f = udf { (s0: String) =>
       if (s0 == null) Array.empty[Long]
       else {
@@ -122,9 +125,8 @@ object TextAnalysis {
     * mega-LSH-block, and the same fix as ERPipeline's fractional
     * MaxTokenDf: an absolute row cap is meaningless across corpus sizes);
     * pairs that share ONLY boilerplate are intentionally not candidates.
-    * The drop is doubly observable: filtered fingerprints lower n_shared
-    * (never silently cap pair rows), and the dropped postings surface in
-    * the stats table (fp, df) — one row per stoplisted fingerprint.
+    * The drop is observable in the pairs: filtered fingerprints lower
+    * n_shared (never silently cap pair rows).
     *
     * Two caps with DIFFERENT jobs, mirroring ERPipeline's MaxTokenDf +
     * PairCapPerBlock split exactly:
@@ -137,18 +139,16 @@ object TextAnalysis {
     *   bounded only by an ABSOLUTE df cap (a fractional one grows the
     *   per-list cost as (frac×n)²: measured 1.3 s → 22 s on a 10×
     *   corpus when the fraction alone governed). The effective cap is
-    *   min(frac-derived, abs); every trimmed fingerprint lands in stats.
-    * @param nDocs corpus size if the caller already knows it (skips one
-    *   count job — same contract as ERPipeline.block). */
-  def winnowContainmentPairsWithStats(docs: DataFrame, idCol: Column,
-      textCol: Column, k: Int = 5, w: Int = 4, floor: Double = 0.5,
-      maxPostingsFrac: Double = 0.01, maxPostingsAbs: Long = 256L,
-      nDocs: Option[Long] = None): (DataFrame, DataFrame) = {
-    val n = nDocs.getOrElse(docs.count())
+    *   min(frac-derived, abs). */
+  def winnowContainmentPairs(docs: DataFrame, idCol: Column,
+      textCol: Column, floor: Double = 0.5,
+      maxPostingsFrac: Double = 0.01, maxPostingsAbs: Long = 256L)
+      : DataFrame = {
+    val n = docs.count()
     val maxPostings = math.min(maxPostingsAbs,
       math.max(2L, math.floor(n * maxPostingsFrac).toLong))
     val fps = docs.select(idCol.as("doc_id"),
-      winnowFingerprints(textCol, k, w).as("fps"))
+      winnowFingerprints(textCol).as("fps"))
       .select(col("doc_id"), size(col("fps")).cast(LongType).as("n_fp"),
         explode(col("fps")).as("fp"))
     // document-frequency trim of boilerplate postings in ONE pass: the
@@ -162,13 +162,9 @@ object TextAnalysis {
     val post = fps.withColumn("_df", count(lit(1)).over(win))
       .where(col("_df") <= maxPostings && col("_df") >= 2)
       .drop("_df")
-    // drop stats stay a separate slim-aggregate lineage (diagnostic arm,
-    // only evaluated when a caller consumes it)
-    val dropped = fps.groupBy(col("fp")).agg(count(lit(1)).as("df"))
-      .where(col("df") > maxPostings)
     val l = post.select(col("fp"), col("doc_id").as("l_id"), col("n_fp").as("l_n"))
     val r = post.select(col("fp"), col("doc_id").as("r_id"), col("n_fp").as("r_n"))
-    val pairs = l.join(r, Seq("fp")).where(col("l_id") < col("r_id"))
+    l.join(r, Seq("fp")).where(col("l_id") < col("r_id"))
       // fps are deduped per document, so one posting per (doc, fp):
       // count(*) per pair IS the shared-fingerprint count
       .groupBy(col("l_id"), col("r_id"), col("l_n"), col("r_n"))
@@ -177,15 +173,5 @@ object TextAnalysis {
         least(col("l_n"), col("r_n")).cast(DoubleType), 6))
       .where(col("containment") >= floor)
       .select(col("l_id"), col("r_id"), col("n_shared"), col("containment"))
-    (pairs, dropped)
   }
-
-  /** Pairs-only convenience wrapper over
-    * [[winnowContainmentPairsWithStats]]. */
-  def winnowContainmentPairs(docs: DataFrame, idCol: Column, textCol: Column,
-      k: Int = 5, w: Int = 4, floor: Double = 0.5,
-      maxPostingsFrac: Double = 0.01, maxPostingsAbs: Long = 256L,
-      nDocs: Option[Long] = None): DataFrame =
-    winnowContainmentPairsWithStats(docs, idCol, textCol, k, w, floor,
-      maxPostingsFrac, maxPostingsAbs, nDocs)._1
 }

@@ -89,8 +89,7 @@ class AnnSpec extends SparkSuite {
     spark.conf.set("spark.sql.adaptive.enabled", "false")
     try {
       val emb = fixture(50, 32)
-      val out = Ann.cosineNearDupLsh(emb, bits = 8, cosFloor = 0.95,
-        dimOpt = Some(32))
+      val out = Ann.cosineNearDupLsh(emb, bits = 8, cosFloor = 0.95)
       import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
       val shuffles = out.queryExecution.executedPlan.collect {
         case s: ShuffleExchangeExec => s.output.map(_.name)
@@ -152,7 +151,7 @@ class AnnSpec extends SparkSuite {
 
   test("kmeansAssign: declarative twin matches nearestList; zero shuffle") {
     val emb = fixture(60, 32)
-    val cents = Ann.trainIvfCentroids(emb, nlist = 6, lloydIters = 2)
+    val cents = Ann.trainIvfCentroids(emb, nlist = 6)
     val a = Ann.kmeansAssign(emb, cents)
       .select($"vec_id", $"topic").as[(Long, Long)].collect().toMap
     val b = emb.select($"vec_id",

@@ -45,21 +45,9 @@ class IncrementalDedupSpec extends SparkSuite {
   test("increment side broadcasts; corpus index is never re-shuffled") {
     val c = corpus(); val inc = increment()
     val index = Dedup.minhashBandIndex(c, $"doc_id", $"text", 8, 4)
-    val (pairs, _) = Dedup.incrementalMinhashPairsWithStats(inc, $"doc_id",
+    val pairs = Dedup.incrementalMinhashPairs(inc, $"doc_id",
       $"text", index, c, $"doc_id", $"text", 8, 4, 0.7)
     val plan = pairs.queryExecution.executedPlan.toString
     assert(plan.contains("BroadcastHashJoin"), plan)
-  }
-
-  test("hot-block cap drops are surfaced, not silent") {
-    val c = corpus(); val inc = increment()
-    // force a hot block: collapse every index row onto one band key
-    val degenerate = Dedup.minhashBandIndex(c, $"doc_id", $"text", 8, 4)
-      .withColumn("block_key", lit(42L))
-    val (_, drops) = Dedup.incrementalMinhashPairsWithStats(inc, $"doc_id",
-      $"text", degenerate, c, $"doc_id", $"text", 8, 4, 0.7, blockCap = 100)
-    val d = drops.as[(Long, Long, Long)].collect()
-    assert(d.length === 1)
-    assert(d.head._2 === 500L * 8 && d.head._3 === 500L * 8 - 100)
   }
 }

@@ -152,24 +152,21 @@ class TextAnalysisSpec extends SparkSuite {
     // 6 docs share one boilerplate sentence; two of them also share a
     // long distinctive passage. At maxPostingsFrac = 0.5 (cap = 3 of 6)
     // the boilerplate fingerprints (df ~ 6) are stoplisted — the
-    // distinctive pair must still surface, the drops must be observable.
+    // distinctive pair must still surface, the drops must be observable
+    // in the pairs.
     val boiler = "all rights reserved contact us terms of service apply here"
     val unique = "distinctive shared passage about tungsten codegen stages"
     val docs = (
       Seq((1L, s"$unique $boiler"), (2L, s"$unique AND MORE $boiler")) ++
       (3L to 6L).map(i => (i, s"document number $i $boiler"))
     ).toDF("doc_id", "text")
-    val (pairs, drops) = TextAnalysis.winnowContainmentPairsWithStats(
+    val pairs = TextAnalysis.winnowContainmentPairs(
       docs, $"doc_id", $"text", floor = 0.3, maxPostingsFrac = 0.5)
     val got = pairs.select("l_id", "r_id").as[(Long, Long)].collect().toSet
     assert(got === Set((1L, 2L)), s"got $got")
-    val droppedDfs = drops.select("df").as[Long].collect()
-    assert(droppedDfs.nonEmpty, "boilerplate fingerprints must surface")
-    assert(droppedDfs.forall(_ > 3L)) // cap = floor(0.5 * 6) = 3
     // frac 1.0 disables the stoplist: boilerplate-only pairs reappear
-    val (allPairs, noDrops) = TextAnalysis.winnowContainmentPairsWithStats(
+    val allPairs = TextAnalysis.winnowContainmentPairs(
       docs, $"doc_id", $"text", floor = 0.3, maxPostingsFrac = 1.0)
-    assert(noDrops.count() === 0L)
     assert(allPairs.count() > pairs.count())
   }
 }

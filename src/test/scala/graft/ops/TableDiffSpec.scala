@@ -30,13 +30,6 @@ class TableDiffSpec extends SparkSuite {
     assert(withNullChange(4L) === "changed")
   }
 
-  test("keepUnchanged surfaces the full classification") {
-    val got = TableDiff.diffByKey(oldSnap, newSnap, $"id", $"text",
-      keepUnchanged = true).as[(Long, String)].collect().toMap
-    assert(got(1L) === "unchanged" && got(4L) === "unchanged")
-    assert(got.size === 5)
-  }
-
   test("fingerprint diff agrees with payload diff") {
     val a = TableDiff.diffByKey(oldSnap, newSnap, $"id", md5($"text"))
       .as[(Long, String)].collect().toSet

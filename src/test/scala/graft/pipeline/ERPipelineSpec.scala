@@ -115,6 +115,16 @@ class ERPipelineSpec extends SparkSuite {
     assert(comps === 3000L, s"$comps components for 3000 planted entities")
   }
 
+  test("checkedRows fails by name when two urls share one id") {
+    import spark.implicits._
+    val ok = Seq(("u1", 1L), ("u2", 2L), ("u2", 2L)).toDF("url", "id")
+    assert(ERPipeline.checkedRows(ok) === 3L)
+    val clash = Seq(("u1", 1L), ("u2", 1L), ("u3", 3L)).toDF("url", "id")
+    val e = intercept[IllegalArgumentException](ERPipeline.checkedRows(clash))
+    assert(e.getMessage.contains("xxhash64(url) id collision: 3 urls → 2 ids"),
+      e.getMessage)
+  }
+
   test("extraction satisfies the per-row invariant on generated corpus") {
     val ex = ERPipeline.extract(PageGen.pages(spark, 100, seed = 3L))
     assert(ex.where(length(col("canonical_text")) === 0).count() === 0)

@@ -205,7 +205,7 @@ class PlanSpec extends SparkSuite {
         .select(($"doc_id" + 1000L).as("doc_id"),
           concat($"text", lit(" fresh")).as("text"))
       val index = graft.dedup.Dedup.minhashBandIndex(corpus, $"doc_id", $"text", 4, 2)
-      val (pairs, _) = graft.dedup.Dedup.incrementalMinhashPairsWithStats(
+      val pairs = graft.dedup.Dedup.incrementalMinhashPairs(
         inc, $"doc_id", $"text", index, corpus, $"doc_id", $"text", 4, 2, 0.5)
       // the band join itself must be broadcast: any (block_key,
       // corpus_id) exchange must sit ABOVE a broadcast prune (the
@@ -358,6 +358,17 @@ class PlanSpec extends SparkSuite {
   test("emb_* queries stay within their warm job budgets") {
     Seq("emb_ann_topk" -> 5, "emb_ann_ivf" -> 12, "emb_kmeans_topics" -> 9,
       "emb_neardup_lsh" -> 8, "emb_ann_ivf_probe" -> 12).foreach {
+      case (q, budget) =>
+        val jobs = warmJobs(q)
+        assert(jobs <= budget, s"$q ran $jobs Spark jobs warm")
+    }
+  }
+
+  test("doc, eval and er queries stay within their warm job budgets") {
+    Seq("doc_winnow_containment" -> 8, "doc_incremental_neardup" -> 11,
+      "doc_lm_quality" -> 7, "doc_bm25_topk" -> 15, "events_asof" -> 3,
+      "crawl_snapshot_diff" -> 6, "eval_threshold_sweep" -> 4,
+      "er_f1" -> 6).foreach {
       case (q, budget) =>
         val jobs = warmJobs(q)
         assert(jobs <= budget, s"$q ran $jobs Spark jobs warm")

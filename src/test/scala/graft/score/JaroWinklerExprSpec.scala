@@ -68,15 +68,24 @@ class JaroWinklerExprSpec extends SparkSuite {
       df.queryExecution.executedPlan.toString)
   }
 
+  /** Installs GraftExtensions' functions into this suite's session, as
+    * `spark.sql.extensions` would at session build. */
+  private def installGraftExtensions(): Unit = {
+    val ext = new org.apache.spark.sql.SparkSessionExtensions
+    new graft.GraftExtensions().apply(ext)
+    org.apache.spark.sql.graft.ColumnBridge
+      .registerFunctions(ext, spark.sessionState.functionRegistry)
+  }
+
   test("SQL surface: registered name resolves to the native expression") {
-    Similarity.register(spark)
+    installGraftExtensions()
     val r = spark.sql(
       "SELECT jaro_winkler('martha', 'marhta') AS jw").collect()(0)
     assert(math.abs(r.getDouble(0) - 0.9611) < 1e-4)
   }
 
   test("wrong arity is an analysis error, not an IndexOutOfBounds") {
-    Similarity.register(spark)
+    installGraftExtensions()
     val e1 = intercept[org.apache.spark.sql.AnalysisException] {
       spark.sql("SELECT jaro_winkler('a')").collect()
     }
