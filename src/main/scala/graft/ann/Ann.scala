@@ -317,7 +317,11 @@ object Ann {
     idPairs
       .join(payload.toDF("l_id", "l_emb"), Seq("l_id"))
       .join(payload.toDF("r_id", "r_emb"), Seq("r_id"))
-      .withColumn("cos", round(cosine(col("l_emb"), col("r_emb")), 6))
+      // Marked non-deterministic only as a plan barrier: otherwise the
+      // optimizer inlines `cos` into the floor and pushes that into the
+      // r_emb join condition, a second cosine per candidate pair.
+      .withColumn("cos", round(cosineUdf.asNondeterministic()(
+        col("l_emb"), col("r_emb")), 6))
       .where(col("cos") >= cosFloor)
       .select(col("l_id"), col("r_id"), col("cos"))
   }

@@ -5,13 +5,15 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.DecimalType
 import graft.io.Materialize
+import graft.ops.DriverFit
 
 /**
  * Transitive closure via alternating large-star / small-star iterations
  * (Kiveris et al., "Connected Components in MapReduce and Beyond",
  * SoCC 2014) over plain DataFrames — no GraphX, no driver-side state
  * (SURVEY.md §7.2 M6; north_rule "union-find transitive closure as
- * iterative DataFrame joins with checkpointed convergence").
+ * iterative DataFrame joins with checkpointed convergence") — unless the
+ * edge set fits the driver (see `run`), where a union-find closes it.
  *
  * Input: undirected edges (src, dst) as 64-bit ids. Output: (id, component)
  * where component = the minimum id in the node's component — a total,
@@ -39,20 +41,23 @@ object ConnectedComponents {
   /** @param edges DataFrame with two numeric columns (src, dst).
     * @param driverUnionFindMaxEdges adaptive small-graph cutoff: when the
     *   DEDUPED edge set (counted for free by the first round's observe
-    *   checksum) fits under this bound, the closure is computed by a
-    *   driver-side union-find over the collected edges instead of the
-    *   O(log n) alternating-star rounds — the same size-adaptive
-    *   discipline as a broadcast join. Driver footprint at the default
-    *   500k-edge bound: primitive edge arrays + the parent map + the
-    *   result rows ≈ low hundred MB transient worst-case (comparable to
-    *   a mid-sized broadcast relation) — size the bound to the driver
-    *   heap, not just taste. Near-dup CC inputs are pair tables that are
-    *   routinely orders of magnitude smaller than the corpus, so this
-    *   removes every per-round shuffle + materialization in the common
-    *   case while the distributed path runs unchanged beyond the bound.
-    *   Labeling is identical by construction (min id per component;
-    *   union always roots the smaller id, spec-pinned against the
-    *   distributed path). Set to 0 to force the distributed path.
+    *   checksum) fits under this bound AND under [[graft.ops.DriverFit]]'s
+    *   budget — the session's broadcast threshold, capped by
+    *   `spark.driver.maxResultSize`, the same budget PageRank's driver
+    *   path reads: 436,906 edges at the default 10 MB and 24 bytes a row —
+    *   the closure is computed by a driver-side union-find over the
+    *   collected edges instead of the O(log n) alternating-star rounds.
+    *   Driver footprint: the collected rows, then two long arrays per
+    *   edge for the union-find's input, the parent map and the result
+    *   rows — tens of MB transient at the default budget. Near-dup CC
+    *   inputs are pair tables that are routinely orders of magnitude
+    *   smaller than the corpus, so this removes every per-round shuffle +
+    *   materialization in the common case while the distributed path
+    *   runs unchanged beyond the bound. Labeling is identical by
+    *   construction (min id per component; union always roots the
+    *   smaller id, spec-pinned against the distributed path). Set to 0,
+    *   or switch broadcast off (`autoBroadcastJoinThreshold` ≤ 0), to
+    *   force the distributed path.
     * @return DataFrame(id LONG, component LONG), one row per distinct node. */
   def run(spark: SparkSession, edges: DataFrame,
       driverUnionFindMaxEdges: Long = 500000L): DataFrame = {
@@ -83,9 +88,11 @@ object ConnectedComponents {
     var (cur, curSum) = materializeWithChecksum(base.select($"hi".as("u"), $"lo".as("v")))
 
     // Small-graph fast path: the deduped edge count came for free with the
-    // first checksum; under the cutoff, collect the (already materialized)
-    // edges and close them on the driver — zero further jobs.
-    if (curSum._1 <= driverUnionFindMaxEdges) return unionFindLocal(spark, cur)
+    // first checksum; under the cutoff and the session's driver budget,
+    // collect the (already materialized) edges and close them on the
+    // driver — zero further jobs.
+    if (curSum._1 <= math.min(driverUnionFindMaxEdges, DriverFit.rows(cur)))
+      return unionFindLocal(spark, cur)
 
     val byU = Window.partitionBy($"u")
     var converged = false
@@ -138,16 +145,8 @@ object ConnectedComponents {
     * mirrors the distributed path (id/component LONG, nullable). */
   private def unionFindLocal(spark: SparkSession, edges: DataFrame)
       : DataFrame = {
-    // primitive edge arrays (the collected Rows are released before the
-    // node pass) — the boxed-collection variant roughly tripled the
-    // transient driver footprint at the cutoff
-    var rows = edges.collect()
-    val n = rows.length
-    val us = new Array[Long](n)
-    val vs = new Array[Long](n)
-    var i = 0
-    while (i < n) { us(i) = rows(i).getLong(0); vs(i) = rows(i).getLong(1); i += 1 }
-    rows = null
+    val Array(us, vs) = DriverFit.collectLongs(edges)
+    val n = us.length
     val parent = scala.collection.mutable.LongMap.empty[Long]
     def find(x: Long): Long = {
       var root = x
@@ -158,7 +157,7 @@ object ConnectedComponents {
       }
       root
     }
-    i = 0
+    var i = 0
     while (i < n) {
       val ra = find(us(i)); val rb = find(vs(i))
       if (ra != rb) {
@@ -167,22 +166,7 @@ object ConnectedComponents {
       }
       i += 1
     }
-    // distinct node ids via one primitive sort + in-place dedup
-    val ids = new Array[Long](2 * n)
-    System.arraycopy(us, 0, ids, 0, n)
-    System.arraycopy(vs, 0, ids, n, n)
-    java.util.Arrays.sort(ids)
-    val out = new java.util.ArrayList[org.apache.spark.sql.Row]()
-    i = 0
-    while (i < ids.length) {
-      if (i == 0 || ids(i) != ids(i - 1))
-        out.add(org.apache.spark.sql.Row(ids(i), find(ids(i))))
-      i += 1
-    }
-    spark.createDataFrame(out, org.apache.spark.sql.types.StructType(Seq(
-      org.apache.spark.sql.types.StructField("id",
-        org.apache.spark.sql.types.LongType),
-      org.apache.spark.sql.types.StructField("component",
-        org.apache.spark.sql.types.LongType))))
+    val ids = DriverFit.nodeIds(us, vs)
+    DriverFit.longPairs(spark, "id", "component", ids, ids.map(find))
   }
 }

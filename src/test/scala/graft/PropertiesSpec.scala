@@ -163,8 +163,11 @@ class PropertiesSpec extends SparkSuite {
     val edges = sample(Gen.zip(Gen.chooseNum(0L, 40L), Gen.chooseNum(0L, 40L)),
       150, seed = 8L).filter { case (s, d) => s != d }.distinct
     val df = edges.toDF("src", "dst")
-    val got = graft.graph.PageRank.run(spark, df, iters = 7)
+    def ranks = graft.graph.PageRank.run(spark, df, iters = 7)
       .as[(Long, Long)].collect().toMap
+    // the driver path, then the distributed rounds
+    val got = ranks
+    val rounds = withNoBroadcast(ranks)
     // driver-side reference: identical integer recurrence, plain Scala
     val odeg = edges.groupBy(_._1).map { case (s, xs) => s -> xs.size.toLong }
     val nodes = (edges.map(_._1) ++ edges.map(_._2)).distinct
@@ -177,6 +180,7 @@ class PropertiesSpec extends SparkSuite {
       r = nodes.map(id => id -> (tp + recv(id))).toMap
     }
     assert(got === r)
+    assert(rounds === r)
   }
 
   test("P: TopK.perKey == naive window on random skewed data with null keys") {

@@ -38,14 +38,20 @@ abstract class SparkSuite extends AnyFunSuite {
     } finally sc.removeSparkListener(tally)
   }
 
-  /** Runs `body` with broadcast joins off, restoring the settings after:
-    * both the static and the AQE-runtime thresholds, since AQE can re-plan
-    * a small side to broadcast even when the static one is off. */
-  def withNoBroadcast[A](body: => A): A = {
+  /** Runs `body` with broadcast joins off (see `withBroadcastThreshold`).
+    * The driver paths of PageRank and ConnectedComponents share this
+    * budget, so it also sends them to their distributed rounds. */
+  def withNoBroadcast[A](body: => A): A = withBroadcastThreshold("-1")(body)
+
+  /** Runs `body` with the broadcast threshold at `bytes`, restoring the
+    * settings after: both the static and the AQE-runtime thresholds, since
+    * AQE can re-plan a small side to broadcast even when the static one is
+    * off. */
+  def withBroadcastThreshold[A](bytes: String)(body: => A): A = {
     val keys = Seq("spark.sql.autoBroadcastJoinThreshold",
       "spark.sql.adaptive.autoBroadcastJoinThreshold")
     val prev = keys.map(k => k -> spark.conf.getOption(k))
-    keys.foreach(spark.conf.set(_, "-1"))
+    keys.foreach(spark.conf.set(_, bytes))
     try body finally prev.foreach {
       case (k, Some(v)) => spark.conf.set(k, v)
       case (k, None) => spark.conf.unset(k)

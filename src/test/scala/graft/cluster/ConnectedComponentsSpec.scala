@@ -9,6 +9,10 @@ class ConnectedComponentsSpec extends SparkSuite {
   /** Spark jobs of the 60-chain forced-distributed fixture. */
   private val JobCeiling = 22
 
+  /** Spark jobs of the union-find path plus the collect, as measured: the
+    * checksummed edge materialization and the edge collect. */
+  private val UnionFindJobs = 3
+
   private def runCc(edges: Seq[(Long, Long)]): Map[Long, Long] = {
     import spark.implicits._
     ConnectedComponents.run(spark, edges.toDF("src", "dst"))
@@ -66,6 +70,28 @@ class ConnectedComponentsSpec extends SparkSuite {
       assert(distributed === small, s"trial $trial")
       assert(distributed === unionFind(edges), s"trial $trial vs reference")
     }
+  }
+
+  test("broadcast off sends a small graph to the distributed rounds") {
+    // the union-find cutoff shares the session's driver budget, so with
+    // broadcast off even a graph far under driverUnionFindMaxEdges runs
+    // the star rounds (more than the union-find path's jobs)
+    import spark.implicits._
+    val rnd = new Random(11)
+    val edges = (1 to 120).map(_ =>
+      (rnd.nextLong(80), rnd.nextLong(80))).filter { case (a, b) => a != b }
+    val df = edges.toDF("src", "dst")
+    def labels = ConnectedComponents.run(spark, df)
+      .as[(Long, Long)].collect().toMap
+    val (small, smallJobs) = withJobCount(labels)
+    val (rounds, roundJobs) = withNoBroadcast(withJobCount(labels))
+    assert(rounds === small)
+    assert(small === unionFind(edges))
+    info(s"union-find: $smallJobs jobs; star rounds: $roundJobs")
+    assert(smallJobs <= UnionFindJobs,
+      s"union-find path ran $smallJobs Spark jobs")
+    assert(roundJobs > UnionFindJobs,
+      s"broadcast off ran $roundJobs Spark jobs: not the star rounds")
   }
 
   /** Forced distributed path: the output rows, as collected. */

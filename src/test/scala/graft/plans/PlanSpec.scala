@@ -317,6 +317,15 @@ class PlanSpec extends SparkSuite {
     assert(calls.values.toSeq === Seq(1), calls)
   }
 
+  test("emb_neardup_lsh evaluates the cosine UDF once per candidate pair") {
+    // the floor stays a filter over the projected cosine, not a second
+    // call in the r_emb join condition
+    val calls = udfCallsByInput(
+      SparkEntry.queries("emb_neardup_lsh")(spark, dir))
+      .filter(_._1.size == 2)
+    assert(calls.values.toSeq === Seq(1), calls)
+  }
+
   test("doc_decontaminate evaluates the n-gram UDF once per row on each side") {
     // train docs and eval rows are two pipelines, one UDF call each
     val calls = udfCallsByInput(
@@ -364,11 +373,18 @@ class PlanSpec extends SparkSuite {
     }
   }
 
+  test("web_pagerank stays within its warm job budget") {
+    // the link graph fits the driver budget: one edge materialization and
+    // one collect instead of ten distributed rounds (23 jobs warm before)
+    val jobs = warmJobs("web_pagerank")
+    assert(jobs <= 7, s"web_pagerank ran $jobs Spark jobs warm")
+  }
+
   test("doc, eval and er queries stay within their warm job budgets") {
     Seq("doc_winnow_containment" -> 8, "doc_incremental_neardup" -> 11,
       "doc_lm_quality" -> 7, "doc_bm25_topk" -> 15, "events_asof" -> 3,
       "crawl_snapshot_diff" -> 6, "eval_threshold_sweep" -> 4,
-      "er_f1" -> 6).foreach {
+      "er_f1" -> 4).foreach {
       case (q, budget) =>
         val jobs = warmJobs(q)
         assert(jobs <= budget, s"$q ran $jobs Spark jobs warm")
