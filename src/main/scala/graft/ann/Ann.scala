@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.types._
+import graft.functions.GraftFunctions.mix64
 
 /**
  * Approximate-nearest-neighbor search over an embedding column.
@@ -86,14 +87,6 @@ object Ann {
       .where(col("rank") <= k)
       .select(col("query_id"), col("vec_id").as("neighbor_id"),
         col("cos"), col("rank"))
-  }
-
-  /** splitmix64 finalizer — deterministic sign stream for the planes. */
-  @inline private def mix64(x0: Long): Long = {
-    var x = x0 + 0x9E3779B97F4A7C15L
-    x = (x ^ (x >>> 30)) * 0xBF58476D1CE4E5B9L
-    x = (x ^ (x >>> 27)) * 0x94D049BB133111EBL
-    x ^ (x >>> 31)
   }
 
   // ---------------- IVF (inverted-file) ANN --------------------------------

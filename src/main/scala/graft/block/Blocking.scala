@@ -3,6 +3,7 @@ package graft.block
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
+import graft.functions.GraftFunctions.{fnv1a64, mix64}
 
 /**
  * Blocking-key generation: exact token-set fingerprints + MinHash-LSH
@@ -16,22 +17,6 @@ import org.apache.spark.sql.expressions.Window
  * table — no silent drops.
  */
 object Blocking {
-
-  /** splitmix64 finalizer — deterministic 64-bit mixing. */
-  @inline private def mix64(x0: Long): Long = {
-    var x = x0 + 0x9E3779B97F4A7C15L
-    x = (x ^ (x >>> 30)) * 0xBF58476D1CE4E5B9L
-    x = (x ^ (x >>> 27)) * 0x94D049BB133111EBL
-    x ^ (x >>> 31)
-  }
-
-  /** FNV-1a 64 over UTF-16 code units. */
-  @inline private def hashStr(s: String): Long = {
-    var h = -3750763034362895579L
-    var i = 0
-    while (i < s.length) { h ^= s.charAt(i); h *= 1099511628211L; i += 1 }
-    h
-  }
 
   /** MinHash band keys as ONE compact JVM function per row.
     *
@@ -48,7 +33,7 @@ object Blocking {
       val k = bands * rowsPerBand
       val mins = Array.fill(k)(Long.MaxValue)
       tokens.foreach { t =>
-        val h0 = hashStr(t)
+        val h0 = fnv1a64(t)
         var i = 0
         while (i < k) {
           val h = mix64(h0 ^ mix64(i.toLong))

@@ -31,45 +31,16 @@ object Dedup {
           .partitionBy(col("_h")).orderBy(idCol)) === 1)
       .where(col("_keep")).drop("_h", "_keep")
 
-  /** Broder-style w-shingling: distinct word n-grams of the lowercased
-    * text, as ONE compact JVM function per row.
-    *
-    * PERF (guide §1.2 step 2): the previous pure-expression formulation
-    * (transform/sequence/element_at/concat_ws lambdas) is evaluated
-    * INTERPRETED by Catalyst (higher-order functions are CodegenFallback),
-    * allocating per shingle element — it dominated the per-row cost of
-    * every minhash scan. This UDF replays the identical chain in one JVM
-    * loop: the tokenizer twin (GraftFunctions.tokensJvm — each step the
-    * same library call Spark's native expressions make; parity-spec'd),
-    * then sliding w-grams joined by " ", first-
-    * occurrence dedup (array_distinct semantics). Output arrays are
-    * element-identical on every input the old chain could evaluate
-    * (shingle-parity spec); inputs with fewer than w tokens made the old
-    * chain throw under ANSI (sequence(1,0) descends into element_at(·,0))
-    * — they now yield the natural truncated shingle. */
+  /** Broder-style w-shingling: distinct word w-grams of the tokenized
+    * text (GraftFunctions.wordGrams over tokensJvm), first occurrence
+    * first (array_distinct order). A doc with fewer than w tokens yields
+    * its one truncated shingle (all its tokens); a doc with none yields
+    * nothing. */
   def wordShingles(textCol: Column, w: Int = 3): Column = {
     val f = udf { (s: String) =>
       val toks = GraftFunctions.tokensJvm(s)
-      if (toks == null || toks.length == 0) Array.empty[String]
-      else {
-        val nTok = toks.length
-        val out = new java.util.LinkedHashSet[String]()
-        val last = math.max(nTok - w, 0)
-        var start = 0
-        while (start <= last) {
-          val sb = new java.lang.StringBuilder()
-          var j = start
-          val end = math.min(start + w, nTok)
-          while (j < end) {
-            if (j > start) sb.append(' ')
-            sb.append(toks(j))
-            j += 1
-          }
-          out.add(sb.toString)
-          start += 1
-        }
-        out.toArray(new Array[String](out.size))
-      }
+      if (toks == null || toks.isEmpty) Array.empty[String]
+      else GraftFunctions.wordGrams(toks, math.min(w, toks.length)).distinct
     }
     f(textCol)
   }
@@ -168,10 +139,7 @@ object Dedup {
     else {
       val acc = new Array[Int](64)
       toks.foreach { t =>
-        // xxhash-free deterministic 64-bit string hash (FNV-1a 64)
-        var h = -3750763034362895579L // FNV offset basis
-        var i = 0
-        while (i < t.length) { h ^= t.charAt(i); h *= 1099511628211L; i += 1 }
+        val h = GraftFunctions.fnv1a64(t)
         var b = 0
         while (b < 64) { if (((h >>> b) & 1L) == 1L) acc(b) += 1 else acc(b) -= 1; b += 1 }
       }

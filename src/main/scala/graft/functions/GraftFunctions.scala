@@ -162,9 +162,9 @@ object GraftFunctions {
     * the same Java-regex replace and split, empties removed. For hot
     * scans: the declarative `tokens` chain ends in a `filter` lambda,
     * which Catalyst evaluates interpreted (CodegenFallback), so paths
-    * that tokenize the whole corpus (BM25 postings, decontamination
-    * grams, shingling) use this instead. Null input → null, matching the
-    * null-propagating column chain. */
+    * that build word grams over the whole corpus ([[wordGrams]]: near-dup
+    * shingles, decontamination and repetition grams) use this instead.
+    * Null input → null, matching the null-propagating column chain. */
   def tokensJvm(s: String): Array[String] = {
     if (s == null) null
     else {
@@ -182,5 +182,42 @@ object GraftFunctions {
     }
   }
 
-  val tokensUdf = udf(tokensJvm _)
+  /** Every sliding word n-gram of `toks`, joined by " ", in order, with
+    * duplicates kept; empty for null input or fewer than `n` tokens. The
+    * one word-gram builder behind near-dup shingles, decontamination
+    * grams and repetition signals: one JVM loop per row instead of the
+    * interpreted (CodegenFallback) transform/slice lambdas. */
+  private[graft] def wordGrams(toks: Array[String], n: Int): Array[String] = {
+    require(n >= 1, s"ngram order must be >= 1, got $n")
+    if (toks == null || toks.length < n) Array.empty[String]
+    else {
+      val out = new Array[String](toks.length - n + 1)
+      var i = 0
+      while (i < out.length) {
+        val sb = new java.lang.StringBuilder(toks(i))
+        var j = 1
+        while (j < n) { sb.append(' ').append(toks(i + j)); j += 1 }
+        out(i) = sb.toString
+        i += 1
+      }
+      out
+    }
+  }
+
+  /** splitmix64 finalizer: deterministic 64-bit mixing (MinHash band
+    * keys, random-hyperplane signs). */
+  @inline private[graft] def mix64(x0: Long): Long = {
+    var x = x0 + 0x9E3779B97F4A7C15L
+    x = (x ^ (x >>> 30)) * 0xBF58476D1CE4E5B9L
+    x = (x ^ (x >>> 27)) * 0x94D049BB133111EBL
+    x ^ (x >>> 31)
+  }
+
+  /** FNV-1a 64 over UTF-16 code units (MinHash token hash, SimHash). */
+  @inline private[graft] def fnv1a64(s: String): Long = {
+    var h = -3750763034362895579L
+    var i = 0
+    while (i < s.length) { h ^= s.charAt(i); h *= 1099511628211L; i += 1 }
+    h
+  }
 }

@@ -24,38 +24,36 @@ object Ids {
     * upper 33 bits — recover it without touching partitioning. */
   private def monoPartition(ord: Column): Column = shiftrightunsigned(ord, 33)
 
-  private def offsetsOf(counts: Array[(Long, Long)]): Map[Long, Long] = {
-    var acc = 0L
-    counts.sortBy(_._1).map { case (pid, n) =>
-      val off = acc; acc += n; pid -> off
-    }.toMap
-  }
-
-  /** Literal offset lookup; empty input degenerates to 0 (no rows anyway). */
-  private def offsetCol(offsets: Map[Long, Long]): Column =
-    if (offsets.isEmpty) lit(0L) else element_at(typedLit(offsets), col("_pid"))
-
-  /** Dense 0-based id in the order of an existing
-    * `monotonically_increasing_id()` column `ordCol` (i.e. input order for
-    * a freshly-read source). Works after filters (ids stay dense). */
-  def denseIdByMono(df: DataFrame, ordCol: String, idCol: String): DataFrame = {
-    val withPid = df.withColumn("_pid", monoPartition(col(ordCol)))
+  /** The shared tail: per-`_pid` counts (job 1), their exclusive prefix
+    * sums as a literal offset map, then offset + rank within `_pid` in
+    * `order` (job 2); `_pid` is dropped. An empty input has no offsets. */
+  private def denseIdWithin(withPid: DataFrame, order: Seq[Column],
+      idCol: String): DataFrame = {
     val counts = withPid.groupBy("_pid").agg(count(lit(1)).as("n"))
-      .collect().map(r => (r.getLong(0), r.getLong(1)))
-    val offsets = offsetsOf(counts)
-    val offCol = offsetCol(offsets)
-    val w = Window.partitionBy(col("_pid")).orderBy(col(ordCol))
+      .collect().map(r => (r.getLong(0), r.getLong(1))).sortBy(_._1)
+    val offsets = counts.map(_._1).zip(counts.scanLeft(0L)(_ + _._2)).toMap
+    val offCol =
+      if (offsets.isEmpty) lit(0L) else element_at(typedLit(offsets), col("_pid"))
+    val w = Window.partitionBy(col("_pid")).orderBy(order: _*)
     withPid
       .withColumn(idCol, (offCol + row_number().over(w) - 1).cast("long"))
       .drop("_pid")
   }
 
+  /** Dense 0-based id in the order of an existing
+    * `monotonically_increasing_id()` column `ordCol` (i.e. input order for
+    * a freshly-read source). Works after filters (ids stay dense). */
+  def denseIdByMono(df: DataFrame, ordCol: String, idCol: String): DataFrame =
+    denseIdWithin(df.withColumn("_pid", monoPartition(col(ordCol))),
+      Seq(col(ordCol)), idCol)
+
   /** Dense 0-based id in `sortCols` order for arbitrary input: range-
     * repartition on the sort key (north-rule `repartitionByRange` — range
     * boundaries from a sample, so partitions are balanced even on skewed
     * keys), then per-partition ranks + prefix-sum offsets. Two shuffles
-    * (range exchange + pid-hash for the window), both full-width parallel. */
-  /** @param materialize materialize the input first (default; see
+    * (range exchange + pid-hash for the window), both full-width parallel.
+    *
+    * @param materialize materialize the input first (default; see
     *   [[graft.io.Materialize]]). The range partitioner's sample pass, the
     *   counts job and the final job re-run the upstream plan 3× otherwise.
     *   Callers whose input is ALREADY materialized (or trivially
@@ -65,15 +63,7 @@ object Ids {
   def denseIdByOrder(df: DataFrame, sortCols: Seq[Column], idCol: String,
       materialize: Boolean = true): DataFrame = {
     val src = if (materialize) graft.io.Materialize(df) else df
-    val ranged = src.repartitionByRange(sortCols: _*)
-      .withColumn("_pid", spark_partition_id().cast("long"))
-    val counts = ranged.groupBy("_pid").agg(count(lit(1)).as("n"))
-      .collect().map(r => (r.getLong(0), r.getLong(1)))
-    val offsets = offsetsOf(counts)
-    val offCol = offsetCol(offsets)
-    val w = Window.partitionBy(col("_pid")).orderBy(sortCols: _*)
-    ranged
-      .withColumn(idCol, (offCol + row_number().over(w) - 1).cast("long"))
-      .drop("_pid")
+    denseIdWithin(src.repartitionByRange(sortCols: _*)
+      .withColumn("_pid", spark_partition_id().cast("long")), sortCols, idCol)
   }
 }

@@ -3,7 +3,6 @@ package graft.text
 import graft.functions.GraftFunctions
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.types._
 
 /**
  * Train/eval decontamination: flag training documents that share any
@@ -25,55 +24,10 @@ import org.apache.spark.sql.types._
  */
 object Decontaminate {
 
-  /** Space-joined word n-grams of a token array; empty below n tokens.
-    * (`sequence(1, k)` with k < 1 would DESCEND, hence the guard.)
-    *
-    * PERF: `toks` is bound ONCE via a lambda variable (`transform` over a
-    * 1-element array — same trick as Dedup.wordShingles). Passing a
-    * tokenizer expression directly would otherwise be re-evaluated by
-    * Catalyst at `size` and at EVERY slice element — measured 10.4 s vs
-    * 1.3 s for doc_repetition at the sf0.1 bench corpus. */
-  def wordNgrams(toks: Column, n: Int): Column = {
-    require(n >= 1, s"ngram order must be >= 1, got $n")
-    element_at(transform(array(toks), ts =>
-      when(size(ts) >= n,
-        transform(sequence(lit(1), size(ts) - (n - 1)),
-          i => array_join(slice(ts, i, lit(n)), " ")))
-        .otherwise(array().cast(ArrayType(StringType)))), 1)
-  }
-
-  /** DISTINCT space-joined n-grams of the tokenized text as one compact
-    * JVM function. Same gram strings as
-    * `array_distinct(wordNgrams(tokens(text), n))`: the tokenizer twin
-    * (GraftFunctions.tokensJvm), then sliding windows of n tokens
-    * mkString(" ") (toks carry no nulls — the tokenizer filters empties),
-    * first-occurrence dedup. WHY: Catalyst evaluates the nested
-    * transform/slice/array_join lambdas interpreted (CodegenFallback),
-    * allocating per gram element — the dominant per-row cost of the
-    * decontamination scan (guide §1.2 step 2). `wordNgrams` stays the
-    * declarative primitive for composition inside other lambdas
-    * (Repetition.signals binds it to a lambda variable, where a UDF
-    * cannot be applied). */
+  /** DISTINCT space-joined n-grams of the tokenized text, first
+    * occurrence first (GraftFunctions.wordGrams over tokensJvm). */
   private def distinctGramsUdf(n: Int) = udf { (s: String) =>
-    val arr = GraftFunctions.tokensJvm(s)
-    if (arr == null || arr.length < n) Array.empty[String]
-    else {
-      val out = new java.util.LinkedHashSet[String]()
-      var i = 0
-      val last = arr.length - n
-      while (i <= last) {
-        val sb = new java.lang.StringBuilder()
-        var j = 0
-        while (j < n) {
-          if (j > 0) sb.append(' ')
-          sb.append(arr(i + j))
-          j += 1
-        }
-        out.add(sb.toString)
-        i += 1
-      }
-      out.toArray(new Array[String](out.size))
-    }
+    GraftFunctions.wordGrams(GraftFunctions.tokensJvm(s), n).distinct
   }
 
   /** Distinct n-grams per doc as (doc_id, ngram) rows. */

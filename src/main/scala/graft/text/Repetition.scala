@@ -31,6 +31,13 @@ import org.apache.spark.sql.types._
  */
 object Repetition {
 
+  /** Every uni-, bi- and trigram of the tokenized text, duplicates kept;
+    * empty for null text or a doc with no tokens. */
+  private val gramsUdf = udf { (s: String) =>
+    val toks = GraftFunctions.tokensJvm(s)
+    (1 to 3).flatMap(GraftFunctions.wordGrams(toks, _))
+  }
+
   /** Per-doc repetition signal table — ONE row per input doc:
     * (doc_id, n_tokens, n_distinct_tokens, top1_count, top2_count,
     * top3_count). Docs shorter than n tokens report top<n>_count = 0;
@@ -40,15 +47,8 @@ object Repetition {
   def signals(df: DataFrame, docId: Column, text: Column): DataFrame = {
     // one row per (doc, gram occurrence), all three orders at once;
     // order is recoverable from the gram itself (spaces), so the
-    // exploded row stays a slim pair. The tokenizer is bound ONCE via
-    // the lambda variable (Catalyst would otherwise inline its regex
-    // chain into all three gram expressions — see wordNgrams PERF note).
-    val grams = df.select(docId.as("doc_id"),
-      explode(element_at(transform(array(GraftFunctions.tokens(text)),
-        ts => concat(
-          ts,
-          Decontaminate.wordNgrams(ts, 2),
-          Decontaminate.wordNgrams(ts, 3))), 1)).as("gram"))
+    // exploded row stays a slim pair
+    val grams = df.select(docId.as("doc_id"), explode(gramsUdf(text)).as("gram"))
     val counted = grams
       .groupBy(col("doc_id"), col("gram"))
       .agg(count(lit(1)).as("cnt"))

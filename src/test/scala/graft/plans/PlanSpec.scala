@@ -4,6 +4,7 @@ import graft.SparkSuite
 import graft.SparkEntry
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.execution.SparkPlan
+import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
 
 /**
  * Physical-plan assertions: the properties that make these operators
@@ -305,12 +306,36 @@ class PlanSpec extends SparkSuite {
     * calls, so a second reference re-runs the O(dim)/O(len) loop per row. */
   private def udfCallsByInput(df: org.apache.spark.sql.DataFrame)
       : Map[Set[Long], Int] =
-    df.queryExecution.optimizedPlan
+    udfCallsByInput(df.queryExecution.optimizedPlan)
+
+  private def udfCallsByInput(plan: LogicalPlan): Map[Set[Long], Int] =
+    plan
       .flatMap(_.expressions.flatMap(_.collect {
         case u: org.apache.spark.sql.catalyst.expressions.ScalaUDF => u
       }))
       .groupBy(_.references.map(_.exprId.id).toSet)
       .map { case (in, calls) => in -> calls.size }
+
+  /** Optimized plans of the actions `body` runs (materializations made
+    * while a query is built), then of the frame it returns. */
+  private def plansOf(body: => org.apache.spark.sql.DataFrame)
+      : Seq[LogicalPlan] = {
+    val seen = scala.collection.mutable.ArrayBuffer.empty[LogicalPlan]
+    val listener = new org.apache.spark.sql.util.QueryExecutionListener {
+      def onSuccess(name: String,
+          qe: org.apache.spark.sql.execution.QueryExecution, ns: Long): Unit =
+        seen.synchronized { seen += qe.optimizedPlan }
+      def onFailure(name: String,
+          qe: org.apache.spark.sql.execution.QueryExecution,
+          e: Exception): Unit = ()
+    }
+    spark.listenerManager.register(listener)
+    try {
+      val df = body
+      org.apache.spark.graft.ListenerBridge.drain(spark.sparkContext, 10000)
+      seen.synchronized(seen.toSeq) :+ df.queryExecution.optimizedPlan
+    } finally spark.listenerManager.unregister(listener)
+  }
 
   test("emb_ann_topk evaluates the cosine UDF once per row") {
     val calls = udfCallsByInput(SparkEntry.queries("emb_ann_topk")(spark, dir))
@@ -331,6 +356,23 @@ class PlanSpec extends SparkSuite {
     val calls = udfCallsByInput(
       SparkEntry.queries("doc_decontaminate")(spark, dir))
     assert(calls.size === 2 && calls.values.forall(_ == 1), calls)
+  }
+
+  test("doc_repetition evaluates the gram UDF once per row") {
+    val calls = udfCallsByInput(SparkEntry.queries("doc_repetition")(spark, dir))
+    assert(calls.values.toSeq === Seq(1), calls)
+  }
+
+  test("doc_minhash_neardup shingles each doc once, in one plan") {
+    // the shingles are materialized once; the fingerprint, the band keys
+    // and the verify joins read that column, never the text again
+    val plans = plansOf(SparkEntry.queries("doc_minhash_neardup")(spark, dir))
+    val calls = plans.map(udfCallsByInput)
+    assert(calls.forall(_.values.forall(_ == 1)), calls)
+    val text = plans.flatMap(_.collectLeaves().flatMap(_.output))
+      .filter(_.name == "text").map(_.exprId.id).toSet
+    val shingleCalls = calls.flatMap(_.keys.filter(_.exists(text)))
+    assert(shingleCalls.size === 1, calls)
   }
 
   test("IVF list ids and RHP signatures run once per row") {
@@ -384,7 +426,8 @@ class PlanSpec extends SparkSuite {
     Seq("doc_winnow_containment" -> 8, "doc_incremental_neardup" -> 11,
       "doc_lm_quality" -> 7, "doc_bm25_topk" -> 15, "events_asof" -> 3,
       "crawl_snapshot_diff" -> 6, "eval_threshold_sweep" -> 4,
-      "er_f1" -> 4).foreach {
+      "er_f1" -> 4, "doc_repetition" -> 3, "doc_decontaminate" -> 7,
+      "doc_minhash_neardup" -> 10, "doc_neardup_keepers" -> 14).foreach {
       case (q, budget) =>
         val jobs = warmJobs(q)
         assert(jobs <= budget, s"$q ran $jobs Spark jobs warm")
